@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 /** Optimization-round plan snapshotter: writes `.explain("formatted")` of
   * each named key to `plans/r17/<key>_<suffix>.txt` so before/after plan
-  * claims in OPTIMIZATION_r16.md are checkable without running Spark.
+  * claims in OPTIMIZATION_r17.md are checkable without running Spark.
   *
   * Args: sfDir suffix key...   (suffix is e.g. "before" or "after")
   *

@@ -1,34 +1,46 @@
 package graft.operators
 
-import org.apache.spark.ml.classification.{LogisticRegression, MultilayerPerceptronClassifier}
+import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's headline capability: a TRAINED churn classifier over the
   * behavioral feature set (MorphL trains churn models with Spark MLlib on
-  * engineered user features; SURVEY §1/Appendix B). This is the MLlib
-  * pipeline — VectorAssembler → LogisticRegression — run as a library
-  * component, with a deterministic hash train/test split and an AUC +
-  * confusion-matrix evaluation emitted as a one-row DataFrame.
+  * engineered user features; SURVEY §1/Appendix B). The logistic model is
+  * MLlib's `LogisticRegression` objective — mean log-loss plus
+  * λ/2·Σ(β_j·σ_j)² (L2 on standardized weights, σ_j the train fold's
+  * sample std, intercept unpenalized, a constant feature weighted 0) —
+  * minimized by an exact Newton (IRLS) fit, with a deterministic hash
+  * train/test split and an AUC + confusion-matrix evaluation emitted as a
+  * one-row DataFrame.
   *
-  * Determinism: no RNG anywhere — the split is a pure row hash (same
-  * md5 idiom as `sample_stratified_hash`), LR starts from the zero vector
-  * and L-BFGS on a fixed dataset is deterministic; outputs are truncated
-  * (trunc4/trunc6) so the last-ulp of floating-point aggregation order
-  * cannot flip a value. Gated by scalatest (two runs → identical row;
-  * AUC sanity bounds) rather than a DuckDB oracle: the training loop is
-  * not SQL-expressible. The downstream scoring of the FITTED weights is
-  * SQL-expressible and oracle-checked — see QRound5.chp_model_confusion.
+  * Determinism (fixed-point contract): every quantity the fit or the
+  * evaluation reads from the data is an INTEGER sum. Each row's terms —
+  * the moments x and x², then per Newton pass the log-loss, the gradient
+  * (p−y)·z and the Hessian p(1−p)·z·zᵀ — are computed per row with
+  * `StrictMath`, quantized to fixed-point longs and summed in 128 bits
+  * (`Sum128`, the order-free idiom of `Tables.sum128` and the integer
+  * PCA). The driver turns the exact totals into doubles the same way
+  * every time and solves the 5×5 Newton system itself; the evaluation
+  * counts test rows per exact score and derives the Mann–Whitney AUC in
+  * integer arithmetic. No step depends on row order, partition count or
+  * merge order, so the output row is bit-identical at any shuffle
+  * partitioning and on any repeat — HarnessSpec gates 1 vs 32
+  * partitions, Round5Spec gates the fit against MLlib as the reference.
+  * The AUC and weights are still truncated (t4/t6) for the output schema.
   *
-  * Scale shape (100 TB): the feature table is one shuffle on user_id
-  * (QPipeline.chpFeaturesLabel); each L-BFGS iteration is one
-  * treeAggregate over the training rows (gradient = model-state-sized,
-  * k+1 doubles); nothing ever collects row data to the driver. This is
-  * exactly how MLlib LR runs on a 1000-executor cluster.
+  * Job shape: one pass builds and persists the fold table and sums the
+  * train moments; each Newton iteration is ONE pass over that table
+  * (loss, gradient and Hessian together, for every candidate model at
+  * once); the evaluation is one more pass. Driver state is model-sized
+  * (21 sums per candidate) plus the distinct test scores.
   */
 object ChurnModel {
 
@@ -76,76 +88,331 @@ object ChurnModel {
     features.withColumn("label",
       when(col("days_inactive") >= 1, 1.0d).otherwise(0.0d))
 
-  /** The assembled 80/20 folds (train, test), memoized + PERSISTED per
-    * (session, sfDir) — OPTIMIZATION r17 (VERDICT r16 next #5 "cache the
-    * fold/feature matrices once per session"): `chp_train_auc` and
-    * `chp_train_cv` derive byte-identical folds from the same feature
-    * pipeline (same split hash, same coalesce(8), same assembler), yet
-    * each call re-ran the upstream feature shuffle and re-persisted its
-    * own copy. One shared materialized pair per session changes no bit
-    * of any fit: the data, its partitioning (coalesce(8) of the same
-    * plan), and therefore every treeAggregate order are unchanged —
-    * Round5Spec's two-run determinism gates run the full fit twice on
-    * these folds and must agree. Counted once here so the first fit
-    * never interleaves fold materialization with L-BFGS jobs. */
-  def folds(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    graft.Memo.memoAny(s, "chpfolds", d) {
-      val features = QPipeline.queries("chp_features_label")(s, d)
-      val fl = withSplit(label1d(features)).coalesce(8)
-      val va = new VectorAssembler()
-        .setInputCols(featureCols.toArray).setOutputCol("fv")
-      val train = va.transform(fl.filter(!col("is_test")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val test = va.transform(fl.filter(col("is_test")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      train.count(); test.count()
-      (train, test)
+  // Fixed-point scales (bits after the binary point) of the per-row terms.
+  // A term must stay below 2^(62 - bits) in magnitude or the pass throws
+  // (Sum128.fixed): |x| < 2^31 for features, |standardized x| < 2^15 for
+  // the Hessian and < 2^22 for the gradient, log-loss < 2^22.
+  private val xBits = 16
+  private val lossBits = 40
+  private val gradBits = 40
+  private val hessBits = 32
+
+  /** Newton passes per fit before it throws. */
+  private val maxPasses = 25
+
+  /** Convergence: the Newton decrement gᵀH⁻¹g — twice the predicted
+    * objective gap — at or below this. Far above the fixed-point noise
+    * floor (~1e-20 at λ = 1e-3), far below anything the t6 output shows. */
+  private val tol = 1e-16
+
+  /** The fold table and its train-fold summary. `table` is persisted, one
+    * row per user: (user_id, n_events, n_clicks, n_purchases, total_value,
+    * label, is_test), features as DOUBLE. `sigma` is the train fold's
+    * sample std per feature (0 for a constant one). */
+  final case class Folds(table: DataFrame, nTrain: Long, nPos: Long, nTest: Long,
+      sigma: Array[Double])
+
+  private val nFeat = featureCols.size
+  private val labelIdx = nFeat + 1
+  private val testIdx = nFeat + 2
+
+  private def rows(table: DataFrame): RDD[InternalRow] = table.queryExecution.toRdd
+
+  /** The fold table, memoized per (session, shuffle-partitions, sfDir) and
+    * built from the session's `chpfeat` feature memo — the same table the
+    * `chp_features_label` key emits, so the event aggregation runs once
+    * per input. Both `chp_train_auc` and `chp_train_cv` read it. */
+  def folds(s: SparkSession, d: String): Folds =
+    graft.Memo.memoAny(s, "chpfolds", d)(
+      buildFolds(QPipeline.chpFeaturesPersisted(s, d)))
+
+  /** Persists the fold table and sums the train fold's moments in the one
+    * job that materializes it. σ_j² = (n·Σq² − (Σq)²) / (n(n−1)) over the
+    * features quantized at 2^-16, exact until the final division. */
+  private[graft] def buildFolds(features: DataFrame): Folds = {
+    val table = withSplit(label1d(features))
+      .select(col("user_id") +: featureCols.map(c => col(c).cast(DoubleType).as(c)) :+
+        col("label") :+ col("is_test"): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val slots = 3 + 2 * nFeat // n_train, n_pos, n_test, then Σq, Σq² per feature
+    val qMax = 1L << (31 + xBits)
+    val m = rows(table).mapPartitions { it =>
+      val acc = new Sum128(slots)
+      it.foreach { r =>
+        if (r.getBoolean(testIdx)) acc.add(2, 1L)
+        else {
+          acc.add(0, 1L)
+          if (r.getDouble(labelIdx) == 1.0) acc.add(1, 1L)
+          var j = 0
+          while (j < nFeat) {
+            val q = Sum128.fixed(r.getDouble(j + 1), xBits)
+            if (math.abs(q) >= qMax) throw new ArithmeticException(
+              s"feature ${featureCols(j)} = ${r.getDouble(j + 1)} exceeds 2^31")
+            acc.add(3 + 2 * j, q)
+            acc.addProd(4 + 2 * j, q, q)
+            j += 1
+          }
+        }
+      }
+      Iterator(acc)
+    }.collect().foldLeft(new Sum128(slots))(_ merge _)
+    val n = m.big(0)
+    val sigma = Array.tabulate(nFeat) { j =>
+      val num = n * m.big(4 + 2 * j) - m.big(3 + 2 * j).pow(2)
+      if (n < 2 || num <= 0) 0.0
+      else Math.scalb(StrictMath.sqrt(
+        (BigDecimal(num) / BigDecimal(n * (n - 1))).toDouble), -xBits)
     }
+    Folds(table, n.toLong, m.big(1).toLong, m.big(2).toLong, sigma)
+  }
+
+  /** A fitted logistic model in original feature units: margin =
+    * intercept + Σ coef_j·x_j, predicted churn when the margin is > 0
+    * (MLlib's 0.5 probability threshold). */
+  final case class Model(reg: Double, coef: Array[Double], intercept: Double) {
+    def margin(x: Array[Double]): Double = {
+      var m = intercept
+      var j = 0
+      while (j < x.length) { m += coef(j) * x(j); j += 1 }
+      m
+    }
+  }
+
+  /** Objective, gradient and Hessian of one candidate at one point. */
+  private final case class Stats(obj: Double, grad: Array[Double], hess: Array[Array[Double]])
+
+  /** log(1 + e^m), without overflow. */
+  private def softplus(m: Double): Double =
+    math.max(m, 0.0) + StrictMath.log1p(StrictMath.exp(-math.abs(m)))
+
+  /** One pass over the train fold evaluating every candidate at its point
+    * θ = (weights of the `active` standardized features, intercept):
+    * the summed log-loss, gradient and upper-triangle Hessian per
+    * candidate, as exact fixed-point totals, then the mean plus the L2
+    * term on the driver. */
+  private def newtonPass(f: Folds, active: Array[Int], regs: Seq[Double],
+      thetas: Seq[Array[Double]]): Seq[Stats] = {
+    val dim = active.length + 1
+    val per = 1 + dim + dim * (dim + 1) / 2
+    val ts = thetas.toArray
+    val inv = active.map(j => 1.0 / f.sigma(j))
+    val sums = rows(f.table).mapPartitions { it =>
+      val acc = new Sum128(per * ts.length)
+      val z = new Array[Double](dim)
+      z(dim - 1) = 1.0
+      it.foreach { r =>
+        if (!r.getBoolean(testIdx)) {
+          var a = 0
+          while (a < active.length) { z(a) = r.getDouble(active(a) + 1) * inv(a); a += 1 }
+          val y = r.getDouble(labelIdx)
+          var t = 0
+          while (t < ts.length) {
+            val th = ts(t)
+            var m = 0.0
+            a = 0
+            while (a < dim) { m += th(a) * z(a); a += 1 }
+            val p = 1.0 / (1.0 + StrictMath.exp(-m))
+            val res = p - y
+            val h = p * (1.0 - p)
+            var o = t * per
+            acc.addFixed(o, softplus(m) - y * m, lossBits)
+            o += 1
+            a = 0
+            while (a < dim) { acc.addFixed(o + a, res * z(a), gradBits); a += 1 }
+            o += dim
+            a = 0
+            while (a < dim) {
+              var b = a
+              while (b < dim) { acc.addFixed(o, h * z(a) * z(b), hessBits); o += 1; b += 1 }
+              a += 1
+            }
+            t += 1
+          }
+        }
+      }
+      Iterator(acc)
+    }.collect().foldLeft(new Sum128(per * ts.length))(_ merge _)
+    val n = f.nTrain.toDouble
+    ts.indices.map { t =>
+      val th = ts(t)
+      val reg = regs(t)
+      val o = t * per
+      var pen = 0.0
+      for (a <- 0 until dim - 1) pen += th(a) * th(a)
+      val grad = Array.tabulate(dim) { a =>
+        sums.toDouble(o + 1 + a, gradBits) / n + (if (a < dim - 1) reg * th(a) else 0.0)
+      }
+      val hess = Array.ofDim[Double](dim, dim)
+      var i = o + 1 + dim
+      for (a <- 0 until dim; b <- a until dim) {
+        val v = sums.toDouble(i, hessBits) / n + (if (a == b && a < dim - 1) reg else 0.0)
+        hess(a)(b) = v; hess(b)(a) = v
+        i += 1
+      }
+      Stats(sums.toDouble(o, lossBits) / n + reg / 2 * pen, grad, hess)
+    }
+  }
+
+  /** The Newton step −H⁻¹g by Cholesky (H is positive definite: the L2
+    * term bounds the weight block, Σp(1−p) > 0 the intercept). */
+  private def newtonStep(h: Array[Array[Double]], g: Array[Double]): Array[Double] = {
+    val n = g.length
+    val l = Array.ofDim[Double](n, n)
+    for (i <- 0 until n; j <- 0 to i) {
+      var s = h(i)(j)
+      for (k <- 0 until j) s -= l(i)(k) * l(j)(k)
+      if (i == j) {
+        if (!(s > 0.0)) throw new IllegalStateException(
+          "churn model Hessian is not positive definite (saturated fit)")
+        l(i)(i) = math.sqrt(s)
+      } else l(i)(j) = s / l(j)(j)
+    }
+    val y = new Array[Double](n)
+    for (i <- 0 until n) {
+      var s = -g(i)
+      for (k <- 0 until i) s -= l(i)(k) * y(k)
+      y(i) = s / l(i)(i)
+    }
+    val x = new Array[Double](n)
+    for (i <- n - 1 to 0 by -1) {
+      var s = y(i)
+      for (k <- i + 1 until n) s -= l(k)(i) * x(k)
+      x(i) = s / l(i)(i)
+    }
+    x
+  }
+
+  /** Fits one model per regParam, all candidates sharing each pass.
+    *
+    * Newton from θ = 0 in standardized units: each pass evaluates every
+    * unfinished candidate at its trial point; a trial whose objective is
+    * not below the accepted one is halved back toward it (step-halving),
+    * otherwise it is accepted and the next step is solved from its
+    * gradient and Hessian. A candidate stops once its Newton decrement is
+    * ≤ `tol`, taking that last step. More than `maxPasses` passes throw.
+    *
+    * A one-class train fold follows MLlib's constant-label rule: zero
+    * weights and an infinite intercept (+∞ all churned, −∞ none), no
+    * pass. */
+  private[graft] def fit(f: Folds, regs: Seq[Double]): Seq[Model] =
+    if (f.nPos == 0 || f.nPos == f.nTrain) {
+      val b = if (f.nPos == 0) Double.NegativeInfinity else Double.PositiveInfinity
+      regs.map(Model(_, new Array[Double](nFeat), b))
+    } else {
+      val active = (0 until nFeat).filter(f.sigma(_) > 0.0).toArray
+      val dim = active.length + 1
+      def move(th: Array[Double], d: Array[Double], t: Double) =
+        Array.tabulate(dim)(a => th(a) + t * d(a))
+      val theta = Array.fill(regs.size)(new Array[Double](dim))
+      val obj = Array.fill(regs.size)(Double.PositiveInfinity)
+      val dir = Array.fill(regs.size)(new Array[Double](dim))
+      val stepLen = Array.fill(regs.size)(1.0)
+      val trial = Array.fill(regs.size)(new Array[Double](dim))
+      val done = Array.fill[Option[Array[Double]]](regs.size)(None)
+      var passes = 0
+      while (done.exists(_.isEmpty)) {
+        if (passes == maxPasses) throw new IllegalStateException(
+          s"churn model fit did not converge within $maxPasses Newton passes " +
+            s"(regParams ${regs.indices.filter(done(_).isEmpty).map(regs).mkString(", ")})")
+        val open = regs.indices.filter(done(_).isEmpty)
+        val stats = newtonPass(f, active, open.map(regs), open.map(trial))
+        passes += 1
+        open.zip(stats).foreach { case (i, st) =>
+          if (st.obj <= obj(i)) {
+            theta(i) = trial(i)
+            obj(i) = st.obj
+            val d = newtonStep(st.hess, st.grad)
+            val decrement = -st.grad.indices.map(a => st.grad(a) * d(a)).sum
+            if (decrement <= tol) done(i) = Some(move(theta(i), d, 1.0))
+            else { dir(i) = d; stepLen(i) = 1.0; trial(i) = move(theta(i), d, 1.0) }
+          } else {
+            stepLen(i) /= 2
+            trial(i) = move(theta(i), dir(i), stepLen(i))
+          }
+        }
+      }
+      regs.indices.map { i =>
+        val th = done(i).get
+        val coef = new Array[Double](nFeat)
+        active.indices.foreach(a => coef(active(a)) = th(a) / f.sigma(active(a)))
+        Model(regs(i), coef, th(dim - 1))
+      }
+    }
+
+  /** Test-fold evaluation of a fitted model: n_test and the confusion
+    * cells at margin > 0, and the AUC. */
+  final case class Eval(auc: Double, tp: Long, fp: Long, tn: Long, fn: Long) {
+    def nTest: Long = tp + fp + tn + fn
+  }
+
+  /** Evaluates every model in ONE pass over the test fold: each partition
+    * counts (positives, negatives) per (model, exact margin); the driver
+    * merges the counts and walks the scores in ascending order. The AUC is
+    * the Mann–Whitney statistic — tied scores count half — as the exact
+    * integer ratio 2U / 2PN, which is the trapezoidal ROC area
+    * `BinaryClassificationEvaluator(numBins = 0)` computes. A fold without
+    * positives scores 0, one without negatives 1, an empty one 0.5, as
+    * that evaluator does. */
+  private[graft] def evaluate(f: Folds, models: Seq[Model]): Seq[Eval] = {
+    val ms = models.toArray
+    val counts = rows(f.table).mapPartitions { it =>
+      val c = new java.util.HashMap[(Int, Double), Array[Long]]()
+      val x = new Array[Double](nFeat)
+      it.foreach { r =>
+        if (r.getBoolean(testIdx)) {
+          var j = 0
+          while (j < nFeat) { x(j) = r.getDouble(j + 1); j += 1 }
+          val cls = if (r.getDouble(labelIdx) == 1.0) 0 else 1
+          var i = 0
+          while (i < ms.length) {
+            // + 0.0 folds -0.0 into 0.0: one score, one group
+            c.computeIfAbsent((i, ms(i).margin(x) + 0.0), _ => new Array[Long](2))(cls) += 1
+            i += 1
+          }
+        }
+      }
+      import scala.jdk.CollectionConverters._
+      c.asScala.iterator.map { case ((i, s), pn) => (i, s, pn(0), pn(1)) }
+    }.collect()
+    ms.indices.map { i =>
+      var negBelow, pos, tp, fp = 0L
+      var u2 = BigInt(0)
+      counts.filter(_._1 == i).sortBy(_._2)(Ordering.Double.TotalOrdering)
+        .foreach { case (_, s, p, n) =>
+          u2 += BigInt(p) * (2 * negBelow + n)
+          negBelow += n
+          pos += p
+          if (s > 0.0) { tp += p; fp += n }
+        }
+      val neg = negBelow
+      val auc =
+        if (pos == 0 && neg == 0) 0.5
+        else if (pos == 0) 0.0
+        else if (neg == 0) 1.0
+        else (BigDecimal(u2) / BigDecimal(BigInt(pos) * neg * 2)).toDouble
+      Eval(auc, tp, fp, neg - fp, pos - tp)
+    }
+  }
+
+  private def t4(x: Double): Double = math.floor(x * 1e4) / 1e4
+  private def t6(x: Double): Double = math.floor(x * 1e6) / 1e6
 
   /** Hyperparameter sweep — the CrossValidator capability spelled as an
     * explicit deterministic loop (MLlib's CrossValidator adds RNG fold
     * assignment; the hash split keeps folds reproducible): one LR per
     * regParam on the same 80/20 split, one output row per candidate with
-    * its AUC and coefficient L2 norm. The winner is whatever the reader
-    * sorts to the top — the query emits the full sweep, which is the
-    * auditable artifact a model registry stores. */
+    * its AUC and coefficient L2 norm. The three candidates share every
+    * Newton pass and the one evaluation pass. The winner is whatever the
+    * reader sorts to the top — the query emits the full sweep, which is
+    * the auditable artifact a model registry stores. */
   def sweep(s: SparkSession, d: String): DataFrame = {
-    val (train, test) = folds(s, d)
-    val ev = new BinaryClassificationEvaluator()
-      .setLabelCol("label").setRawPredictionCol("rawPrediction")
-      .setMetricName("areaUnderROC")
-    def t4(x: Double): Double = math.floor(x * 1e4) / 1e4
-    // the shared folds are already materialized; the three grid points
-    // fit CONCURRENTLY: each L-BFGS iteration is one treeAggregate job
-    // that leaves the cluster idle while the driver updates its tiny
-    // state — independent fits interleave those jobs (the same pattern
-    // as the parallel PQ codebooks). Results are keyed by reg, so
-    // completion order cannot reorder the output.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val rows = Await.result(
-      Future.sequence(Seq(1e-3, 1e-2, 1e-1).map { reg => Future {
-        val lr = new LogisticRegression()
-          .setFeaturesCol("fv").setLabelCol("label")
-          .setMaxIter(15).setTol(1e-8)
-          .setRegParam(reg).setElasticNetParam(0.0)
-          .setStandardization(true).setFamily("binomial")
-        // drop the training summary before transform: the summary holds
-        // the SparkSession (ObservationManager is not serializable), and
-        // the prediction UDF's closure captures the whole model — with a
-        // summary attached the scoring job dies with Task-not-serializable
-        // when other session state is live (caught by the full-suite
-        // PlanSpec audit)
-        val model = dropSummary(lr.fit(train))
-        val auc = ev.evaluate(model.transform(test))
-        val l2 = math.sqrt(model.coefficients.toArray.map(w => w * w).sum)
-        (reg, t4(auc), t4(l2))
-      }}),
-      Duration.Inf)
+    val f = folds(s, d)
+    val models = fit(f, Seq(1e-3, 1e-2, 1e-1))
+    val rows = models.zip(evaluate(f, models)).map { case (m, e) =>
+      (m.reg, t4(e.auc), t4(math.sqrt(m.coef.map(w => w * w).sum)))
+    }
     import s.implicits._
     rows.toDF("reg_param", "auc", "coef_l2")
-      .orderBy("reg_param")
   }
 
   /** Train on the 80% fold, evaluate on the 20% fold; one output row:
@@ -153,44 +420,13 @@ object ChurnModel {
     * coefficients are part of the output so the frozen deployed weights
     * in QRound5 are reproducible from the declared query alone. */
   def trainEval(s: SparkSession, d: String): DataFrame = {
-    // folds are the session-shared memoized pair (see `folds`): the
-    // 8-partition right-sizing, the persist, and the materializing
-    // counts all live there — the upstream feature shuffle runs once
-    // per session instead of once per trainer call.
-    val (train, test) = folds(s, d)
-    val lr = new LogisticRegression()
-      .setFeaturesCol("fv").setLabelCol("label")
-      .setMaxIter(25).setTol(1e-8)
-      .setRegParam(1e-2).setElasticNetParam(0.0)
-      .setStandardization(true)
-      // binomial even if a tiny fold degenerates to one class (family
-      // "auto" would fit a 1-column multinomial and break the evaluator)
-      .setFamily("binomial")
-    // summary dropped before transform — see trainCv's serialization note
-    val model = dropSummary(lr.fit(train))
-    val pred = model.transform(test)
-    val auc = new BinaryClassificationEvaluator()
-      .setLabelCol("label").setRawPredictionCol("rawPrediction")
-      .setMetricName("areaUnderROC")
-      .evaluate(pred)
-    val Array(cm) = pred.agg(
-      sum(when(col("label") === 1.0 && col("prediction") === 1.0, 1L)
-        .otherwise(0L)).as("tp"),
-      sum(when(col("label") === 0.0 && col("prediction") === 1.0, 1L)
-        .otherwise(0L)).as("fp"),
-      sum(when(col("label") === 0.0 && col("prediction") === 0.0, 1L)
-        .otherwise(0L)).as("tn"),
-      sum(when(col("label") === 1.0 && col("prediction") === 0.0, 1L)
-        .otherwise(0L)).as("fn")).collect()
-    val nTrain = train.count() // cached fold: a metadata-cheap job
-    // the confusion cells partition the test fold — no second count job
-    val nTest = cm.getLong(0) + cm.getLong(1) + cm.getLong(2) + cm.getLong(3)
-    def t6(x: Double): Double = math.floor(x * 1e6) / 1e6
-    val w = model.coefficients.toArray
+    val f = folds(s, d)
+    val m = fit(f, Seq(1e-2)).head
+    val e = evaluate(f, Seq(m)).head
+    val w = m.coef
     import s.implicits._
-    Seq((nTrain, nTest, math.floor(auc * 1e4) / 1e4,
-        cm.getLong(0), cm.getLong(1), cm.getLong(2), cm.getLong(3),
-        t6(w(0)), t6(w(1)), t6(w(2)), t6(w(3)), t6(model.intercept)))
+    Seq((f.nTrain, e.nTest, t4(e.auc), e.tp, e.fp, e.tn, e.fn,
+        t6(w(0)), t6(w(1)), t6(w(2)), t6(w(3)), t6(m.intercept)))
       .toDF("n_train", "n_test", "auc", "tp", "fp", "tn", "fn",
         "w_n_events", "w_n_clicks", "w_n_purchases", "w_total_value",
         "intercept")
@@ -270,7 +506,7 @@ object ChurnModel {
       .setLayers(layers).setSolver("l-bfgs")
       .setMaxIter(35).setTol(1e-8)
       .setInitialWeights(init)
-    // summary dropped before transform — see trainCv's serialization note
+    // summary dropped before transform — see dropSummary
     val model = dropSummary(mlp.fit(train))
     val pred = model.transform(test)
     val ev = new BinaryClassificationEvaluator()
@@ -290,12 +526,10 @@ object ChurnModel {
     val nTrain = train.count()
     val nTest = cm.getLong(0) + cm.getLong(1) + cm.getLong(2) + cm.getLong(3)
     rawTrain.unpersist(); train.unpersist(); test.unpersist()
-    def t6(x: Double): Double = math.floor(x * 1e6) / 1e6
     val w = model.weights.toArray
     val wL2 = math.sqrt(w.map(x => x * x).sum)
     import s.implicits._
-    Seq((nTrain, nTest, math.floor(aucTrain * 1e4) / 1e4,
-        math.floor(auc * 1e4) / 1e4,
+    Seq((nTrain, nTest, t4(aucTrain), t4(auc),
         cm.getLong(0), cm.getLong(1), cm.getLong(2), cm.getLong(3),
         w.length.toLong, t6(wL2), t6(w(0)), t6(w(nW - 1))))
       .toDF("n_train", "n_test", "auc_train", "auc_test", "tp", "fp",

@@ -149,9 +149,11 @@ object QPipeline extends QueryPack {
        |FROM s ORDER BY vec_id""".stripMargin
 
   /** The churn feature table, memoized + lineage-truncated per corpus:
-    * user-bounded model state shared by the RFM/reason-code keys (each
-    * previously re-ran the events feature pass — and its orderBy — per
-    * call, or per consumer branch via a per-call localCheckpoint). */
+    * user-bounded model state. It is what the `chp_features_label` key
+    * emits, and every other feature consumer reads it too (the scored
+    * table, segments, frozen-model confusion, calibration, the RFM and
+    * reason-code keys, and the churn model's fold table), so the events
+    * aggregation runs once per input. */
   private[operators] def chpFeaturesPersisted(s: SparkSession, d: String)
       : DataFrame =
     graft.Memo.memo(s, "chpfeat", d)(
@@ -169,7 +171,7 @@ object QPipeline extends QueryPack {
     // bounded histogram pass and the final join), and both scoring keys
     // plus the serving stage share it — one row per user, cache-friendly
     graft.Memo.memo(s, "chpscored", d) {
-      val f = chpFeaturesLabel(s, d)
+      val f = chpFeaturesPersisted(s, d)
       val raw = ((lit(0.02) * col("n_clicks") + lit(0.1) * col("n_purchases"))
         + lit(0.0002) * col("total_value")) - lit(0.2) * col("days_inactive")
       f.select(col("user_id"), col("n_purchases"), col("total_value"),
@@ -267,7 +269,7 @@ object QPipeline extends QueryPack {
        |FROM dc GROUP BY decile ORDER BY decile""".stripMargin
 
   val queries: Map[String, QFn] = Map(
-    "chp_features_label" -> chpFeaturesLabel _,
+    "chp_features_label" -> chpFeaturesPersisted _,
     "chp_score_linear"   -> chpScoreLinear _,
     "chp_eval_lift"      -> chpEvalLift _,
     "text_tfidf"         -> textTfidf _,

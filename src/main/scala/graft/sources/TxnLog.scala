@@ -657,7 +657,8 @@ object TxnLog {
   }
 
   /** Per-file stats tokens from the parquet footers alone; None when any
-    * footer lacks a usable exact statistic (the caller then scans). */
+    * footer cannot be read or lacks a usable exact statistic (the caller
+    * then scans). */
   private def footerStatsLines(s: SparkSession, table: String,
       newFiles: Seq[String], statsCols: Seq[String]): Option[Seq[String]] = {
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -701,12 +702,17 @@ object TxnLog {
       }
     }
 
-    def fileLine(rel: String): Option[String] = {
-      val rd = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(table, rel), conf))
-      val blocks =
+    // an unreadable footer is an unusable one: None, so the caller scans
+    def footerBlocks(rel: String)
+        : Option[Seq[org.apache.parquet.hadoop.metadata.BlockMetaData]] =
+      scala.util.Try {
+        val rd = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(table, rel), conf))
         try rd.getFooter.getBlocks.asScala.toSeq
         finally rd.close()
+      }.toOption
+
+    def fileLine(rel: String): Option[String] = footerBlocks(rel).flatMap { blocks =>
       val rows = blocks.map(_.getRowCount).sum
       if (rows == 0L) Some(rel) // empty file: bare line, always kept
       else {

@@ -4,7 +4,8 @@ package graft
   * be independent of shuffle.partitions, or the driver's hash compare (and
   * a real cluster at any size) can silently diverge from local runs. Runs
   * the determinism-sensitive keys at 1 and 32 shuffle partitions on
-  * sf0.001 and requires exact row-for-row equality. */
+  * sf0.001 (the churn-model keys on sf0.01) and requires exact
+  * row-for-row equality. */
 class HarnessSpec extends SparkSpec {
 
   // keys whose plans contain the determinism-sensitive machinery: decimal
@@ -26,9 +27,7 @@ class HarnessSpec extends SparkSpec {
     "stream_chained_agg", "sample_stratified_hash", "join_interval_bucket",
     "upsert_scd2", "emb_norm_hist", "sim_knn_join", "pipeline_corpus_clean",
     // round 5: histogram-broadcast decile, partitioned-layout roundtrip,
-    // frozen-weight model scoring (chp_train_auc is excluded: L-BFGS
-    // gradient treeAggregate order is partition-dependent in the last ulp
-    // by design — its determinism gate is same-session re-run, Round5Spec)
+    // frozen-weight model scoring
     "chp_score_linear", "chp_eval_lift", "scan_partition_prune",
     "chp_model_confusion", "chp_user_segments", "join_dpp_prune",
     "upsert_cdc_merge", "scan_zstd_roundtrip", "text_chunk_windows",
@@ -129,15 +128,21 @@ class HarnessSpec extends SparkSpec {
     assert(built.get() === 1, "post-race hit rebuilt the memoized entry")
   }
 
-  probeKeys.foreach { key =>
-    test(s"$key: identical at shuffle.partitions 1 and 32") {
-      def run(parts: Int): Seq[String] = {
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        try SparkEntry.queries(key)(spark, sf).collect().map(_.toString).toSeq
-        finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+  // the trained churn model (fixed-point Newton fit + integer AUC), at
+  // sf0.01: sf0.001's test fold holds 3 users
+  private val modelKeys = Seq("chp_train_auc", "chp_train_cv")
+  private val sfModel = s"${new java.io.File(sf).getParent}/sf0.01"
+
+  (probeKeys.map(_ -> sf) ++ modelKeys.map(_ -> sfModel)).foreach {
+    case (key, dir) =>
+      test(s"$key: identical at shuffle.partitions 1 and 32") {
+        def run(parts: Int): Seq[String] = {
+          spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+          try SparkEntry.queries(key)(spark, dir).collect().map(_.toString).toSeq
+          finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+        }
+        assert(run(1) === run(32), s"$key depends on partition count")
       }
-      assert(run(1) === run(32), s"$key depends on partition count")
-    }
   }
 
   // Memoization-immune probes (ADVICE r14): the declared-key probes above

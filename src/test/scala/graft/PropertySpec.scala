@@ -147,4 +147,22 @@ object DecoderProps extends Properties("graft.pure") {
       Prop(sig(ts) == sig(scala.util.Random.shuffle(ts)))
     }
   }
+
+  property("sum128: any split and merge order == the exact BigInt sum") = {
+    val vals = Gen.listOf(Gen.oneOf(Gen.long, Gen.chooseNum(-1000L, 1000L)))
+    forAll(vals, Gen.chooseNum(1, 7)) { (xs, parts) =>
+      val chunks = xs.zipWithIndex.groupBy(_._2 % parts).values.map(_.map(_._1)).toSeq
+      def total(cs: Seq[List[Long]]) = cs.map { c =>
+        val a = new operators.Sum128(2)
+        c.foreach { v => a.add(0, v); a.addProd(1, v >> 8, -(v >> 9)) }
+        a
+      }.foldLeft(new operators.Sum128(2))(_ merge _)
+      val fwd = total(chunks)
+      val rev = total(chunks.reverse.map(_.reverse))
+      val want = xs.map(BigInt(_)).sum
+      val want2 = xs.map(v => BigInt(v >> 8) * -(v >> 9)).sum
+      Prop(fwd.big(0) == want && rev.big(0) == want &&
+        fwd.big(1) == want2 && rev.big(1) == want2)
+    }
+  }
 }

@@ -34,17 +34,18 @@ class Round17OptSpec extends SparkSpec {
     } finally spark.conf.set("graft.txnlog.footerStats", "true")
   }
 
+  private def toks(d: String): Seq[String] = {
+    val v = TxnLog.latestVersion(spark, d).get
+    // strip the uuid'd path; keep each line's ordered token suffix
+    TxnLog.snapshotLines(spark, d, v)
+      .map(ln => ln.substring(ln.indexOf('\t') + 1)).sorted
+  }
+
   test("footer stats tokens byte-identical to the scan-pass tokens") {
     val base = graft.Staging.trackedTempDir("graft_r17stats_")
     val dA = s"$base/foot"; val dB = s"$base/scan"
     stage(dA, footer = true)
     stage(dB, footer = false)
-    def toks(d: String): Seq[String] = {
-      val v = TxnLog.latestVersion(spark, d).get
-      // strip the uuid'd path; keep each line's ordered token suffix
-      TxnLog.snapshotLines(spark, d, v)
-        .map(ln => ln.substring(ln.indexOf('\t') + 1)).sorted
-    }
     assert(toks(dA) == toks(dB))
     assert(toks(dA).exists(_.contains("stats:an=::")),
       "all-null column must emit empty min/max")
@@ -65,6 +66,32 @@ class Round17OptSpec extends SparkSpec {
     val a = TxnLog.read(spark, dA).orderBy("k").collect().toSeq
     val b = TxnLog.read(spark, dB).orderBy("k").collect().toSeq
     assert(a == b)
+  }
+
+  test("an unreadable footer falls back to the scan pass, same stats") {
+    val base = graft.Staging.trackedTempDir("graft_r17stats_")
+    val dA = s"$base/foot"; val dB = s"$base/fail"
+    stage(dA, footer = true)
+    // the footer fold opens files through the context's Hadoop conf;
+    // Spark's own writes and the fallback scan use the session's, which
+    // keeps the plain local file system
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val prev = keys.map(k => k -> Option(hc.get(k)))
+    val opened = FooterFailFS.failures.get
+    try {
+      hc.set("fs.file.impl", classOf[FooterFailFS].getName)
+      hc.set("fs.file.impl.disable.cache", "true")
+      spark.conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+      stage(dB, footer = true)
+    } finally {
+      prev.foreach { case (k, v) => v.fold(hc.unset(k))(hc.set(k, _)) }
+      spark.conf.unset("fs.file.impl")
+    }
+    assert(FooterFailFS.failures.get > opened, "no footer read failed")
+    assert(toks(dB) == toks(dA))
+    assert(TxnLog.read(spark, dB).orderBy("k").collect().toSeq ==
+      TxnLog.read(spark, dA).orderBy("k").collect().toSeq)
   }
 
   /** 2. Size-gated state broadcasts (PageRank.stateHint): the iterative
@@ -133,4 +160,19 @@ class Round17OptSpec extends SparkSpec {
       .orderBy("da", "db").collect().map(_.toString).toSeq
     assert(kernel.nonEmpty && kernel == legacy)
   }
+}
+
+/** A local file system whose every parquet `open` fails: an unreadable
+  * footer for TxnLog's footer-stats fold. */
+class FooterFailFS extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream =
+    if (f.getName.endsWith(".parquet")) {
+      FooterFailFS.failures.incrementAndGet()
+      throw new java.io.IOException(s"unreadable footer: $f")
+    } else super.open(f, bufferSize)
+}
+
+object FooterFailFS {
+  val failures = new java.util.concurrent.atomic.AtomicInteger()
 }

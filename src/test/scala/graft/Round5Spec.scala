@@ -13,7 +13,8 @@ class Round5Spec extends SparkSpec {
   test("chp_train_auc: deterministic — two runs emit the identical row") {
     // drive the BUILD directly: the declared key memoizes its result per
     // session (model-state discipline, r17), so only the underlying fit
-    // proves training determinism
+    // proves training determinism (both fits read the memoized fold
+    // table; the fold build itself is gated below)
     val a = operators.ChurnModel.trainEval(spark, sfTrain)
       .collect().map(_.toString).toSeq
     val b = operators.ChurnModel.trainEval(spark, sfTrain)
@@ -23,6 +24,108 @@ class Round5Spec extends SparkSpec {
     val c = SparkEntry.queries("chp_train_auc")(spark, sfTrain)
       .collect().map(_.toString).toSeq
     assert(a === c, "memoized key diverges from the build")
+  }
+
+  test("chp fold table: built twice under 1 and 32 partitions, identical") {
+    // Memo keys on the partition setting, so each call rebuilds the
+    // feature aggregate and the fold table under its own partitioning
+    def build(parts: Int) = {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      try operators.ChurnModel.folds(spark, sfTrain)
+      finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
+    val (a, b) = (build(1), build(32))
+    assert(!(a eq b), "the second setting reused the first fold table")
+    def content(f: operators.ChurnModel.Folds) =
+      (f.table.collect().map(_.toString).sorted.toSeq,
+        f.nTrain, f.nPos, f.nTest, f.sigma.toSeq)
+    assert(content(a) === content(b))
+    assert(a.nTrain + a.nTest === 150L && a.nPos > 0 && a.nPos < a.nTrain)
+  }
+
+  // MLlib's LogisticRegression stays the reference the exact fit answers to
+  Seq("sf0.01", "sf0.1").foreach { name =>
+    test(s"chp_train_auc fit vs MLlib LogisticRegression on $name") {
+      import org.apache.spark.ml.classification.LogisticRegression
+      import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
+      import org.apache.spark.ml.feature.VectorAssembler
+      import operators.ChurnModel
+      val f = ChurnModel.folds(spark, s"${new java.io.File(sf).getParent}/$name")
+      val reg = 1e-2
+      val m = ChurnModel.fit(f, Seq(reg)).head
+      val cols = ChurnModel.featureCols
+      val train = f.table.filter(!col("is_test"))
+      val ref = new LogisticRegression()
+        .setFeaturesCol("fv").setLabelCol("label")
+        .setMaxIter(25).setTol(1e-8)
+        .setRegParam(reg).setElasticNetParam(0.0)
+        .setStandardization(true).setFamily("binomial")
+        .fit(new VectorAssembler().setInputCols(cols.toArray).setOutputCol("fv")
+          .transform(train))
+      def xy(df: org.apache.spark.sql.DataFrame) =
+        df.select((cols :+ "label").map(col): _*).collect()
+          .map(r => (Array.tabulate(cols.size)(r.getDouble), r.getDouble(cols.size)))
+      val rows = xy(train)
+      val n = rows.length
+      // sample std, two-pass, independent of the fit's fixed-point moments
+      val sd = Array.tabulate(cols.size) { j =>
+        val mu = rows.map(_._1(j)).sum / n
+        math.sqrt(rows.map(r => (r._1(j) - mu) * (r._1(j) - mu)).sum / (n - 1))
+      }
+      sd.indices.foreach(j => assert(math.abs(f.sigma(j) - sd(j)) <= 1e-9 * sd(j)))
+      // MLlib's objective; per-row losses summed exactly
+      def objective(w: Array[Double], b: Double): Double = {
+        val loss = rows.map { case (x, y) =>
+          val z = b + x.indices.map(j => w(j) * x(j)).sum
+          BigDecimal(math.max(z, 0.0) + math.log1p(math.exp(-math.abs(z))) - y * z)
+        }.sum
+        (loss / n).toDouble + reg / 2 * w.indices.map(j => w(j) * sd(j) * w(j) * sd(j)).sum
+      }
+      val ours = objective(m.coef, m.intercept)
+      val theirs = objective(ref.coefficients.toArray, ref.intercept)
+      info(f"objective: exact fit $ours%.17g, MLlib $theirs%.17g")
+      assert(ours <= theirs, s"exact fit objective $ours above MLlib's $theirs")
+      val got = m.coef :+ m.intercept
+      val want = ref.coefficients.toArray :+ ref.intercept
+      got.zip(want).foreach { case (a, b) =>
+        assert(math.abs(a - b) <= 1e-3 * (1 + math.abs(b)),
+          s"weights ${got.toSeq} vs MLlib ${want.toSeq}")
+      }
+      // the integer Mann-Whitney AUC == the evaluator's exact ROC area
+      import spark.implicits._
+      val scored = xy(f.table.filter(col("is_test")))
+        .map { case (x, y) => (m.margin(x), y) }.toSeq.toDF("rawPrediction", "label")
+      val auc = new BinaryClassificationEvaluator().setNumBins(0)
+        .setMetricName("areaUnderROC").evaluate(scored)
+      val e = ChurnModel.evaluate(f, Seq(m)).head
+      assert(math.abs(e.auc - auc) <= 1e-9, s"AUC ${e.auc} vs evaluator $auc")
+      assert(e.nTest === f.nTest)
+    }
+  }
+
+  test("chp churn fit: a one-class fold does not throw") {
+    import operators.ChurnModel
+    import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
+    import spark.implicits._
+    for (inactive <- Seq(0, 3)) { // label 0 for every user, then 1
+      val feats = spark.range(0, 60).select(col("id").as("user_id"),
+        (col("id") % 7 + 1).as("n_events"), (col("id") % 3).as("n_clicks"),
+        (col("id") % 2).as("n_purchases"), (col("id") * 0.25).as("total_value"),
+        lit(inactive).as("days_inactive"))
+      val f = ChurnModel.buildFolds(feats)
+      try {
+        val m = ChurnModel.fit(f, Seq(1e-2)).head
+        assert(m.coef.forall(_ == 0.0))
+        assert(m.intercept === (if (inactive > 0) Double.PositiveInfinity
+          else Double.NegativeInfinity))
+        val e = ChurnModel.evaluate(f, Seq(m)).head
+        assert(e.nTest === f.nTest && f.nTest > 0)
+        val scored = f.table.filter(col("is_test")).select("label").collect()
+          .map(r => (m.intercept, r.getDouble(0))).toSeq.toDF("rawPrediction", "label")
+        val auc = new BinaryClassificationEvaluator().setNumBins(0).evaluate(scored)
+        assert(e.auc === auc, s"one-class AUC ${e.auc} vs evaluator $auc")
+      } finally f.table.unpersist()
+    }
   }
 
   test("chp_train_auc: AUC bounded, confusion conserves the test fold") {
