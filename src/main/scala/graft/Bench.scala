@@ -72,7 +72,6 @@ object Bench {
     // start, wait (up to 3 min, re-checking every 15 s) for it to settle
     // before measuring; if it never does, proceed but emit load_warn so the
     // artifact itself says "cold is not adjudicable, use warm".
-    val loadFirst = loadAvg
     var settleWait = 0
     while (loadAvg > 2.0 && settleWait < 180) {
       System.err.println(s"[bench] load ${f3s(loadAvg)} > 2; waiting 15s for quiet machine")

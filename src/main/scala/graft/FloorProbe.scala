@@ -77,12 +77,7 @@ object FloorProbe {
         (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
           org.apache.spark.sql.catalyst.expressions.UnscaledValue(es.head),
         "scala_udf")
-    def unscaled(c: Column): Column = {
-      val tmp = c.alias("uv_in")
-      // route through expr() on a selected alias is awkward; instead use
-      // call_function which takes Columns directly
-      call_function("unscaled_val", c)
-    }
+    def unscaled(c: Column): Column = call_function("unscaled_val", c)
     // B: same quantization (decimal cast per row) but LONG sum buffers
     timed("gb_unscaled_longsum") {
       li().groupBy("l_returnflag", "l_linestatus")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.util.concurrent.ConcurrentHashMap
 
 /** Session-scoped memo for expensive persisted intermediates (the shingle
@@ -18,15 +18,17 @@ import java.util.concurrent.ConcurrentHashMap
   *    reruns a key at 1 and 32 partitions genuinely re-executes the
   *    memoized pipeline under each setting instead of comparing a cached
   *    result with itself.
-  *  - entries whose owning session has been stopped are evicted on the
-  *    next access, so the static map cannot pin a stopped session's
-  *    state for the JVM lifetime. No explicit unpersist is needed on
-  *    that path: a stopped SparkContext has already torn down its block
-  *    manager, so the cached blocks are gone with it.
+  *  - entries whose owning session has been stopped are evicted, with
+  *    their build locks, on the next access, so the static maps cannot
+  *    pin a stopped session's state for the JVM lifetime. No explicit
+  *    unpersist is needed on that path: a stopped SparkContext has
+  *    already torn down its block manager, so the cached blocks are gone
+  *    with it.
   */
 object Memo {
-  private final case class Entry(session: SparkSession, df: DataFrame)
-  private val cache = new ConcurrentHashMap[(String, String, String, String), Entry]()
+  private type Key = (String, String, String, String)
+  private final case class Entry(session: SparkSession, value: Any)
+  private val cache = new ConcurrentHashMap[Key, Entry]()
 
   // identity-keyed (WeakHashMap uses ==/eq on identity for sessions, which
   // don't override equals) unique id per live session; weak keys mean this
@@ -37,11 +39,20 @@ object Memo {
     ids.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
 
   // per-key build locks: a plain object map, NEVER built inside a cache
-  // computeIfAbsent (so no recursive-update hazard); entries are tiny and
-  // keyed identically to `cache`, so they age out with session eviction
-  private val locks = new ConcurrentHashMap[(String, String, String, String), Object]()
+  // computeIfAbsent (so no recursive-update hazard). Each lock remembers
+  // its session, so the eviction sweep drops it with the session's entries
+  // (and also when the key's build threw and left no entry).
+  private final class Lock(val session: SparkSession)
+  private val locks = new ConcurrentHashMap[Key, Lock]()
 
-  /** Build-once per (session, shuffle-partitions, tag, sfDir).
+  private def evictStopped(): Unit = {
+    cache.values().removeIf(_.session.sparkContext.isStopped)
+    locks.values().removeIf(_.session.sparkContext.isStopped)
+  }
+
+  /** Build-once per (session, shuffle-partitions, tag, sfDir), for a
+    * DataFrame or any other model state (e.g. the BPE fit returns a merge
+    * table AND a tokenized-state DataFrame).
     *
     * NOT computeIfAbsent on the cache map: memoized builds nest (the
     * CC-labels build calls the LSH-pairs build calls the shingle build,
@@ -56,35 +67,39 @@ object Memo {
     * builds, everyone else blocks and reuses. Nested builds take DIFFERENT
     * locks, and the dependency graph is acyclic (CC → LSH pairs →
     * shingles), so lock nesting cannot deadlock. */
-  def memo(s: SparkSession, tag: String, d: String)(build: => DataFrame): DataFrame = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getValue.session.sparkContext.isStopped) it.remove()
-    }
+  def memo[T](s: SparkSession, tag: String, d: String)(build: => T): T = {
+    evictStopped()
     val parts = s.conf.get("spark.sql.shuffle.partitions", "")
     val key = (uuid(s), parts, tag, d)
     val existing = cache.get(key)
-    if (existing != null) existing.df
+    if (existing != null) existing.value.asInstanceOf[T]
     else {
-      val lock = locks.computeIfAbsent(key, _ => new Object)
+      val lock = locks.computeIfAbsent(key, _ => new Lock(s))
       lock.synchronized {
         val again = cache.get(key)
-        if (again != null) again.df
+        if (again != null) again.value.asInstanceOf[T]
         else {
           val d0 = buildDepth.get(); buildDepth.set(d0 + 1)
           val t0 = System.nanoTime()
           val built =
-            try Entry(s, build)
+            try build
             finally buildDepth.set(d0)
           // only the OUTERMOST build records — a nested build's time is
           // already inside its parent's, and double-counting would make
           // Bench's attributed totals exceed the wall clock
           if (d0 == 0) recordBuild(tag, d, (System.nanoTime() - t0) / 1e9)
-          cache.put(key, built)
-          built.df
+          cache.put(key, Entry(s, built))
+          built
         }
       }
     }
+  }
+
+  /** (cache entries, build locks) held for `s`, for the eviction test. */
+  private[graft] def heldFor(s: SparkSession): (Int, Int) = {
+    val id = uuid(s)
+    (cache.keySet().stream().filter(_._1 == id).count().toInt,
+      locks.keySet().stream().filter(_._1 == id).count().toInt)
   }
 
   /** One entry per completed memo BUILD this JVM: (tag, sfDir, seconds).
@@ -118,36 +133,4 @@ object Memo {
   }
 
   def buildLogSize: Int = buildLog.size()
-
-  private val anyCache =
-    new ConcurrentHashMap[(String, String, String, String), (SparkSession, Any)]()
-
-  /** `memo` for non-DataFrame model state (e.g. the BPE fit returns a
-    * merge table AND a tokenized-state DataFrame). Same keying and
-    * eviction as `memo`, but publication is computeIfAbsent: exactly one
-    * caller builds (ADVICE r7 — a racing duplicate BPE fit would
-    * localCheckpoint(true) a tokenized state nobody references, pinning
-    * orphaned RDD blocks for the session lifetime). Safe here, unlike in
-    * `memo`, because no memoAny build nests another memoAny call — the
-    * fits only nest into the DataFrame memo's SEPARATE map, and a nested
-    * computeIfAbsent only throws on the SAME map. If a future fit does
-    * nest, CHM fails loudly (IllegalStateException "Recursive update"),
-    * not silently. */
-  def memoAny[T](s: SparkSession, tag: String, d: String)(build: => T): T = {
-    val it = anyCache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-    }
-    val parts = s.conf.get("spark.sql.shuffle.partitions", "")
-    val key = (uuid(s), parts, tag, d)
-    anyCache.computeIfAbsent(key, { _ =>
-      val d0 = buildDepth.get(); buildDepth.set(d0 + 1)
-      val t0 = System.nanoTime()
-      val v: Any =
-        try build
-        finally buildDepth.set(d0)
-      if (d0 == 0) recordBuild(tag, d, (System.nanoTime() - t0) / 1e9)
-      (s, v)
-    })._2.asInstanceOf[T]
-  }
 }

@@ -9,7 +9,7 @@ object Staging {
   private val dirs = java.util.Collections.synchronizedList(
     new java.util.ArrayList[String]())
 
-  private val hook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() =>
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
     dirs.forEach { root =>
       import java.nio.file.{Files, Paths}
       import scala.jdk.CollectionConverters._

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -58,10 +59,7 @@ case class BigramExplode(child: Expression)
 }
 
 object BigramExplode {
-  /** Register `bigrams(array<string>)` as a SQL generator function. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("bigrams",
-        (exprs: Seq[Expression]) => BigramExplode(exprs.head), "scala_udf")
+  /** The (pos, bigram) rows of a token-array column, as a generator
+    * Column for `select`. */
+  def of(toks: Column): Column = column(BigramExplode(expression(toks)))
 }

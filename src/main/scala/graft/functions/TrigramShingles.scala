@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -57,10 +58,6 @@ case class TrigramShingles(child: Expression)
 }
 
 object TrigramShingles {
-  /** Register `shingles3(array<string>)` as a SQL function. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("shingles3",
-        (exprs: Seq[Expression]) => TrigramShingles(exprs.head), "scala_udf")
+  /** Distinct 3-word shingles of a token-array column. */
+  def of(toks: Column): Column = column(TrigramShingles(expression(toks)))
 }

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import org.apache.spark.sql.types._
 import java.nio.ByteBuffer
 
@@ -131,10 +132,7 @@ object VecCentroid {
   def oQuant(x: String): String =
     s"CAST(floor(($x) * 1000000 + 0.5) AS BIGINT)"
 
-  /** Register `vec_centroid(v)` as a SQL aggregate for this session. */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("vec_centroid",
-        (exprs: Seq[Expression]) => VecCentroid(exprs.head), "scala_udf")
+  /** Mean vector of a vector column, as an aggregate Column for `agg`. */
+  def of(v: Column): Column =
+    column(VecCentroid(expression(v)).toAggregateExpression())
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.functions.VecCentroid
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -28,9 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object AnnKMeans {
 
-  private def cosine(a: String, b: String): Column =
-    expr(s"cosine_sim($a, $b)")
-
   /** (score desc, cell asc) — identical ordering to the oracle's
     * row_number() OVER (ORDER BY score DESC, cell). */
   private val scoreDescCellAsc: (Column, Column) => Column = (l, r) =>
@@ -48,7 +47,8 @@ object AnnKMeans {
   def assignProbes(e: DataFrame, cent: DataFrame, nprobe: Int): DataFrame =
     e.join(broadcast(cent))
       .select(col("vec_id"), col("v"),
-        struct(trunc4(cosine("v", "cv")).as("score"), col("cell").as("cell"))
+        struct(trunc4(CosineSim.of(col("v"), col("cv"))).as("score"),
+          col("cell").as("cell"))
           .as("sc"))
       .groupBy("vec_id")
       .agg(first(col("v")).as("v"), collect_list(col("sc")).as("scs"))
@@ -62,8 +62,7 @@ object AnnKMeans {
     assignProbes(e, cent, 1)
 
   /** k-means centroids after `iters` Lloyd iterations, materialized each
-    * round (k rows of dim doubles) and re-broadcast. Requires
-    * CosineSim.register + VecCentroid.register on the session. */
+    * round (k rows of dim doubles) and re-broadcast. */
   def centroids(e: DataFrame, k: Int, iters: Int): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
@@ -82,7 +81,7 @@ object AnnKMeans {
       .toDF("cell", "cv")
     for (_ <- 1 to iters) {
       val next = assign(e, cent)
-        .groupBy("cell").agg(expr("vec_centroid(v)").as("cv"))
+        .groupBy("cell").agg(VecCentroid.of(col("v")).as("cv"))
       // materialize the (tiny) model state; empty cells drop out, exactly
       // as the oracle's GROUP BY does
       import spark.implicits._

@@ -123,7 +123,7 @@ object ChurnModel {
     * `chp_features_label` key emits, so the event aggregation runs once
     * per input. Both `chp_train_auc` and `chp_train_cv` read it. */
   def folds(s: SparkSession, d: String): Folds =
-    graft.Memo.memoAny(s, "chpfolds", d)(
+    graft.Memo.memo(s, "chpfolds", d)(
       buildFolds(QPipeline.chpFeaturesPersisted(s, d)))
 
   /** Persists the fold table and sums the train fold's moments in the one

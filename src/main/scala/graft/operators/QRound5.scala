@@ -399,8 +399,6 @@ object QRound5 extends QueryPack {
     * shape identical to sim_ann_kmeans: centroids are KB model state
     * broadcast per round, the corpus only ever scans. */
   private def chpUserSegments(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val f = QPipeline.queries("chp_features_label")(s, d)
     val e = f.select(col("user_id").as("vec_id"),
       array(col("n_events").cast(DoubleType), col("n_clicks").cast(DoubleType),

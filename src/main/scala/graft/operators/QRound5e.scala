@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,7 +46,7 @@ object QRound5e extends QueryPack {
     AnnKMeans.assign(es, cent)
       .join(broadcast(cent), "cell")
       .select(col("vec_id"), col("cell").as(s"c$sub"),
-        trunc4(expr("cosine_sim(v, cv)")).as(s"s$sub"))
+        trunc4(CosineSim.of(col("v"), col("cv"))).as(s"s$sub"))
   }
 
   /** Packed PQ code (c0 + 8·c1 + 64·c2 + 512·c3) and mean per-subspace
@@ -59,8 +60,6 @@ object QRound5e extends QueryPack {
     * the oracle regenerates all 4 codebooks exactly (AnnKMeans chain,
     * prefixed per subspace). */
   private def embPqCodebook(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     e.count() // materialize the shared cache before the parallel fits race to build it
     // the four subspace codebooks are independent: train them as four

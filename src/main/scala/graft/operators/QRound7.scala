@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,9 +37,6 @@ import org.apache.spark.sql.types._
   */
 object QRound7 extends QueryPack {
 
-  private def cosine(a: String, b: String): Column =
-    expr(s"cosine_sim($a, $b)")
-
   // coarse quantizer (IVF): same geometry as sim_ann_kmeans
   private val cCells = 8
   private val cIters = 3
@@ -67,8 +65,6 @@ object QRound7 extends QueryPack {
 
   /** The raw (un-memoized) index dataflow behind [[ivfpqIndex]]. */
   private[operators] def ivfpqIndexBuild(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     e.count() // materialize the shared cache before concurrent fits race to build it
     // coarse + 4 subspace codebooks are independent fits: train them as 5
@@ -104,8 +100,6 @@ object QRound7 extends QueryPack {
   }
 
   private def simAnnIvfpq(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     val cand = ivfpqIndex(s, d)
     // query-side: route each query through the coarse cells — the only
@@ -119,7 +113,7 @@ object QRound7 extends QueryPack {
       .partitionBy("qid").orderBy(col("adc_score").desc, col("vec_id"))
     val short = cand.join(broadcast(routed), "cell")
       .select(col("qid"), col("qv"), col("vec_id"),
-        trunc4(cosine("qv", "rv")).as("adc_score"))
+        trunc4(CosineSim.of(col("qv"), col("rv"))).as("adc_score"))
       .withColumn("sr", row_number().over(wAdc)).filter(col("sr") <= cShort)
       .drop("sr")
     // stage 2: exact refine — true vectors for ONLY the shortlist rows
@@ -128,7 +122,7 @@ object QRound7 extends QueryPack {
     val top = short
       .join(e, "vec_id") // shortlist-sized side of a uniform-key equi-join
       .select(col("qid"), col("vec_id"), col("adc_score"),
-        trunc4(cosine("qv", "v")).as("score"))
+        trunc4(CosineSim.of(col("qv"), col("v"))).as("score"))
       .withColumn("rnk", row_number().over(wExact)).filter(col("rnk") <= cTop)
     // recall@10 vs the exact baseline, computed IN the engine
     val truth = QSim.simCosineTopk(s, d).select(col("qid"), col("vec_id"))

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.functions.VecCentroid
+import graft.plans.{CosineSim, DotLong}
 import graft.sources.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -53,9 +55,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object QRound7b extends QueryPack {
 
-  private def cosine(a: String, b: String): Column =
-    expr(s"cosine_sim($a, $b)")
-
   // ---- SemDeDup: semantic dedup verdict over k-means cells ----
 
   // same cell geometry as the dedup_emb_cosine family — the memoized fit
@@ -79,8 +78,6 @@ object QRound7b extends QueryPack {
 
   /** The raw (un-memoized) verdict dataflow behind [[semdedupVerdict]]. */
   private[graft] def semdedupVerdictBuild(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     val cent = AnnKMeans.centroidsMemo(s, d, "emb", sdCells, sdIters)(e)
     // nearest cell per vector + similarity to the OWN cell centroid (the
@@ -88,7 +85,7 @@ object QRound7b extends QueryPack {
     val asg = AnnKMeans.assign(e, cent)
       .join(broadcast(cent), Seq("cell"))
       .select(col("vec_id"), col("v"), col("cell"),
-        trunc4(cosine("v", "cv")).as("csim"))
+        trunc4(CosineSim.of(col("v"), col("cv"))).as("csim"))
     val a = asg.select(col("vec_id").as("a_id"), col("v").as("a_v"),
       col("cell"), col("csim").as("a_csim"))
     val b = asg.select(col("vec_id").as("b_id"), col("v").as("b_v"),
@@ -97,7 +94,7 @@ object QRound7b extends QueryPack {
     // lower centroid similarity (more atypical), vec_id tiebreak
     val removed = a.join(b, Seq("cell"))
       .filter(col("a_id") =!= col("b_id"))
-      .filter(trunc4(cosine("a_v", "b_v")) >= lit(0.4))
+      .filter(trunc4(CosineSim.of(col("a_v"), col("b_v"))) >= lit(0.4))
       .filter(col("a_csim") < col("b_csim") ||
         (col("a_csim") === col("b_csim") && col("a_id") < col("b_id")))
       .select(col("b_id").as("vec_id")).distinct()
@@ -337,9 +334,9 @@ object QRound7b extends QueryPack {
   }
 
   private def pcaFit(s: SparkSession, d: String): (Array[Double], Array[Long], Array[Long]) =
-    graft.Memo.memoAny(s, "pca", d) {
+    graft.Memo.memo(s, "pca", d) {
       val e = QSim.embPersisted(s, d)
-      val mean = e.agg(expr("vec_centroid(v)").as("m"))
+      val mean = e.agg(VecCentroid.of(col("v")).as("m"))
         .collect()(0).getSeq[Double](0).toArray
       require(mean.length == pcaDim, s"expected $pcaDim-dim embeddings")
       val meanCol = array(mean.map(lit).toIndexedSeq: _*)
@@ -402,17 +399,15 @@ object QRound7b extends QueryPack {
   /** Projection of `qv` onto literal component `z`, as the native
     * `dot_q` codegen expression (VERDICT r13 #5: this was the last
     * row-scale interpreted `aggregate(zip_with(...))` reduction — two
-    * boxed lambdas per element per vector; the sqdist_q/sq_diff_sum
-    * discipline, applied to the exact long dot product). The component
-    * bakes in as a BIGINT array literal, so the fused loop reads it
-    * straight from the constant pool. */
+    * boxed lambdas per element per vector; the SqDistLong discipline,
+    * applied to the exact long dot product). The component bakes in as
+    * a BIGINT array literal, so the fused loop reads it straight from
+    * the constant pool. */
   private def pcaProjCol(z: Array[Long]): Column =
-    trunc4(expr(s"dot_q(qv, array(${z.mkString("L,")}L))")
+    trunc4(DotLong.of(col("qv"), array(z.map(lit).toIndexedSeq: _*))
       .cast(DoubleType) / lit(1e12))
 
   private def embPcaProject(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecCentroid.register(s)
-    graft.plans.DotLong.register(s)
     val (mean, z1, _) = pcaFit(s, d)
     pcaCentered(s, d, mean)
       .select(col("vec_id"), pcaProjCol(z1).as("pc1"))
@@ -428,8 +423,6 @@ object QRound7b extends QueryPack {
     * the determinism guarantees of the PC1 key; the fit is shared via the
     * same Memo, so the pair of keys trains once. */
   private def embPcaProject2(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecCentroid.register(s)
-    graft.plans.DotLong.register(s)
     val (mean, z1, z2) = pcaFit(s, d)
     pcaCentered(s, d, mean)
       .select(col("vec_id"), pcaProjCol(z1).as("pc1"), pcaProjCol(z2).as("pc2"))

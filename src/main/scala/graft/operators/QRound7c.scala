@@ -48,7 +48,7 @@ object QRound7c extends QueryPack {
     * fitted models — the merge table AND the tokenized state are one
     * training artifact consumed by both declared keys. */
   private def bpeFit(s: SparkSession, d: String): (Seq[(Int, String, String, Long)], DataFrame) =
-    graft.Memo.memoAny(s, "bpe", d) {
+    graft.Memo.memo(s, "bpe", d) {
       val words = t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")

@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.functions.TrigramShingles
+import graft.plans.CosineSim
 import graft.sources.Tables._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,9 +26,6 @@ import org.apache.spark.sql.types._
   *    stream==batch on in-order arrivals.
   */
 object QRound9 extends QueryPack {
-
-  private def cosine(a: String, b: String): Column =
-    expr(s"cosine_sim($a, $b)")
 
   // ---- sim_ann_nsw: graph-ANN beam search ----
 
@@ -51,7 +50,8 @@ object QRound9 extends QueryPack {
     val b = assigned.select(col("cell"), col("vec_id").as("dst"), col("v").as("dv"))
     val w = Window.partitionBy("src").orderBy(col("score").desc, col("dst"))
     val knn = a.join(b, Seq("cell")).filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), trunc4(cosine("sv", "dv")).as("score"))
+      .select(col("src"), col("dst"),
+        trunc4(CosineSim.of(col("sv"), col("dv"))).as("score"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= nswDeg)
       .select("src", "dst")
     val hubs = assigned.groupBy("cell").agg(min(col("vec_id")).as("hub"))
@@ -87,7 +87,8 @@ object QRound9 extends QueryPack {
     val ent = e.join(broadcast(e.agg(min(col("vec_id")).as("mn"))),
       col("vec_id") === col("mn")).select(col("vec_id"), col("v"))
     var beam = q.join(broadcast(ent))
-      .select(col("qid"), col("vec_id"), trunc4(cosine("qv", "v")).as("score"))
+      .select(col("qid"), col("vec_id"),
+        trunc4(CosineSim.of(col("qv"), col("v"))).as("score"))
     for (_ <- 1 to nswRounds) {
       // no distinct on the frontier: duplicate (qid, cid) rows (two beam
       // nodes sharing a neighbor) just re-score a handful of rows and are
@@ -98,7 +99,8 @@ object QRound9 extends QueryPack {
         .select(col("qid"), col("dst").as("cid"))
         .join(broadcast(q), "qid")
       val scored = e.join(broadcast(frontier), col("vec_id") === col("cid"))
-        .select(col("qid"), col("vec_id"), trunc4(cosine("qv", "v")).as("score"))
+        .select(col("qid"), col("vec_id"),
+          trunc4(CosineSim.of(col("qv"), col("v"))).as("score"))
       val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
       // LAZY localCheckpoint per round: the next round references `beam`
       // twice (frontier expansion + union), so an un-truncated lineage
@@ -132,8 +134,6 @@ object QRound9 extends QueryPack {
     * table is memoized + persisted: the beam loop references it once per
     * round, and it is index state, not a per-query scan. */
   private def simAnnNsw(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = QSim.embPersisted(s, d)
     val cent = AnnKMeans.centroidsMemo(s, d, "emb", nswCells, nswIters)(e)
     val edges = graft.Memo.memo(s, "nswedges", d)(
@@ -211,11 +211,10 @@ object QRound9 extends QueryPack {
     * under 3 tokens have no shingles and emit no band rows (they are
     * admitted vacuously by the rollup). */
   private[graft] def minhashBandRows(docs: DataFrame): DataFrame = {
-    graft.functions.TrigramShingles.register(docs.sparkSession)
     val withSh = docs
       .select(col("doc_id"), col("ts"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), col("ts"), expr("shingles3(toks)").as("shs"))
+      .select(col("doc_id"), col("ts"), TrigramShingles.of(col("toks")).as("shs"))
     val hashed = (0 until mbB).foldLeft(withSh) { (df, j) =>
       df.withColumn(s"h$j",
         transform(col("shs"), sh => md5(concat(lit(s"$j|"), sh).cast(BinaryType))))

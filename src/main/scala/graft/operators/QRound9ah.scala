@@ -67,8 +67,6 @@ object QRound9ah extends QueryPack {
     * map pass over the corpus; label counts aggregate on the bounded
     * (cell × label) key domain. */
   private[graft] def clusterPurity(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -126,7 +127,6 @@ object QRound9aj extends QueryPack {
     * (one pass, fused cosine kernel); per-anchor argmin/argmax are
     * windows partitioned by anchor. */
   private[graft] def tripletMining(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     val e = t(s, d, "embeddings")
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
@@ -135,7 +135,7 @@ object QRound9aj extends QueryPack {
         col("v").as("a_v"))
     val scored = e.join(broadcast(anchors), col("vec_id") =!= col("a_id"))
       .select(col("a_id"), col("a_label"), col("vec_id"), col("label"),
-        trunc4(expr("cosine_sim(a_v, v)")).as("score"))
+        trunc4(CosineSim.of(col("a_v"), col("v"))).as("score"))
     val pos = scored.filter(col("label") === col("a_label"))
       .withColumn("r", row_number().over(Window.partitionBy("a_id")
         .orderBy(col("score"), col("vec_id"))))

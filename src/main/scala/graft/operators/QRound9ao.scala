@@ -32,8 +32,6 @@ object QRound9ao extends QueryPack {
     * Scale shape: one partial-aggregable pass — the moment sums combine
     * map-side. */
   private[graft] def olsFit(lineitem: DataFrame): DataFrame = {
-    val x = dec4(col("l_quantity"))
-    val y = dec4(col("l_extendedprice"))
     val dd = DoubleType
     val agg = lineitem.groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,8 +38,6 @@ object QRound9ar extends QueryPack {
     * scan computes all rep similarities (fused kernel) and the per-vector
     * max folds in the aggregate; the final rollup is one row. */
   private[graft] def coverageEval(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
@@ -50,7 +49,7 @@ object QRound9ar extends QueryPack {
       .select("rep_id", "rep_v")
     val maxSim = e.join(broadcast(reps), col("vec_id") =!= col("rep_id"))
       .select(col("vec_id"),
-        trunc4(expr("cosine_sim(v, rep_v)")).as("sim"))
+        trunc4(CosineSim.of(col("v"), col("rep_v"))).as("sim"))
       .groupBy("vec_id").agg(max("sim").as("max_sim"))
     maxSim.agg(
         count(lit(1)).as("n_total"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,7 +40,6 @@ object QRound9at extends QueryPack {
     * skew); the rollup is one row. At 100 TB the same plan holds — the
     * bucket count scales with the corpus to keep |b| bounded. */
   private[graft] def uniformityMetric(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     val dd = DoubleType
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
@@ -51,7 +51,7 @@ object QRound9at extends QueryPack {
       .join(e.select(col("bkt"), col("vec_id").as("ib"), col("v").as("vb")),
         "bkt")
       .filter(col("ia") < col("ib"))
-      .select(trunc4(expr("cosine_sim(va, vb)")).as("c"))
+      .select(trunc4(CosineSim.of(col("va"), col("vb"))).as("c"))
       .withColumn("d2", lit(2.0) - lit(2.0) * col("c"))
     pairs.agg(
         count(lit(1)).as("n_pairs"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -208,8 +209,6 @@ object QRound9aw extends QueryPack {
     * Scale shape: per k one corpus scan against k broadcast centroids
     * with a map-side max fold; the union is 3 one-row branches. */
   private[graft] def kmeansElbow(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val dd = DoubleType
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
@@ -218,7 +217,7 @@ object QRound9aw extends QueryPack {
       val cent = AnnKMeans.centroidsMemo(s, d, "emb", k, elbowIters)(e)
       e.join(broadcast(cent))
         .select(col("vec_id"),
-          trunc4(expr("cosine_sim(v, cv)")).as("sim"))
+          trunc4(CosineSim.of(col("v"), col("cv"))).as("sim"))
         .groupBy("vec_id").agg(max("sim").as("max_sim"))
         .agg(count(lit(1)).as("n"),
           sum(floor((lit(1.0) - col("max_sim")) * lit(1e12) + lit(0.5))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.functions.VecCentroid
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,13 +34,12 @@ object QRound9ay extends QueryPack {
     * Scale shape: one corpus pass builds both centroids (64-dim model
     * state); everything after is a 64-row computation. */
   private[graft] def centroidDrift(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecCentroid.register(s)
     val dd = DoubleType
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(dd)).as("v"))
     val cents = e.groupBy((col("vec_id") % 2).as("side"))
-      .agg(count(lit(1)).as("n"), expr("vec_centroid(v)").as("c"))
+      .agg(count(lit(1)).as("n"), VecCentroid.of(col("v")).as("c"))
     val a = cents.filter(col("side") === 0)
       .select(col("n").as("n_a"), col("c").as("ca"))
     val b = cents.filter(col("side") === 1)

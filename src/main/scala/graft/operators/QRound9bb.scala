@@ -36,7 +36,6 @@ object QRound9bb extends QueryPack {
     * table; per config one (band,key)-bucketed self-join — uniform md5
     * keys, never all-pairs. */
   private[graft] def lshTuning(s: SparkSession, d: String): DataFrame = {
-    val dd = DoubleType
     val sets = QText.shingledPersisted(s, d)
     val ex = sets.select(col("doc_id"), explode(col("shs")).as("sh"))
       .select(col("doc_id") +: (0 until 8).map { j =>

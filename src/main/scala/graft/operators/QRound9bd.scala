@@ -50,7 +50,7 @@ object QRound9bd extends QueryPack {
         val xs = rows.sortBy(_._2).map(_._3 * 1000000L)
         var l = xs.take(hwPeriod).sum / hwPeriod
         var b = 0L
-        var win = xs.take(hwPeriod).map(_ - l).toArray
+        val win = xs.take(hwPeriod).map(_ - l).toArray
         xs.drop(hwPeriod).foreach { x =>
           val sHead = win(0)
           val lNew = (x - sHead + l + b) / 2

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.functions.VecCentroid
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -35,8 +37,6 @@ object QRound9bg extends QueryPack {
     * Scale shape: feedback sets come from the memoized top-k; the
     * re-query is one broadcast scan (5 expanded queries × corpus). */
   private[graft] def rocchioExpand(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val dd = DoubleType
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
@@ -49,7 +49,7 @@ object QRound9bg extends QueryPack {
     val initTop = fb.filter(col("rnk2") === 1)
       .select(col("qid"), col("vec_id").as("init_top1"))
     val cent = fb.join(e, "vec_id")
-      .groupBy("qid").agg(expr("vec_centroid(v)").as("cv"))
+      .groupBy("qid").agg(VecCentroid.of(col("v")).as("cv"))
     val qv = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val expanded = qv.join(cent, "qid")
@@ -59,7 +59,7 @@ object QRound9bg extends QueryPack {
     val rescored = e.join(broadcast(expanded),
         col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
-        trunc4(expr("cosine_sim(ev, v)")).as("score"))
+        trunc4(CosineSim.of(col("ev"), col("v"))).as("score"))
     val w = Window.partitionBy("qid")
       .orderBy(col("score").desc, col("vec_id"))
     val newTop = rescored.withColumn("rnk", row_number().over(w))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.SqDistLong
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -121,7 +122,6 @@ object QRound9bo extends QueryPack {
     * per-anchor window ranks |corpus| candidate rows; production keeps
     * the anchor count fixed as data grows. */
   private[graft] def intrinsicDim(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SqDistLong.register(s)
     val qe = t(s, d, "embeddings").select(col("vec_id"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1e6 + 5e-1) AS BIGINT))")
         .as("q"))
@@ -129,7 +129,7 @@ object QRound9bo extends QueryPack {
       .select(col("vec_id").as("aid"), col("q").as("aq"))
     val pairs = qe.join(broadcast(anchors), col("vec_id") =!= col("aid"))
       .select(col("aid"), col("vec_id"),
-        expr("sqdist_q(aq, q)").as("d2"))
+        SqDistLong.of(col("aq"), col("q")).as("d2"))
       .filter(col("d2") > 0)
     val w = Window.partitionBy("aid").orderBy(col("d2"), col("vec_id"))
     val nn = pairs.withColumn("rnk", row_number().over(w))

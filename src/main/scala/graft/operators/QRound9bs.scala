@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.SqDistLong
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -231,7 +232,6 @@ object QRound9bs extends QueryPack {
     * same pass (la == lb rows). At corpus scale the same statistic
     * runs on per-label uniform samples. */
   private[graft] def energyDistance(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SqDistLong.register(s)
     val qe = t(s, d, "embeddings").select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1e6 + 5e-1) AS BIGINT))")
         .as("q"))
@@ -243,8 +243,8 @@ object QRound9bs extends QueryPack {
       .select(
         least(col("la"), col("lb")).as("l1"),
         greatest(col("la"), col("lb")).as("l2"),
-        expr("CAST(floor(sqrt(CAST(sqdist_q(qa, qb) AS DOUBLE))*1e6 + 5e-1) AS BIGINT)")
-          .as("dist_sc"))
+        floor(sqrt(SqDistLong.of(col("qa"), col("qb")).cast(DoubleType))
+          * lit(1e6) + lit(5e-1)).cast(LongType).as("dist_sc"))
     val sums = pairs.groupBy("l1", "l2")
       .agg(count(lit(1)).as("n_pairs"), sum("dist_sc").as("s"))
     val within = sums.filter(col("l1") === col("l2"))

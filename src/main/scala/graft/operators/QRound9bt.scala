@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.SqDistLong
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -178,15 +179,14 @@ object QRound9bt extends QueryPack {
       col("vec_id").as("ia"), col("q").as("qa"), col("pq").as("pa"))
     val cand = full.filter(col("vec_id") % 8 === 4).select(
       col("vec_id").as("ib"), col("q").as("qb"), col("pq").as("pb"))
-    // sq_diff_sum is the codegen'd native distance (graft.functions
-    // .SqDiffSum): the HOF spelling aggregate(zip_with(...)) interprets
-    // two lambdas per element with boxed Longs and dominated the warm
-    // pair stage (~1.4 s for 62.5k pairs)
-    graft.functions.SqDiffSum.register(s)
+    // SqDistLong is the codegen'd native distance: the HOF spelling
+    // aggregate(zip_with(...)) interprets two lambdas per element with
+    // boxed Longs and dominated the warm pair stage (~1.4 s for 62.5k
+    // pairs)
     val pairs = anch.crossJoin(cand)
       .select(
-        expr("sq_diff_sum(qa, qb)").as("d2o"),
-        expr("sq_diff_sum(pa, pb)").as("d2p"))
+        SqDistLong.of(col("qa"), col("qb")).as("d2o"),
+        SqDistLong.of(col("pa"), col("pb")).as("d2p"))
       .filter(col("d2o") > 0)
       .withColumn("ratio",
         col("d2p").cast(dd) / (lit(16.0) * col("d2o").cast(dd)))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.SortedDotLong
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -277,7 +278,6 @@ object QRound9by extends QueryPack {
     }
 
   private[graft] def tfidfNn(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SortedDotLong.register(s)
     val docs = t(s, d, "documents")
     val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val cand = tfidfNnCands(s, d).repartition(parts, col("da"))
@@ -299,11 +299,11 @@ object QRound9by extends QueryPack {
     // expansion map-side while it fits, shuffle joins past the gate.
     val maxBcDocs =
       s.conf.get("graft.tfidfnn.broadcastMaxDocs", "100000").toLong
-    val docCnt = graft.Memo.memoAny(s, "doccount", d)(docs.count())
+    val docCnt = graft.Memo.memo(s, "doccount", d)(docs.count())
     val small = docCnt <= maxBcDocs
     def side(t: DataFrame): DataFrame = if (small) broadcast(t) else t
     val cos = cand.join(side(va), "da").join(side(vb), "db")
-      .withColumn("dot", expr("sorted_dot(tka, wsa, tkb, wsb)"))
+      .withColumn("dot", SortedDotLong.of(col("tka"), col("wsa"), col("tkb"), col("wsb")))
       .withColumn("cos_sc", floor(
         col("dot").cast(dd) / (sqrt(col("na").cast(dd))
           * sqrt(col("nb").cast(dd))) * lit(1e12) + lit(0.5))

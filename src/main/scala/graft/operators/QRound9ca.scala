@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.SqDistLong
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -220,7 +221,6 @@ object QRound9ca extends QueryPack {
     * Scale shape: one a<b self-join (bounded N²/2) with the codegen'd
     * exact-integer distance; the bandwidth is one broadcast scalar. */
   private[graft] def mmdRbf(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SqDistLong.register(s)
     val qe = t(s, d, "embeddings").select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1e6 + 5e-1) AS BIGINT))")
         .as("q"))
@@ -231,7 +231,7 @@ object QRound9ca extends QueryPack {
     val pairs = a.join(b, col("ia") < col("ib"))
       .select(least(col("la"), col("lb")).as("l1"),
         greatest(col("la"), col("lb")).as("l2"),
-        expr("sqdist_q(qa, qb)").as("d2"))
+        SqDistLong.of(col("qa"), col("qb")).as("d2"))
     val sig = pairs.agg(sum("d2").as("sd2"), count(lit(1)).as("npair"))
     val kv = pairs.crossJoin(broadcast(sig))
       .withColumn("k_sc", floor(exp(col("d2").cast(dd)

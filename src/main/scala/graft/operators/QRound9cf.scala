@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.SqDistLong
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -179,7 +180,6 @@ object QRound9cf extends QueryPack {
     * Scale shape: two bounded anchor×corpus scans on the codegen'd
     * sqdist_q kernel; overlap is a tiny join. */
   private[graft] def neighborPreservation(s: SparkSession, d: String): DataFrame = {
-    graft.plans.SqDistLong.register(s)
     // the memoized (vec_id, q, pq) JL index shared with
     // emb_jl_projection — one spelling, one build (ADVICE-r13-style
     // dedup: the re-spelled copy here could drift from the declared
@@ -191,7 +191,7 @@ object QRound9cf extends QueryPack {
       val cand = full.select(col("vec_id").as("cid"), col(space).as("cv"))
       val pairs = cand.join(broadcast(anch), col("cid") =!= col("aid"))
         .select(col("aid"), col("cid"),
-          expr("sqdist_q(av, cv)").as("d2"))
+          SqDistLong.of(col("av"), col("cv")).as("d2"))
       val w = Window.partitionBy("aid").orderBy(col("d2"), col("cid"))
       pairs.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 5)
         .select("aid", "cid")

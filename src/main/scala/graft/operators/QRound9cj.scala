@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -171,15 +172,13 @@ object QRound9cj extends QueryPack {
     * Scale shape: centroids broadcast; top-2 scores fold map-side (the
     * assignProbes shuffle shape); one bounded (cell) rollup. */
   private[graft] def silhouette(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
     val cent = AnnKMeans.centroidsMemo(s, d, "emb", silCells, silIters)(e)
     val top2 = e.join(broadcast(cent))
       .select(col("vec_id"),
-        struct(trunc4(expr("cosine_sim(v, cv)")).as("score"),
+        struct(trunc4(CosineSim.of(col("v"), col("cv"))).as("score"),
           col("cell").as("cell")).as("sc"))
       .groupBy("vec_id")
       .agg(collect_list(col("sc")).as("scs"))

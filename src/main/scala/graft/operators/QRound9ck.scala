@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -209,8 +210,6 @@ object QRound9ck extends QueryPack {
     * with the same keying); the three vector fetches are uniform
     * equi-joins. */
   private[graft] def contrastivePairs(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
@@ -241,8 +240,8 @@ object QRound9ck extends QueryPack {
     val nv = e.toDF("neg_id", "vn")
     anchors.join(av, "anchor_id").join(pv, "pos_id").join(nv, "neg_id")
       .select(col("anchor_id"), col("pos_id"), col("neg_id"),
-        trunc4(expr("cosine_sim(va, vp)")).as("pos_sim"),
-        trunc4(expr("cosine_sim(va, vn)")).as("neg_sim"))
+        trunc4(CosineSim.of(col("va"), col("vp"))).as("pos_sim"),
+        trunc4(CosineSim.of(col("va"), col("vn"))).as("neg_sim"))
       .withColumn("margin", col("pos_sim") - col("neg_sim"))
       .orderBy("anchor_id")
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -103,14 +104,13 @@ object QRound9k extends QueryPack {
     * rounds → the oracle unrolls them as MATERIALIZED CTEs. */
   private[graft] def kcenterCoreset(s: SparkSession, emb: DataFrame)
       : DataFrame = {
-    graft.plans.CosineSim.register(s)
     var centers = Seq(emb.select(min(col("vec_id"))).head().getLong(0))
     for (_ <- 1 until kCenters) {
       val cdf = emb.filter(col("vec_id").isin(centers: _*))
         .select(col("vec_id").as("cid"), col("v").as("cv"))
       val next = emb.filter(!col("vec_id").isin(centers: _*))
         .join(broadcast(cdf))
-        .select(col("vec_id"), trunc4(expr("cosine_sim(v, cv)")).as("sim"))
+        .select(col("vec_id"), trunc4(CosineSim.of(col("v"), col("cv"))).as("sim"))
         .groupBy("vec_id").agg(max(col("sim")).as("msim"))
         .orderBy(col("msim").asc, col("vec_id").asc)
         .limit(1).head().getLong(0)
@@ -122,7 +122,7 @@ object QRound9k extends QueryPack {
       .orderBy(col("sim").desc, col("cid").asc)
     emb.join(broadcast(cdf))
       .select(col("vec_id"), col("cid"),
-        trunc4(expr("cosine_sim(v, cv)")).as("sim"))
+        trunc4(CosineSim.of(col("v"), col("cv"))).as("sim"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("vec_id"), col("cid").as("center_id"), col("sim"),
         when(col("vec_id").isin(centers: _*), 1).otherwise(0).as("is_center"))

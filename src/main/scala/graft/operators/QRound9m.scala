@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.functions.VecCentroid
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -154,17 +156,15 @@ object QRound9m extends QueryPack {
     * shuffles dim+1 longs per label). */
   private[graft] def outlierScore(s: SparkSession, emb: DataFrame)
       : DataFrame = {
-    graft.functions.VecCentroid.register(s)
-    graft.plans.CosineSim.register(s)
     val cent = emb.groupBy("label")
-      .agg(expr("vec_centroid(v)").as("cv0"))
+      .agg(VecCentroid.of(col("v")).as("cv0"))
       .select(col("label").as("lc"),
         // 1e4 keeps the lambda in pure DOUBLE (a 10000.0 SQL literal
         // binds as DECIMAL and poisons the array element type)
         expr("transform(cv0, x -> floor(x * 1e4) / 1e4)").as("cv"))
     emb.join(broadcast(cent), col("label") === col("lc"))
       .select(col("vec_id"), col("label").cast(IntegerType).as("label"),
-        trunc4(expr("cosine_sim(v, cv)")).as("sim_centroid"))
+        trunc4(CosineSim.of(col("v"), col("cv"))).as("sim_centroid"))
       .withColumn("is_outlier",
         when(col("sim_centroid") < lit(0e0), 1).otherwise(0))
       .orderBy("vec_id")

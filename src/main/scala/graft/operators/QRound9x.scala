@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -73,7 +74,6 @@ object QRound9x extends QueryPack {
     * by the memoized exact top-k ranking. The unrolled-CTE oracle
     * replays the same integer recursion. */
   private[graft] def mmrRerank(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     val top = QSim.simCosineTopk(s, d)
     val emb = QSim.embPersisted(s, d)
     val cand = top.select(col("qid"), col("vec_id"),
@@ -85,7 +85,7 @@ object QRound9x extends QueryPack {
       col("v").as("bv"))
     val pairSims = pa.join(pb, col("qid") === col("qid2") && col("a") =!= col("b"))
       .select(col("qid"), col("a"), col("b"),
-        floor(trunc4(expr("cosine_sim(av, bv)")) * lit(1e4) + lit(0.5))
+        floor(trunc4(CosineSim.of(col("av"), col("bv"))) * lit(1e4) + lit(0.5))
           .cast(LongType).as("s4"))
     // bounded model state: 20 queries x 10 candidates (+ 10x9 pair sims)
     val candM = cand.collect()

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.QueryPack
+import graft.functions.VecCentroid
+import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,13 +30,10 @@ import org.apache.spark.sql.types._
   */
 object QSim extends QueryPack {
 
-  /** Native fused-loop cosine kernel (see graft.plans.CosineSim). The
-    * equivalent pure-HOF spelling — aggregate(zip_with(a,b,(x,y)=>x*y),...)
-    * — is semantically identical but far slower (per-row allocation,
-    * interpreted lambda); the kernel codegens into the join stage.
-    * Callers must CosineSim.register(spark) once per query. */
-  private def cosine(a: String, b: String): Column =
-    expr(s"cosine_sim($a, $b)")
+  // Scores use the native fused-loop cosine kernel (CosineSim.of). The
+  // equivalent pure-HOF spelling — aggregate(zip_with(a,b,(x,y)=>x*y),...)
+  // — is semantically identical but far slower (per-row allocation,
+  // interpreted lambda); the kernel codegens into the join stage.
 
   private def asDouble(c: Column): Column = transform(c, x => x.cast(DoubleType))
 
@@ -62,13 +61,13 @@ object QSim extends QueryPack {
     * three keys (this one, sim_ann_recall, sim_ann_ivfpq) consume the same
     * exact ranking, and it is ground-truth state, not a per-query scan. */
   private[operators] def simCosineTopk(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
     graft.Memo.memo(s, "brutetopk", d) {
       val q = embD(s, d).filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
       val c = embD(s, d).select(col("vec_id"), col("v").as("cv"))
       val scored = c.join(broadcast(q))
-        .select(col("qid"), col("vec_id"), trunc4(cosine("qv", "cv")).as("score"))
+        .select(col("qid"), col("vec_id"),
+          trunc4(CosineSim.of(col("qv"), col("cv"))).as("score"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
       scored.withColumn("rnk", row_number().over(w))
@@ -100,10 +99,9 @@ object QSim extends QueryPack {
     * double avg() was not). The posexplode here runs AFTER aggregation, on
     * #labels rows, purely to shape the (label, pos, c) output. */
   private def embCentroid(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecCentroid.register(s)
     embD(s, d)
       .groupBy("label")
-      .agg(expr("vec_centroid(v)").as("cv"))
+      .agg(VecCentroid.of(col("v")).as("cv"))
       .select(col("label"), posexplode(col("cv")))
       .select(col("label"), (col("pos") + 1).as("pos"), trunc4(col("col")).as("c"))
       .orderBy("label", "pos")
@@ -137,8 +135,6 @@ object QSim extends QueryPack {
     * exactly); OperatorSpec measures recall = 1.0 on planted clustered
     * data, where real near-dup corpora live. */
   private def dedupEmbCosine(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     // each Lloyd iteration + both probe branches re-scan e — session-shared
     // persisted instance (see embPersisted)
     val e = embPersisted(s, d)
@@ -148,7 +144,7 @@ object QSim extends QueryPack {
     val b = probes.select(col("vec_id").as("b_id"), col("v").as("b_v"), col("cell"))
     a.join(b, Seq("cell")).filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
-        trunc4(cosine("a_v", "b_v")).as("score"))
+        trunc4(CosineSim.of(col("a_v"), col("b_v"))).as("score"))
       .distinct() // a pair sharing both probed cells appears twice
       .filter(col("score") >= 0.4)
       .orderBy("a_id", "b_id")
@@ -170,20 +166,18 @@ object QSim extends QueryPack {
   // ---- IVF-style ANN: route query to nearest centroid cell, search cell ----
 
   private def simAnnIvf(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     val e = embD(s, d)
     // cell centroids in one pass (deterministic scaled-long mean — a raw
     // double avg() could flip a trunc4 digit with partition count and
     // re-route a near-tie query to a different cell)
-    val cent = e.groupBy("label").agg(expr("vec_centroid(v)").as("cv"))
+    val cent = e.groupBy("label").agg(VecCentroid.of(col("v")).as("cv"))
     val q = e.filter(col("vec_id") < 20).select(col("vec_id").as("qid"), col("v").as("qv"))
     // stage 1: nearest centroid per query (tiny cross join)
     val wq = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("cscore").desc, col("label"))
     val routed = q.join(broadcast(cent))
       .select(col("qid"), col("qv"), col("label"),
-        trunc4(cosine("qv", "cv")).as("cscore"))
+        trunc4(CosineSim.of(col("qv"), col("cv"))).as("cscore"))
       .withColumn("r", row_number().over(wq)).filter(col("r") === 1)
       .select(col("qid"), col("qv"), col("label").as("cell"))
     // stage 2: exact search inside the routed cell only
@@ -191,7 +185,7 @@ object QSim extends QueryPack {
       .partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
     e.join(broadcast(routed), e("label") === routed("cell"))
       .select(col("qid"), col("cell"), col("vec_id"),
-        trunc4(cosine("qv", "v")).as("score"))
+        trunc4(CosineSim.of(col("qv"), col("v"))).as("score"))
       .withColumn("rnk", row_number().over(wc)).filter(col("rnk") <= 3)
       .select("qid", "cell", "rnk", "vec_id", "score")
       .orderBy("qid", "rnk")
@@ -235,8 +229,6 @@ object QSim extends QueryPack {
     * Recall@10 vs brute force is gated in OperatorSpec on clustered data
     * (this testdata's embeddings are near-random — see dedupEmbCosine). */
   private def simAnnKmeans(s: SparkSession, d: String): DataFrame = {
-    graft.plans.CosineSim.register(s)
-    graft.functions.VecCentroid.register(s)
     // persisted across the Lloyd iterations + final assignment —
     // session-shared instance (see embPersisted)
     val e = embPersisted(s, d)
@@ -248,7 +240,8 @@ object QSim extends QueryPack {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
     assigned.join(broadcast(routed), "cell")
-      .select(col("qid"), col("vec_id"), trunc4(cosine("qv", "v")).as("score"))
+      .select(col("qid"), col("vec_id"),
+        trunc4(CosineSim.of(col("qv"), col("v"))).as("score"))
       .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= kmTop)
       .select("qid", "rnk", "vec_id", "score")
       .orderBy("qid", "rnk")
@@ -335,8 +328,6 @@ object QSim extends QueryPack {
     * checkpoint scan). */
   private[graft] def knnJoinBuild(s: SparkSession, d: String): DataFrame = {
     {
-      graft.plans.CosineSim.register(s)
-      graft.functions.VecCentroid.register(s)
       val e = embPersisted(s, d)
       val cent = AnnKMeans.centroidsMemo(s, d, "emb", kmCells, kmIters)(e)
       // materialized once — the a/b sides below otherwise re-run the
@@ -360,7 +351,7 @@ object QSim extends QueryPack {
       a.join(b, Seq("cell", "salt"))
         .filter(col("vec_id") =!= col("nbr_id"))
         .select(col("vec_id"), col("nbr_id"),
-          trunc4(cosine("v", "nv")).as("score"))
+          trunc4(CosineSim.of(col("v"), col("nv"))).as("score"))
         .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= knnK)
         .select("vec_id", "rnk", "nbr_id", "score")
     }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
-import graft.functions.BigramExplode
+import graft.functions.{BigramExplode, TrigramShingles}
 import graft.sources.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,21 +51,10 @@ object QText extends QueryPack {
 
   // ---- bigrams via the custom Generator ----
 
-  /** Monotone counter so concurrent query construction in one session never
-    * races on a shared view name (each call binds its own view, dropped as
-    * soon as sql() has eagerly analyzed the plan). */
-  private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  private def textNgramBigram(s: SparkSession, d: String): DataFrame = {
-    BigramExplode.register(s)
-    val view = s"graft_docs_toks_${viewSeq.incrementAndGet()}"
-    docsToks(s, d).createOrReplaceTempView(view)
-    try s.sql(
-      s"""SELECT doc_id, bigrams(toks) AS (pos, bigram)
-         |FROM $view WHERE doc_id < 10""".stripMargin)
+  private def textNgramBigram(s: SparkSession, d: String): DataFrame =
+    docsToks(s, d).filter(col("doc_id") < 10)
+      .select(col("doc_id"), BigramExplode.of(col("toks")).as(Seq("pos", "bigram")))
       .orderBy("doc_id", "pos")
-    finally s.catalog.dropTempView(view)
-  }
 
   private val oTextNgramBigram =
     """WITH d AS (SELECT doc_id, string_split(text,' ') AS t FROM documents
@@ -199,7 +188,6 @@ object QText extends QueryPack {
     * 25 planted near-dup pairs). Native expression — the HOF spelling
     * interprets its lambda per token (see TrigramShingles). */
   private def shingled(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TrigramShingles.register(s)
     // repartition before shingling: the testdata parquet is one row group,
     // so without it the entire shingle+signature map pipeline (8 md5s per
     // shingle) runs inside the single scan task; one cheap shuffle of the
@@ -208,7 +196,7 @@ object QText extends QueryPack {
     // the same shape.
     docsToks(s, d).repartition(col("doc_id"))
       .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), expr("shingles3(toks)").as("shs"))
+      .select(col("doc_id"), TrigramShingles.of(col("toks")).as("shs"))
   }
 
   /** Candidate pairs from band-bucket collisions — exposed for the spec

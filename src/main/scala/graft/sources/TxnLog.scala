@@ -325,7 +325,7 @@ object TxnLog {
   private def tryPublish(s: SparkSession, table: String, v: Int,
       files: Seq[String], op: String, batchId: Option[Long],
       appId: String, highs: Map[String, Long], kind: String,
-      minTs: Long = 0L): Boolean = {
+      minTs: Long): Boolean = {
     val f = fs(s, table)
     f.mkdirs(logDir(table))
     val tmp = new Path(logDir(table),
@@ -549,7 +549,7 @@ object TxnLog {
     * its rows are part of the base snapshot, so returning the latest
     * version keeps the documented at-most-once contract. */
   private def resolveReplayedBatch(s: SparkSession, table: String,
-      batchId: Long, latest: Int, appId: String = ""): Int =
+      batchId: Long, latest: Int, appId: String): Int =
     committedVersionOfBatch(s, table, batchId, appId).getOrElse {
       val versions = listVersions(fs(s, table), table)
       if (versions.nonEmpty && versions.min == 1)
@@ -635,9 +635,9 @@ object TxnLog {
     * Fallback (bit-identical semantics): any file whose footer lacks a
     * usable statistic for a needed column (foreign parquet, disabled
     * stats) falls back to the original ONE groupBy(input_file_name)
-    * aggregate over exactly the new files. `graft.txnlog.footerStats=
-    * false` forces the fallback — Round17OptSpec proves both paths emit
-    * byte-identical manifest lines (incl. all-null and empty files).
+    * aggregate over exactly the new files. Round17OptSpec proves both
+    * paths emit byte-identical manifest lines (incl. all-null and empty
+    * files).
     *
     * Files with no rows keep a bare line (no stats → always kept); a
     * column with no non-null value in a file writes empty min/max
@@ -646,20 +646,15 @@ object TxnLog {
     * (ADVICE r15). */
   private def statsLines(s: SparkSession, table: String,
       newFiles: Seq[String], statsCols: Seq[String]): Seq[String] = {
-    if (newFiles.isEmpty || statsCols.isEmpty) return newFiles
-    if (s.conf.get("graft.txnlog.footerStats", "true").toBoolean) {
-      footerStatsLines(s, table, newFiles, statsCols) match {
-        case Some(lines) => return lines
-        case None => // fall through to the aggregate path
-      }
-    }
-    statsLinesByScan(s, table, newFiles, statsCols)
+    if (newFiles.isEmpty || statsCols.isEmpty) newFiles
+    else footerStatsLines(s, table, newFiles, statsCols)
+      .getOrElse(statsLinesByScan(s, table, newFiles, statsCols))
   }
 
   /** Per-file stats tokens from the parquet footers alone; None when any
     * footer cannot be read or lacks a usable exact statistic (the caller
     * then scans). */
-  private def footerStatsLines(s: SparkSession, table: String,
+  private[graft] def footerStatsLines(s: SparkSession, table: String,
       newFiles: Seq[String], statsCols: Seq[String]): Option[Seq[String]] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -729,7 +724,7 @@ object TxnLog {
   /** The original stats pass: ONE groupBy(input_file_name) aggregate
     * over exactly the new files, collected at metadata scale (one tiny
     * row per file). */
-  private def statsLinesByScan(s: SparkSession, table: String,
+  private[graft] def statsLinesByScan(s: SparkSession, table: String,
       newFiles: Seq[String], statsCols: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
     import org.apache.spark.sql.types.LongType

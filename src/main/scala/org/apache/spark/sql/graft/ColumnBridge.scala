@@ -5,10 +5,15 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column <-> catalyst Expression bridge. Spark 4 made the converters
-  * `private[sql]` (Column wraps a ColumnNode, not an Expression), so the
-  * engine's native expressions (plans/VectorExprs, plans/SumExprs) need
-  * this one-liner in the sql package namespace to be usable from the
-  * DataFrame API without a per-session function-registry round trip. */
+  * `private[sql]` (Column wraps a ColumnNode, not an Expression), so this
+  * one-liner lives in the sql package namespace.
+  *
+  * It is the one way the engine calls its native kernels
+  * (plans/VectorExprs, plans/SumExprs, functions/): each kernel's
+  * companion wraps its Expression in a Column here (`CosineSim.of`,
+  * `Tables.sum128`, ...), with no function-registry entry and no SQL
+  * text to parse. SQL names exist only where a session opts in through
+  * [[GraftExtensions]]. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -10,16 +10,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions
   *
   * (or `SparkSession.builder.withExtensions(new GraftExtensions)`).
-  * Injects the as-of join planner strategy and the engine's native
-  * functions (codegen cosine kernel, shingle/bigram generators, the
-  * vector-centroid aggregate) into EVERY session built from that config —
-  * cluster-wide, no per-session register calls.
+  * Injects the as-of join planner strategy and SQL names for the engine's
+  * native functions (codegen cosine kernel, shingle/bigram generators, the
+  * vector-centroid aggregate) into EVERY session built from that config.
   *
-  * The per-object `register(spark)` helpers remain for ad-hoc/test
-  * sessions; both paths bind the same Expression builders, so plans are
-  * identical either way. ExtensionsSpec proves the injection using
-  * the same private[sql] build hooks Spark itself applies at session
-  * construction.
+  * This is the only place those kernels get SQL names. The engine's own
+  * operators call them as Column functions (`CosineSim.of`,
+  * `VecCentroid.of`, ...) built through [[ColumnBridge]], so running a
+  * query never writes to the caller's function registry. Both paths
+  * construct the same Expression, so plans are identical either way.
+  * ExtensionsSpec proves the injection using the same private[sql] build
+  * hooks Spark itself applies at session construction.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

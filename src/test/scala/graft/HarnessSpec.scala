@@ -167,4 +167,24 @@ class HarnessSpec extends SparkSpec {
       assert(run(1) === run(32), s"$name depends on partition count")
     }
   }
+
+  // Last in this suite: it stops the shared session; later suites build a
+  // fresh one through SparkSpec.session.
+  test("Memo: the next call after a session stops evicts its entries and build locks") {
+    val old = spark
+    Memo.memo(old, "evicttest", "evict-d")(old.range(3).toDF("x"))
+    // a build that throws leaves a lock but no entry
+    intercept[IllegalStateException] {
+      Memo.memo(old, "evictfail", "evict-d")(
+        throw new IllegalStateException("build failed"))
+    }
+    val (entries, locks) = Memo.heldFor(old)
+    assert(entries >= 1 && locks > entries)
+    old.stop()
+    val fresh = SparkSpec.session()
+    assert(fresh ne old)
+    Memo.memo(fresh, "evicttest", "evict-d")(fresh.range(3).toDF("x"))
+    assert(Memo.heldFor(old) === ((0, 0)))
+    assert(Memo.heldFor(fresh) === ((1, 1)))
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.functions.{BigramExplode, VecCentroid}
+import graft.plans.CosineSim
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -28,7 +30,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("CosineSim kernel == HOF spelling, and cos(v,v) == 1") {
-    graft.plans.CosineSim.register(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), transform(col("embedding"),
         x => x.cast("double")).as("v"))
@@ -39,7 +40,7 @@ class OperatorSpec extends SparkSpec {
           lit(0.0), (a, x) => a + x)) *
          sqrt(aggregate(zip_with(col("v"), col("v"), (p, q) => p * q),
           lit(0.0), (a, x) => a + x)))).as("c"))
-    val native = e.select(col("vec_id"), expr("cosine_sim(v, v)").as("c"))
+    val native = e.select(col("vec_id"), CosineSim.of(col("v"), col("v")).as("c"))
     val joined = hof.as("h").join(native.as("n"), "vec_id")
       .select(col("h.c").as("hc"), col("n.c").as("nc")).collect()
     joined.foreach { r =>
@@ -57,10 +58,10 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("bigram generator: positions and pairs") {
-    graft.functions.BigramExplode.register(spark)
     import spark.implicits._
     val rows = Seq("a b c", "solo").toDF("text")
-      .selectExpr("bigrams(split(text, ' ')) AS (pos, bigram)").collect()
+      .select(BigramExplode.of(split(col("text"), " ")).as(Seq("pos", "bigram")))
+      .collect()
     assert(rows.toSeq === Seq(Row(1, "a b"), Row(2, "b c")))
   }
 
@@ -130,12 +131,11 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("vec_centroid is bit-identical across input partitionings") {
-    graft.functions.VecCentroid.register(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("label"), expr("transform(embedding, x -> cast(x as double))").as("v"))
     def centroids(parts: Int): Map[Int, Seq[Double]] =
       e.repartition(parts).groupBy("label")
-        .agg(expr("vec_centroid(v)").as("cv"))
+        .agg(VecCentroid.of(col("v")).as("cv"))
         .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
     val one = centroids(1)
     val many = centroids(7)
@@ -161,8 +161,6 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("k-means ANN: recall@10 >= 0.9 vs brute force on clustered data") {
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     import spark.implicits._
     val e = planted(10, 200, 16, 0.1).toDF("vec_id", "v")
     val cent = graft.operators.AnnKMeans.centroids(e, 10, 3)
@@ -178,19 +176,17 @@ class OperatorSpec extends SparkSpec {
         .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val ann = top10(assigned.join(broadcast(routed), "cell")
       .select(col("qid"), col("vec_id"),
-        expr("floor(cosine_sim(qv, v) * 10000) / 10000.0").as("score")))
+        sources.Tables.trunc4(CosineSim.of(col("qv"), col("v"))).as("score")))
     val truth = top10(e.select(col("vec_id"), col("v").as("cv"))
       .crossJoin(broadcast(q.select(col("vec_id").as("qid"), col("v").as("qv"))))
       .select(col("qid"), col("vec_id"),
-        expr("floor(cosine_sim(qv, cv) * 10000) / 10000.0").as("score")))
+        sources.Tables.trunc4(CosineSim.of(col("qv"), col("cv"))).as("score")))
     val recalls = truth.map { case (qid, t) => ann(qid).intersect(t).size / 10.0 }
     val mean = recalls.sum / recalls.size
     assert(mean >= 0.9, s"mean recall@10 $mean < 0.9")
   }
 
   test("IVF-bucketed dedup: full recall of planted near-dup pairs") {
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     import spark.implicits._
     // 100 base points in 10 clusters; points i and i+100 are near-dups
     val base = planted(10, 100, 16, 0.3)
@@ -202,7 +198,7 @@ class OperatorSpec extends SparkSpec {
     val b = probes.select(col("vec_id").as("b_id"), col("v").as("b_v"), col("cell"))
     val found = a.join(b, Seq("cell")).filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
-        expr("floor(cosine_sim(a_v, b_v) * 10000) / 10000.0").as("score"))
+        sources.Tables.trunc4(CosineSim.of(col("a_v"), col("b_v"))).as("score"))
       .distinct()
       .filter(col("score") >= 0.999) // trunc4 floors scores to 4dp
       .select("a_id", "b_id").collect()

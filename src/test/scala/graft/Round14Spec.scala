@@ -168,11 +168,12 @@ class Round14Spec extends SparkSpec {
 
   test("dot_q native kernel: exact long dot product, type-gated, loud " +
     "on length mismatch (VERDICT r13 #5)") {
-    graft.plans.DotLong.register(spark)
     import spark.implicits._
     val two = Seq((Array(1L, 2L, 3L), Array(4L, -5L, 6L)))
       .toDF("a", "b")
-    assert(two.selectExpr("dot_q(a, b)").head.getLong(0) === 12L)
+    def dot(df: org.apache.spark.sql.DataFrame) =
+      df.select(graft.plans.DotLong.of(df("a"), df("b")))
+    assert(dot(two).head.getLong(0) === 12L)
     // interpreted twin (non-codegen path) agrees
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, LongType}
@@ -183,10 +184,10 @@ class Round14Spec extends SparkSpec {
     assert(e.eval(null) === 12L)
     // analysis-time type gate: double arrays are rejected, not misread
     val dbl = Seq((Array(1.0, 2.0), Array(3.0, 4.0))).toDF("a", "b")
-    intercept[Exception] { dbl.selectExpr("dot_q(a, b)").collect() }
+    intercept[Exception] { dot(dbl).collect() }
     // a length mismatch is an error, never a silent truncation
     val mis = Seq((Array(1L, 2L, 3L), Array(4L, 5L))).toDF("a", "b")
-    intercept[Exception] { mis.selectExpr("dot_q(a, b)").collect() }
+    intercept[Exception] { dot(mis).collect() }
   }
 
   test("emb_pca_project plans the native dot_q kernel — no interpreted " +

@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.SortedDotLong
 import graft.sources.TxnLog
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -8,10 +9,10 @@ import org.apache.spark.sql.types._
   *
   * 1. Footer-derived per-file stats (TxnLog.statsLines fast path): the
   *    parquet-footer metadata fold must emit BYTE-IDENTICAL manifest
-  *    stats tokens to the Spark aggregate pass it replaces — including
-  *    negative values, NULL counts, an all-NULL column, multi-file
-  *    appends, and every integral width — and the skipping reader must
-  *    prune identically over both layouts.
+  *    stats tokens to the Spark aggregate pass it falls back to —
+  *    including negative values, NULL counts, an all-NULL column, an
+  *    empty file, multi-file appends, and every integral width — and the
+  *    skipping reader must prune on them.
   */
 class Round17OptSpec extends SparkSpec {
 
@@ -25,13 +26,12 @@ class Round17OptSpec extends SparkSpec {
       .withColumn("an", col("an").cast(ShortType))
   }
 
-  private def stage(dir: String, footer: Boolean): Unit = {
-    spark.conf.set("graft.txnlog.footerStats", footer.toString)
-    try {
-      TxnLog.appendWithStats(spark, dir, fixture.repartition(2), "k", "v", "an")
-      TxnLog.appendWithStats(spark, dir,
-        fixture.filter(col("k") > 50).repartition(1), "k", "v", "an")
-    } finally spark.conf.set("graft.txnlog.footerStats", "true")
+  private val statsCols = Seq("k", "v", "an")
+
+  private def stage(dir: String): Unit = {
+    TxnLog.appendWithStats(spark, dir, fixture.repartition(2), statsCols: _*)
+    TxnLog.appendWithStats(spark, dir,
+      fixture.filter(col("k") > 50).repartition(1), statsCols: _*)
   }
 
   private def toks(d: String): Seq[String] = {
@@ -42,36 +42,36 @@ class Round17OptSpec extends SparkSpec {
   }
 
   test("footer stats tokens byte-identical to the scan-pass tokens") {
-    val base = graft.Staging.trackedTempDir("graft_r17stats_")
-    val dA = s"$base/foot"; val dB = s"$base/scan"
-    stage(dA, footer = true)
-    stage(dB, footer = false)
-    assert(toks(dA) == toks(dB))
-    assert(toks(dA).exists(_.contains("stats:an=::")),
+    val d = s"${graft.Staging.trackedTempDir("graft_r17stats_")}/t"
+    stage(d)
+    val committed = TxnLog.snapshotLines(spark, d, TxnLog.latestVersion(spark, d).get)
+    // both stats paths over the same written files, plus an empty one
+    fixture.limit(0).coalesce(1).write.parquet(s"$d/empty")
+    val empty = new java.io.File(s"$d/empty").list()
+      .filter(_.endsWith(".parquet")).map(f => s"empty/$f").toSeq
+    assert(empty.size == 1, s"expected one empty parquet file, got $empty")
+    val files = committed.map(_.takeWhile(_ != '\t')) ++ empty
+    val byScan = TxnLog.statsLinesByScan(spark, d, files, statsCols)
+    assert(TxnLog.footerStatsLines(spark, d, files, statsCols) == Some(byScan))
+    assert(byScan.take(committed.size) == committed)
+    assert(byScan.last == empty.head, "an empty file must keep a bare line")
+    assert(toks(d).exists(_.contains("stats:an=::")),
       "all-null column must emit empty min/max")
-    assert(toks(dA).exists(_.contains("stats:k=-50:")),
+    assert(toks(d).exists(_.contains("stats:k=-50:")),
       "negative minimum must survive the footer fold")
-    // pruning decisions identical over both layouts; a provably
-    // out-of-range probe prunes everything, null pruning keeps only the
-    // null-bearing files
-    val prunes = Seq(dA, dB).map { d =>
-      val (_, k1, t1) = TxnLog.readSkipped(spark, d, "k", 60L, 200L)
-      val (_, k2, t2) = TxnLog.readSkipped(spark, d, "k", 1000L, 2000L)
-      val (_, k3, t3) = TxnLog.readSkippedNull(spark, d, "v")
-      (k1, t1, k2, t2, k3, t3)
-    }
-    assert(prunes.head == prunes(1))
-    assert(prunes.head._3 == 0, "out-of-range probe must open zero files")
-    assert(prunes.head._2 == 3 && prunes.head._5 < prunes.head._6)
-    val a = TxnLog.read(spark, dA).orderBy("k").collect().toSeq
-    val b = TxnLog.read(spark, dB).orderBy("k").collect().toSeq
-    assert(a == b)
+    // a provably out-of-range probe prunes everything, null pruning keeps
+    // only the null-bearing files
+    val (_, k1, _) = TxnLog.readSkipped(spark, d, "k", 60L, 200L)
+    val (_, k2, _) = TxnLog.readSkipped(spark, d, "k", 1000L, 2000L)
+    val (_, k3, t3) = TxnLog.readSkippedNull(spark, d, "v")
+    assert(k2 == 0, "out-of-range probe must open zero files")
+    assert(k1 == 3 && k3 < t3)
   }
 
   test("an unreadable footer falls back to the scan pass, same stats") {
     val base = graft.Staging.trackedTempDir("graft_r17stats_")
     val dA = s"$base/foot"; val dB = s"$base/fail"
-    stage(dA, footer = true)
+    stage(dA)
     // the footer fold opens files through the context's Hadoop conf;
     // Spark's own writes and the fallback scan use the session's, which
     // keeps the plain local file system
@@ -83,7 +83,7 @@ class Round17OptSpec extends SparkSpec {
       hc.set("fs.file.impl", classOf[FooterFailFS].getName)
       hc.set("fs.file.impl.disable.cache", "true")
       spark.conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
-      stage(dB, footer = true)
+      stage(dB)
     } finally {
       prev.foreach { case (k, v) => v.fold(hc.unset(k))(hc.set(k, _)) }
       spark.conf.unset("fs.file.impl")
@@ -126,7 +126,6 @@ class Round17OptSpec extends SparkSpec {
     * weights, subset overlap). */
   test("sorted_dot == join-aggregate sparse dot, on real postings") {
     import spark.implicits._
-    graft.plans.SortedDotLong.register(spark)
     // unit edges
     val cases = Seq(
       (Seq("a", "b", "c"), Seq(2L, 3L, 5L), Seq("b", "c", "d"),
@@ -136,7 +135,8 @@ class Round17OptSpec extends SparkSpec {
       (Seq("a", "z"), Seq(1L, 1L), Seq("a", "z"), Seq(1L, 1L), 2L))
     cases.zipWithIndex.foreach { case ((ka, va, kb, vb, want), i) =>
       val got = Seq((ka, va, kb, vb)).toDF("ka", "va", "kb", "vb")
-        .selectExpr("sorted_dot(ka, va, kb, vb) AS d").head.getLong(0)
+        .select(SortedDotLong.of(col("ka"), col("va"), col("kb"), col("vb")))
+        .head.getLong(0)
       assert(got == want, s"case $i: got $got, want $want")
     }
     // real postings: kernel dot over sorted doc vectors == the legacy
@@ -149,7 +149,8 @@ class Round17OptSpec extends SparkSpec {
         col("ws").as("wsa")), "da")
       .join(dv.select(col("doc_id").as("db"), col("tks").as("tkb"),
         col("ws").as("wsb")), "db")
-      .selectExpr("da", "db", "sorted_dot(tka, wsa, tkb, wsb) AS dot")
+      .select(col("da"), col("db"),
+        SortedDotLong.of(col("tka"), col("wsa"), col("tkb"), col("wsb")).as("dot"))
       .orderBy("da", "db").collect().map(_.toString).toSeq
     val legacy = cand
       .join(wp.select(col("doc_id").as("da"), col("tk"),

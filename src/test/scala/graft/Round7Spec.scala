@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.CosineSim
 import org.apache.spark.sql.functions._
 
 /** Gates for the round-7 wave (QRound7): the IVF-PQ composition must
@@ -22,8 +23,6 @@ class Round7Spec extends SparkSpec {
   }
 
   test("IVF-PQ: recall@10 >= 0.8 vs exact brute force on clustered data") {
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     // 64-dim so the 4x16 subspace split applies unchanged
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
     planted(8, 300, 64, 0.15)
@@ -163,8 +162,6 @@ class Round7Spec extends SparkSpec {
   test("IVF-PQ: recall column agrees with a driver-side exact recompute") {
     // on the real sf tables: recompute exact top-10 driver-side and check
     // the engine's self-reported recall@10 equals the true overlap
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     val out = SparkEntry.queries("sim_ann_ivfpq")(spark, sf)
     val ann = out.select("qid", "vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -177,7 +174,7 @@ class Round7Spec extends SparkSpec {
       .partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
     val truth = e.crossJoin(broadcast(q))
       .select(col("qid"), col("vec_id"),
-        expr("floor(cosine_sim(qv, v) * 10000) / 10000.0").as("score"))
+        sources.Tables.trunc4(CosineSim.of(col("qv"), col("v"))).as("score"))
       .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
       .select("qid", "vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap

@@ -11,8 +11,6 @@ class Round7bSpec extends SparkSpec {
   // ---- dedup_semdedup ----
 
   test("dedup_semdedup: on planted clusters the verdict fires and matches a driver-side replay of the removal rule") {
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     // 4 tight clusters of 30 → heavy semantic duplication by construction
     val rnd = new scala.util.Random(7)
     val centers = Array.fill(4, 64)(rnd.nextDouble() + 0.5)
@@ -144,8 +142,6 @@ class Round7bSpec extends SparkSpec {
   }
 
   test("plan shapes: semdedup pairs stay an equi-join on cell, EWMA is one partitioned window, phash adjacency broadcasts") {
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     // gate the RAW verdict dataflow — the declared key reads the memoized
     // localCheckpoint of this plan, whose executed plan is just a cached
     // scan + sort (see semdedupVerdict)
@@ -172,8 +168,6 @@ class Round7bSpec extends SparkSpec {
   // ---- emb_pca_project ----
 
   test("emb_pca_project: recovers a planted dominant direction (|corr| > 0.95 with the planted coefficient)") {
-    graft.functions.VecCentroid.register(spark)
-    graft.plans.CosineSim.register(spark)
     val rnd = new scala.util.Random(11)
     val dim = 64
     val u = Array.fill(dim)(rnd.nextDouble() - 0.5)
@@ -206,8 +200,6 @@ class Round7bSpec extends SparkSpec {
   }
 
   test("emb_pca_project2: deflation recovers a planted SECOND direction, decorrelated from the first") {
-    graft.functions.VecCentroid.register(spark)
-    graft.plans.CosineSim.register(spark)
     val rnd = new scala.util.Random(13)
     val dim = 64
     val u1r = Array.fill(dim)(rnd.nextDouble() - 0.5)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.CosineSim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,8 +22,6 @@ class Round9Spec extends SparkSpec {
   }
 
   test("sim_ann_nsw: recall@10 >= 0.8 vs brute force on clustered data") {
-    graft.plans.CosineSim.register(spark)
-    graft.functions.VecCentroid.register(spark)
     import spark.implicits._
     val e = planted(10, 200, 16, 0.1).toDF("vec_id", "v")
     val cent = operators.AnnKMeans.centroids(e, 8, 3)
@@ -32,7 +31,7 @@ class Round9Spec extends SparkSpec {
     val w = Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))
     val truth = e.select(col("vec_id"), col("v").as("cv")).join(broadcast(q))
       .select(col("qid"), col("vec_id"),
-        expr("floor(cosine_sim(qv, cv) * 10000) / 10000.0").as("score"))
+        sources.Tables.trunc4(CosineSim.of(col("qv"), col("cv"))).as("score"))
       .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
       .select("qid", "vec_id")
     val out = operators.QRound9.nswSearch(e, edges, truth)

@@ -40,7 +40,6 @@ class Round9cSpec extends SparkSpec {
 
   test("text_ngram_novelty: duplicate doc owns nothing, min doc owns all") {
     import spark.implicits._
-    graft.functions.TrigramShingles.register(spark)
     val sets = Seq(
       (1L, Seq("a b c", "b c d")),
       (2L, Seq("a b c", "b c d")), // exact shingle copy of doc 1

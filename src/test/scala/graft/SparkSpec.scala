@@ -5,7 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one local session per suite (SURVEY §5). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = SparkSpec.session()
+
+  val sf: String = "/root/testdata/sf0.001"
+}
+
+object SparkSpec {
+  /** The JVM's active test session, built anew if none is live. */
+  def session(): SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
@@ -16,6 +23,4 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.warehouse.dir",
       s"/tmp/graft_warehouse_${ProcessHandle.current().pid()}")
     .getOrCreate()
-
-  val sf: String = "/root/testdata/sf0.001"
 }
