@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
 
 /** Per-round benchmark: times every SparkEntry query at the given sf.
@@ -106,12 +107,12 @@ object Bench {
     // Untimed warm-up: session/executor init, codegen compiler, parquet
     // footer caches — so per-query times measure the queries, not startup.
     spark.range(1000).selectExpr("sum(id)").collect()
-    try noop("agg_group_q1") catch { case _: Throwable => }
+    try noop("agg_group_q1") catch { case NonFatal(_) => }
     // A failed query records -1 (visible marker), never a fake elapsed time.
     def timed(name: String): Double = {
       val t0 = System.nanoTime()
       try { noop(name); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
     }
     // Memo-build attribution (VERDICT r12 #2): exactly one key per run
     // pays each shared session-memo's one-off build inside its COLD time,

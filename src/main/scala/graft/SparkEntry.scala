@@ -34,10 +34,21 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    packs.flatMap(_.queries).toMap
+    merged(packs.map(_.queries))
 
   /** DuckDB-runnable ANSI SQL per key; keys absent here (HLL sketch,
     * watermark semantics) are covered by scalatest instead. */
   val oracleSql: Map[String, String] =
-    packs.flatMap(_.oracles).toMap
+    merged(packs.map(_.oracles))
+
+  /** The packs' maps as one, failing on a key that two packs declare
+    * (a plain `toMap` would silently keep the last pack's entry). */
+  private[graft] def merged[V](maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity).collect {
+      case (k, ks) if ks.size > 1 => k
+    }
+    require(dups.isEmpty,
+      s"keys declared by more than one pack: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.flatten.toMap
+  }
 }

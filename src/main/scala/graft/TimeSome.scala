@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object TimeSome {
   val usage = "usage: TimeSome [--conf k=v | --conf=k=v]... key..."
 
@@ -50,7 +51,7 @@ object TimeSome {
     // --conf k=v args apply session confs before any query runs (A/B tool)
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.range(1000).selectExpr("sum(id)").collect()
-    try SparkEntry.queries("agg_group_q1")(spark, sfDir).write.format("noop").mode("overwrite").save() catch { case _: Throwable => }
+    try SparkEntry.queries("agg_group_q1")(spark, sfDir).write.format("noop").mode("overwrite").save() catch { case NonFatal(_) => }
     for (name <- names; _ <- 1 to 2) {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()

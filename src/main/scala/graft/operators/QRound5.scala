@@ -4,6 +4,7 @@ import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-5 coverage — four fronts (SURVEY §2.14):
@@ -506,8 +507,7 @@ object QRound5 extends QueryPack {
     * (2·price·n > 3·Σprice), so no double rounding can flip a boundary
     * row in either engine. */
   private def sqlScalarSubquery(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "orders").createOrReplaceTempView("g_orders")
-    s.sql(
+    SqlText.on(s,
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM g_orders o
         |WHERE 2 * CAST(o_totalprice AS DECIMAL(18,4)) *
@@ -515,7 +515,7 @@ object QRound5 extends QueryPack {
         |     WHERE o2.o_custkey = o.o_custkey)
         |  > 3 * (SELECT SUM(CAST(o_totalprice AS DECIMAL(18,4)))
         |         FROM g_orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin)
+        |ORDER BY o_orderkey""".stripMargin)("g_orders" -> t(s, d, "orders"))
   }
 
   private val oSqlScalarSubquery =
@@ -571,17 +571,13 @@ object QRound5 extends QueryPack {
     * revenue aggregate uses the same decimal spelling as agg_group_q1 so
     * the hash is engine-stable. Oracle: the near-identical ANSI text. */
   private def sqlTextTpchQ3(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "customer").createOrReplaceTempView("g_customer")
-    t(s, d, "orders").createOrReplaceTempView("g_orders")
-    t(s, d, "lineitem").createOrReplaceTempView("g_lineitem")
     // g_revsum4u: the 128-bit integer spelling of the decimal revenue
-    // sum (registered session aggregate, bit-identical values —
-    // Tables.registerIntSums). The SQL-text surface (parse, joins,
-    // pushdown, TakeOrdered) is the point of this key and is unchanged;
-    // the filter is selective so the per-group Decimal128 rebuild is
-    // cheap next to the 6M-row probe side it replaced decimal math on.
-    registerIntSums(s)
-    s.sql(
+    // sum (bit-identical values — Tables.sqlIntSums). The SQL-text
+    // surface (parse, joins, pushdown, TakeOrdered) is the point of this
+    // key and is unchanged; the filter is selective so the per-group
+    // Decimal128 rebuild is cheap next to the 6M-row probe side it
+    // replaced decimal math on.
+    SqlText.on(s,
       """SELECT l_orderkey,
         |  CAST(g_revsum4u(l_extendedprice, l_discount) AS DOUBLE) AS revenue,
         |  o_orderdate, o_orderpriority
@@ -592,7 +588,9 @@ object QRound5 extends QueryPack {
         |  AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
         |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin)
+        |LIMIT 10""".stripMargin)(
+      "g_customer" -> t(s, d, "customer"), "g_orders" -> t(s, d, "orders"),
+      "g_lineitem" -> t(s, d, "lineitem"))
   }
 
   private val oSqlTextTpchQ3 =

@@ -5,6 +5,7 @@ import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-5 second wave (SURVEY §2.15) — six surfaces nothing else covers:
@@ -244,15 +245,14 @@ object QRound5b extends QueryPack {
     * is the same single-shuffle window top-k as `topk_per_group`, not
     * a per-outer-row re-execution. */
   private def sqlLateralTopk(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "nation").createOrReplaceTempView("g_nation")
-    t(s, d, "customer").createOrReplaceTempView("g_customer")
-    s.sql(
+    SqlText.on(s,
       """SELECT n.n_name, t.c_name, t.c_acctbal
         |FROM g_nation n JOIN LATERAL (
         |  SELECT c_name, c_acctbal FROM g_customer c
         |  WHERE c.c_nationkey = n.n_nationkey
         |  ORDER BY c_acctbal DESC, c_name LIMIT 3) t
-        |ORDER BY n.n_name, t.c_acctbal DESC, t.c_name""".stripMargin)
+        |ORDER BY n.n_name, t.c_acctbal DESC, t.c_name""".stripMargin)(
+      "g_nation" -> t(s, d, "nation"), "g_customer" -> t(s, d, "customer"))
   }
 
   private val oSqlLateralTopk =
@@ -307,9 +307,7 @@ object QRound5b extends QueryPack {
     * broadcast null-aware anti join (the list side is an aggregate —
     * tiny); no O(N²) fallback. */
   private def sqlNotInNull(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "orders").createOrReplaceTempView("g_orders")
-    t(s, d, "customer").createOrReplaceTempView("g_customer")
-    s.sql(
+    SqlText.on(s,
       """WITH withnull AS (
         |  SELECT CASE WHEN o_totalprice > 200000 THEN NULL ELSE o_custkey END AS k
         |  FROM g_orders WHERE o_orderpriority = '1-URGENT')
@@ -321,7 +319,8 @@ object QRound5b extends QueryPack {
         |   WHERE c_custkey NOT IN (SELECT k FROM withnull)) AS n_anti_withnull,
         |  (SELECT count(*) FROM g_customer
         |   WHERE c_custkey IN (SELECT k FROM withnull)) AS n_semi_withnull,
-        |  (SELECT count(*) FROM withnull WHERE k IS NULL) AS n_nulls""".stripMargin)
+        |  (SELECT count(*) FROM withnull WHERE k IS NULL) AS n_nulls""".stripMargin)(
+      "g_orders" -> t(s, d, "orders"), "g_customer" -> t(s, d, "customer"))
   }
 
   private val oSqlNotInNull =

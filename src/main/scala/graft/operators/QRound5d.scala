@@ -5,6 +5,7 @@ import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-5 fourth wave (SURVEY §2.17) — six surfaces nothing else covers:
@@ -314,8 +315,7 @@ object QRound5d extends QueryPack {
     * ONE partial-aggregated scan pass (no per-branch scans), grouped on
     * the 3-value flag key. */
   private def sqlFilterAgg(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "lineitem").createOrReplaceTempView("g_lineitem")
-    s.sql(
+    SqlText.on(s,
       """SELECT l_returnflag,
         |  count(*) AS n_all,
         |  count(*) FILTER (WHERE l_quantity > 25) AS n_bulk,
@@ -324,7 +324,8 @@ object QRound5d extends QueryPack {
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4)))
         |    FILTER (WHERE l_tax = 0) AS DOUBLE) AS rev_taxfree
         |FROM g_lineitem
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)(
+      "g_lineitem" -> t(s, d, "lineitem"))
   }
 
   private val oSqlFilterAgg =

@@ -5,6 +5,7 @@ import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-5 sixth wave (SURVEY §2.19) — four surfaces nothing else covers:
@@ -39,8 +40,7 @@ object QRound5f extends QueryPack {
     * iteration joins the full table against the (small) frontier, which
     * Spark can broadcast. The same spelling runs in DuckDB verbatim. */
   private def sqlRecursiveCte(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "customer").createOrReplaceTempView("g_customer")
-    s.sql(
+    SqlText.on(s,
       """WITH RECURSIVE walk(c_custkey, depth) AS (
         |  SELECT CAST(0 AS BIGINT) AS c_custkey, 0 AS depth
         |  UNION ALL
@@ -50,7 +50,8 @@ object QRound5f extends QueryPack {
         |SELECT depth, count(*) AS n_nodes,
         |  CAST(sum(c_custkey) AS BIGINT) AS sum_keys,
         |  min(c_custkey) AS min_key, max(c_custkey) AS max_key
-        |FROM walk GROUP BY depth ORDER BY depth""".stripMargin)
+        |FROM walk GROUP BY depth ORDER BY depth""".stripMargin)(
+      "g_customer" -> t(s, d, "customer"))
   }
 
   private val oSqlRecursiveCte =

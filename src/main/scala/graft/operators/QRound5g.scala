@@ -86,12 +86,11 @@ object QRound5g extends QueryPack {
     * and most folders are dropped wholesale by partition pruning
     * without reading a row (the scan_partition_prune layout). */
   private def maintVacuumTtl(s: SparkSession, d: String): DataFrame = {
-    val cutoffExpr = "(select max(unix_micros(cast(ts as timestamp))) " +
-      s"from __vac_src) - ${ttlDays}L * 86400000000L"
+    val micros = expr("unix_micros(cast(ts as timestamp))")
     val dir = QRound3.staged(s, d, "vacuum") { dir =>
       val src = t(s, d, "events")
-      src.createOrReplaceTempView("__vac_src")
-      src.filter(expr(s"unix_micros(cast(ts as timestamp)) >= $cutoffExpr"))
+      val cutoff = src.select(max(micros)).scalar() - lit(ttlDays * 86400000000L)
+      src.filter(micros >= cutoff)
         .write.mode("overwrite").parquet(s"$dir/kept")
     }
     val kept = s.read.parquet(s"$dir/kept")

@@ -4,6 +4,7 @@ import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 
 /** Round-5 eighth wave (SURVEY §2.21) — the Spark 4 SQL-surface triplet,
   * each feature checked against a classic-SQL DuckDB oracle:
@@ -60,16 +61,14 @@ object QRound5h extends QueryPack {
     * plan. Scale shape: identical to agg_group_q1 (one partial-
     * aggregated scan), because pipe syntax is pure parser surface. */
   private def sqlPipeSyntax(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "lineitem").createOrReplaceTempView("g_lineitem")
     // g_sum4u/g_revrow4u: the 128-bit integer spellings of the decimal
-    // sums (registered session functions, bit-identical values —
-    // Tables.registerIntSums). Every pipe-syntax parser surface of the
-    // original (WHERE / EXTEND / AGGREGATE..GROUP BY / ORDER BY) is
-    // unchanged; EXTEND now carries the exact 1e4-scaled BIGINT revenue
-    // term instead of the DECIMAL product — same quantization casts,
-    // same summed value through DECIMAL(38,4) -> DOUBLE.
-    registerIntSums(s)
-    s.sql(
+    // sums (bit-identical values — Tables.sqlIntSums). Every pipe-syntax
+    // parser surface of the original (WHERE / EXTEND / AGGREGATE..GROUP
+    // BY / ORDER BY) is unchanged; EXTEND now carries the exact
+    // 1e4-scaled BIGINT revenue term instead of the DECIMAL product —
+    // same quantization casts, same summed value through
+    // DECIMAL(38,4) -> DOUBLE.
+    SqlText.on(s,
       """FROM g_lineitem
         ||> WHERE l_shipdate < TIMESTAMP '2001-01-01 00:00:00'
         ||> EXTEND g_revrow4u(l_extendedprice, l_discount) AS disc_price_u
@@ -77,7 +76,8 @@ object QRound5h extends QueryPack {
         |     CAST(g_sum4u(l_quantity) AS DOUBLE) AS sum_qty,
         |     CAST(g_sumu4(disc_price_u) AS DOUBLE) AS sum_disc_price
         |   GROUP BY l_returnflag, l_linestatus
-        ||> ORDER BY l_returnflag, l_linestatus""".stripMargin)
+        ||> ORDER BY l_returnflag, l_linestatus""".stripMargin)(
+      "g_lineitem" -> t(s, d, "lineitem"))
   }
 
   private val oSqlPipeSyntax =

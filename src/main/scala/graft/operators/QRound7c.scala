@@ -5,6 +5,7 @@ import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 
 /** Round-7 third wave — distributed BPE merge-table learning.
   *
@@ -195,7 +196,6 @@ object QRound7c extends QueryPack {
     * replay it by textual inlining. Decimal arithmetic inside the function
     * keeps the money sums exact (the sql_text_tpch_q3 spelling). */
   private def sqlUdfInline(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "lineitem").createOrReplaceTempView("g_lineitem")
     s.sql(
       """CREATE OR REPLACE TEMPORARY FUNCTION g_disc_price(
         |  p DECIMAL(12,2), disc DECIMAL(4,2)) RETURNS DECIMAL(18,4)
@@ -205,7 +205,7 @@ object QRound7c extends QueryPack {
         |RETURNS STRING
         |RETURN CASE WHEN q < 10 THEN 'low' WHEN q < 30 THEN 'mid'
         |            ELSE 'high' END""".stripMargin)
-    s.sql(
+    SqlText.on(s,
       """SELECT l_returnflag, g_qty_band(l_quantity) AS qty_band,
         |  count(*) AS n,
         |  CAST(SUM(g_disc_price(CAST(l_extendedprice AS DECIMAL(12,2)),
@@ -213,7 +213,8 @@ object QRound7c extends QueryPack {
         |    AS revenue
         |FROM g_lineitem
         |GROUP BY l_returnflag, g_qty_band(l_quantity)
-        |ORDER BY l_returnflag, qty_band""".stripMargin)
+        |ORDER BY l_returnflag, qty_band""".stripMargin)(
+      "g_lineitem" -> t(s, d, "lineitem"))
   }
 
   private val oSqlUdfInline =

@@ -4,6 +4,7 @@ import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-7 fourth wave — corpus governance and the evaluation tier
@@ -686,15 +687,15 @@ object QRound7d extends QueryPack {
     * Round7dSpec asserts via PushedFilters. The oracle replays with the
     * literals inlined — by construction the same query. */
   private def sqlParameterized(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "orders").createOrReplaceTempView("g_orders")
-    s.sql(
+    SqlText.on(s,
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
         |FROM g_orders
         |WHERE o_totalprice >= :minp AND o_orderpriority <> :skip
         |GROUP BY o_orderstatus, o_orderpriority
         |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-      Map("minp" -> 50000, "skip" -> "3-MEDIUM"))
+      Map("minp" -> 50000, "skip" -> "3-MEDIUM"))(
+      "g_orders" -> t(s, d, "orders"))
   }
 
   private val oSqlParameterized =

@@ -4,6 +4,7 @@ import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 27 (SURVEY §2.28):
@@ -75,8 +76,7 @@ object QRound9ab extends QueryPack {
     * readable, and a parser surface Spark 4 and DuckDB both support.
     * Must plan as ONE Window node (shared frame), not three. */
   private def sqlNamedWindow(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "events").createOrReplaceTempView("g_ev_nw")
-    s.sql(
+    SqlText.on(s,
       """SELECT user_id, event_id, CAST(rn AS BIGINT) AS rn, run_n,
         |  CAST(floor(run_v * 1e2 + 5e-1) AS BIGINT) AS run_cents
         |FROM (
@@ -87,7 +87,7 @@ object QRound9ab extends QueryPack {
         |  FROM g_ev_nw
         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
         |WHERE rn <= 3
-        |ORDER BY user_id, rn""".stripMargin)
+        |ORDER BY user_id, rn""".stripMargin)("g_ev_nw" -> t(s, d, "events"))
   }
 
   private val oSqlNamedWindow =

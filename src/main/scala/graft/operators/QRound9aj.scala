@@ -5,6 +5,7 @@ import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 
@@ -190,9 +191,9 @@ object QRound9aj extends QueryPack {
     * Scale shape: the EXCEPT projection prunes columns AT THE SCAN
     * (ReadSchema drops the excluded fields); the filter pushes down. */
   private[graft] def starExcept(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "orders").createOrReplaceTempView("orders_se")
-    s.sql("""SELECT * EXCEPT (o_orderpriority, o_orderstatus)
-             FROM orders_se WHERE o_totalprice > 4e5 ORDER BY ALL""")
+    SqlText.on(s, """SELECT * EXCEPT (o_orderpriority, o_orderstatus)
+             FROM orders_se WHERE o_totalprice > 4e5 ORDER BY ALL""")(
+      "orders_se" -> t(s, d, "orders"))
   }
 
   private val oSqlStarExcept =

@@ -4,6 +4,7 @@ import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 36 (SURVEY §2.28):
@@ -181,8 +182,7 @@ object QRound9ak extends QueryPack {
     * folds it into a broadcast; the fact side aggregates first (the
     * weight join happens on the 5-row rollup, not the raw events). */
   private[graft] def inlineValues(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "events").createOrReplaceTempView("events_iv")
-    s.sql(s"""
+    SqlText.on(s, """
       WITH w(event_type, wt) AS (VALUES
         ('view', 1L), ('click', 3L), ('signup', 10L),
         ('purchase', 25L), ('error', 0L)),
@@ -192,7 +192,7 @@ object QRound9ak extends QueryPack {
       SELECT g.event_type, g.n, w.wt, g.n * w.wt AS weighted_n,
         floor(g.mass * w.wt * 1e4) / 1e4 AS weighted_mass
       FROM g JOIN w ON g.event_type = w.event_type
-      ORDER BY g.event_type""")
+      ORDER BY g.event_type""")("events_iv" -> t(s, d, "events"))
   }
 
   private val oSqlInlineValues =

@@ -27,7 +27,7 @@ object QRound9bc extends QueryPack {
     * aggregate pushdown (spark.sql.parquet.aggregatePushdown + empty
     * useV1SourceList): row groups contribute footer stats, no pixel of
     * row data is decoded. The result row materializes inside the config
-    * scope (configs restored after — the dynamic-overwrite pattern);
+    * scope (both confs are session-only, restored after);
     * ExtensionsSpec-style plan proof lives in Round9bcSpec, which
     * asserts `PushedAggregation` in the executed plan.
     *

@@ -4,6 +4,7 @@ import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 60 (SURVEY §2.28):
@@ -162,25 +163,19 @@ object QRound9bi extends QueryPack {
     * chain identically.
     *
     * Scale shape: one aggregate; the alias chain is pure projection. */
-  private val laSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  private[graft] def lateralAlias(s: SparkSession, d: String): DataFrame = {
-    val vn = s"li_la_${laSeq.incrementAndGet()}"
-    t(s, d, "lineitem").createOrReplaceTempView(vn)
-    val out = s.sql(
-      s"""SELECT l_returnflag,
+  private[graft] def lateralAlias(s: SparkSession, d: String): DataFrame =
+    SqlText.on(s,
+      """SELECT l_returnflag,
         |  count(*) AS n,
         |  n * 1e2 / 6e4 AS raw_pct,
         |  floor(raw_pct) AS pct_floor,
         |  CASE WHEN pct_floor >= 40 THEN 'major' ELSE 'minor' END AS band
-        |FROM $vn GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin)
-    s.catalog.dropTempView(vn)
-    out
+        |FROM g_lineitem GROUP BY l_returnflag
+        |ORDER BY l_returnflag""".stripMargin)(
+      "g_lineitem" -> t(s, d, "lineitem"))
       .select(col("l_returnflag"), col("n"),
         trunc4(col("raw_pct")).as("raw_pct"),
         col("pct_floor").cast(LongType).as("pct_floor"), col("band"))
-  }
 
   private val oSqlLateralAlias =
     """SELECT l_returnflag, n,

@@ -4,6 +4,7 @@ import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 65 (SURVEY §2.28):
@@ -63,8 +64,6 @@ object QRound9bn extends QueryPack {
 
   // ---- sql_grouping_id ----
 
-  private val gidSeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** CUBE with GROUPING()/GROUPING_ID(): every super-aggregate row
     * carries its provenance bits; rolled-up dimensions display the
     * '_ALL' sentinel so the output is null-free (sidestepping the
@@ -73,22 +72,19 @@ object QRound9bn extends QueryPack {
     * Scale shape: one cube aggregate (4 grouping sets), map-side
     * partials. */
   private[graft] def groupingId(s: SparkSession, d: String): DataFrame = {
-    val vn = s"li_gid_${gidSeq.incrementAndGet()}"
-    t(s, d, "lineitem").createOrReplaceTempView(vn)
-    val out = s.sql(
-      s"""SELECT coalesce(l_returnflag, '_ALL') AS rf,
+    SqlText.on(s,
+      """SELECT coalesce(l_returnflag, '_ALL') AS rf,
          |  coalesce(l_linestatus, '_ALL') AS ls,
          |  grouping(l_returnflag) AS g_rf, grouping(l_linestatus) AS g_ls,
          |  grouping_id(l_returnflag, l_linestatus) AS gid,
          |  count(*) AS n
-         |FROM $vn GROUP BY CUBE(l_returnflag, l_linestatus)
-         |ORDER BY gid, rf, ls""".stripMargin)
+         |FROM g_lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
+         |ORDER BY gid, rf, ls""".stripMargin)(
+      "g_lineitem" -> t(s, d, "lineitem"))
       .select(col("rf"), col("ls"),
         col("g_rf").cast(IntegerType).as("g_rf"),
         col("g_ls").cast(IntegerType).as("g_ls"),
         col("gid").cast(LongType).as("gid"), col("n"))
-    s.catalog.dropTempView(vn)
-    out
   }
 
   private val oSqlGroupingId =

@@ -141,7 +141,7 @@ object QRound9br extends QueryPack {
     val nNodes = mr.getLong(1)
     val bigD = dmax + 1L
     // LAZY per-round checkpoints + an explicit broadcast of the V-row
-    // state (OPTIMIZATION r16, re-measured via GraphProbe): the r11 A/B
+    // state (OPTIMIZATION r16): the r11 A/B
     // that kept eager rounds predates the shared codir memo — against
     // the cached 2E-row edge table the lazy single-job chain runs the 4
     // rounds + top-k in ~2.6 s vs ~4.6 s eager (each eager round paid a

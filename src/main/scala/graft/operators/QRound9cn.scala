@@ -5,6 +5,7 @@ import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 91 (SURVEY §2.28):
@@ -190,13 +191,13 @@ object QRound9cn extends QueryPack {
     *
     * Scale shape: one map-side-partial aggregate on a 6-value key. */
   private def sqlOrderByAll(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "lineitem").createOrReplaceTempView("g_li_oba")
-    s.sql(
+    SqlText.on(s,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
         |    AS sum_qty
         |FROM g_li_oba
-        |GROUP BY ALL ORDER BY ALL""".stripMargin)
+        |GROUP BY ALL ORDER BY ALL""".stripMargin)(
+      "g_li_oba" -> t(s, d, "lineitem"))
   }
 
   private val oSqlOrderByAll =

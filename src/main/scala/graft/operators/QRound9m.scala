@@ -7,6 +7,7 @@ import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 12 (SURVEY §2.27):
@@ -36,19 +37,18 @@ object QRound9m extends QueryPack {
     * min/max on doubles are exact; the mass total uses the money-decimal
     * sum (values are 2-dp-exact). */
   private def sqlUnpivot(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "lineitem").createOrReplaceTempView("g_lineitem")
     // g_sum4u: the 128-bit integer spelling of the DECIMAL(18,4) sum
-    // (registered session aggregate, bit-identical — Tables.sum128).
-    // The UNPIVOT parser clause — the point of this key — is unchanged;
-    // the Expand tripled the row count, so the per-row decimal buffer
-    // cost was paid 3x here (1.34 s warm, the slowest sql_* key).
-    registerIntSums(s)
-    s.sql(
+    // (bit-identical — Tables.sqlIntSums). The UNPIVOT parser clause —
+    // the point of this key — is unchanged; the Expand tripled the row
+    // count, so the per-row decimal buffer cost was paid 3x here
+    // (1.34 s warm, the slowest sql_* key).
+    SqlText.on(s,
       """SELECT metric, count(*) AS n, min(v) AS min_v, max(v) AS max_v,
         |  CAST(g_sum4u(v) AS DOUBLE) AS sum_v
         |FROM g_lineitem
         |  UNPIVOT (v FOR metric IN (l_extendedprice, l_quantity, l_discount))
-        |GROUP BY metric ORDER BY metric""".stripMargin)
+        |GROUP BY metric ORDER BY metric""".stripMargin)(
+      "g_lineitem" -> t(s, d, "lineitem"))
   }
 
   private val oSqlUnpivot =

@@ -4,6 +4,7 @@ import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 13 (SURVEY §2.27):
@@ -137,14 +138,14 @@ object QRound9n extends QueryPack {
     * surface Spark 4 and DuckDB implement with the same rule. Must plan
     * identically to the explicit GROUP BY (one partial+final pass). */
   private def sqlGroupByAll(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "orders").createOrReplaceTempView("g_orders")
-    s.sql(
+    SqlText.on(s,
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
         |    AS sum_price
         |FROM g_orders
         |GROUP BY ALL
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin)
+        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin)(
+      "g_orders" -> t(s, d, "orders"))
   }
 
   private val oSqlGroupByAll =

@@ -80,14 +80,9 @@ object QRound9t extends QueryPack {
           .as("cents"),
         col("event_type"))
       src.write.mode("overwrite").partitionBy("event_type").parquet(dir)
-      val before = s.conf.get("spark.sql.sources.partitionOverwriteMode",
-        "static")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try
-        src.filter(col("event_type") === "click" && col("cents") > 5000)
-          .write.mode("overwrite").partitionBy("event_type").parquet(dir)
-      finally
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", before)
+      src.filter(col("event_type") === "click" && col("cents") > 5000)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type").parquet(dir)
     }
 
   private def maintPartitionOverwrite(s: SparkSession, d: String): DataFrame =

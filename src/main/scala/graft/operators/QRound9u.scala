@@ -4,6 +4,7 @@ import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 20 (SURVEY §2.28):
@@ -33,15 +34,15 @@ object QRound9u extends QueryPack {
     * the identifier position). The bound query must plan exactly like
     * the literal spelling — pushdown and partial aggregation intact. */
   private def sqlIdentifierClause(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "events").createOrReplaceTempView("g_events_idc")
-    s.sql(
+    SqlText.on(s,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(floor(value * 1e2 + 5e-1) AS BIGINT)) AS BIGINT)
         |    AS cents
         |FROM IDENTIFIER(:tbl)
         |WHERE value > :minv
         |GROUP BY event_type ORDER BY event_type""".stripMargin,
-      Map("tbl" -> "g_events_idc", "minv" -> 10))
+      Map("tbl" -> "g_events_idc", "minv" -> 10))(
+      "g_events_idc" -> t(s, d, "events"))
   }
 
   private val oSqlIdentifierClause =

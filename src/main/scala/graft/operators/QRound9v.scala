@@ -5,6 +5,7 @@ import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 21 (SURVEY §2.28):
@@ -178,15 +179,14 @@ object QRound9v extends QueryPack {
     * no join). Top-30 corpus terms by total frequency, rank tiebroken
     * by term. */
   private def sqlLateralView(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "documents").createOrReplaceTempView("g_docs_lv")
-    s.sql(
+    SqlText.on(s,
       """SELECT tok, count(*) AS n
         |FROM g_docs_lv
         |LATERAL VIEW explode(split(lower(text), '[^a-z]+')) x AS tok
         |WHERE tok <> '' AND length(tok) >= 3
         |GROUP BY tok
         |ORDER BY n DESC, tok
-        |LIMIT 30""".stripMargin)
+        |LIMIT 30""".stripMargin)("g_docs_lv" -> t(s, d, "documents"))
   }
 
   private val oSqlLateralView =

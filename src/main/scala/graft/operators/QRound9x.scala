@@ -5,6 +5,7 @@ import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.types._
 
 /** Round-9 extension wave 23 (SURVEY §2.28):
@@ -179,16 +180,15 @@ object QRound9x extends QueryPack {
     * high-value urgent-ish order. Must plan as ONE semi hash join, never
     * a per-outer-row subquery execution. */
   private def sqlExistsCorrelated(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "customer").createOrReplaceTempView("g_cust_ex")
-    t(s, d, "orders").createOrReplaceTempView("g_ord_ex")
-    s.sql(
+    SqlText.on(s,
       """SELECT c_custkey, c_name, c_mktsegment
         |FROM g_cust_ex c
         |WHERE EXISTS (SELECT 1 FROM g_ord_ex o
         |              WHERE o.o_custkey = c.c_custkey
         |                AND o.o_totalprice > 400000)
         |ORDER BY c_custkey
-        |LIMIT 50""".stripMargin)
+        |LIMIT 50""".stripMargin)(
+      "g_cust_ex" -> t(s, d, "customer"), "g_ord_ex" -> t(s, d, "orders"))
   }
 
   private val oSqlExistsCorrelated =

@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, Multiply, Subtract, UnscaledValue}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.plans.{SumProd128, SumUnscaled128}
 
 /** Table loading + cross-engine determinism helpers shared by every query.
   *
@@ -77,20 +79,19 @@ object Tables {
   // exactly like decimal addition, so results are bit-identical. The
   // final DECIMAL(38,s) -> DOUBLE conversion happens once per group,
   // through the same value space as before.
-  private def expr2col(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+  private def expr2col(e: Expression): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(e)
 
-  private def col2expr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+  private def col2expr(c: Column): Expression =
     org.apache.spark.sql.graft.ColumnBridge.expression(c)
 
   /** Exact unscaled value (x·10^4 as BIGINT) of the dec4 quantization. */
   private def unscaled4(c: Column): Column =
-    expr2col(org.apache.spark.sql.catalyst.expressions.UnscaledValue(
-      col2expr(dec4(c))))
+    expr2col(UnscaledValue(col2expr(dec4(c))))
 
   /** 128-bit exact SUM of a pre-scaled BIGINT column, as DECIMAL(38,s). */
   def sum128(c: Column, scale: Int): Column =
-    expr2col(graft.plans.SumUnscaled128(col2expr(c), scale)
+    expr2col(SumUnscaled128(col2expr(c), scale)
       .toAggregateExpression())
 
   /** Exact decimal SUM (order-independent), emitted as DOUBLE: both engines
@@ -158,51 +159,37 @@ object Tables {
     * value itself exceeds 64 bits (c³, c⁴, squares of unbounded
     * columns). Values identical to `sum((decA·decB).cast(DECIMAL))`. */
   def sumProd128(a: Column, b: Column, scale: Int): Column =
-    expr2col(graft.plans.SumProd128(col2expr(a), col2expr(b), scale)
+    expr2col(SumProd128(col2expr(a), col2expr(b), scale)
       .toAggregateExpression())
 
   private def unscaledMoney(c: Column): Column =
-    expr2col(org.apache.spark.sql.catalyst.expressions.UnscaledValue(
-      col2expr(money(c))))
+    expr2col(UnscaledValue(col2expr(money(c))))
 
   private def unscaledD42(c: Column): Column =
-    expr2col(org.apache.spark.sql.catalyst.expressions.UnscaledValue(
-      col2expr(c.cast(D42))))
+    expr2col(UnscaledValue(col2expr(c.cast(D42))))
 
-  /** Register the 128-bit sums as SQL temp functions so the SQL-TEXT
-    * surface keys (pipe syntax, UNPIVOT, TPC-H Q3 text) can use the same
-    * fast aggregates as the DataFrame API:
+  /** The 128-bit sums under the SQL names the SQL-text keys (pipe
+    * syntax, UNPIVOT, TPC-H Q3 text) call them by, bound into the parsed
+    * text by [[org.apache.spark.sql.graft.SqlText]] — no session
+    * function registry entry:
     *  - `g_sum4u(x)`   == SUM(CAST(x AS DECIMAL(18,4))) as DECIMAL(38,4)
     *  - `g_revsum4u(p, d)` == SUM(CAST(p AS DECIMAL(12,2)) *
     *    (1 - CAST(d AS DECIMAL(4,2)))) as DECIMAL(38,4)
+    *  - `g_revrow4u(p, d)`: the exact 1e4-scaled BIGINT revenue term of
+    *    one row (scalar)
+    *  - `g_sumu4(x)`: the sum of an ALREADY 1e4-scaled BIGINT column
     * (same per-row quantization casts; only the accumulation changes —
-    * values bit-identical, see sum128). Idempotent per session. */
-  def registerIntSums(s: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val reg = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("g_sum4u",
-      (es: Seq[Expression]) =>
-        graft.plans.SumUnscaled128(UnscaledValue(Cast(es.head, D184)), 4),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("g_revsum4u",
-      (es: Seq[Expression]) =>
-        graft.plans.SumUnscaled128(
-          Multiply(
-            UnscaledValue(Cast(es.head, D122)),
-            Subtract(Literal(100L), UnscaledValue(Cast(es(1), D42)))), 4),
-      "scala_udf")
-    // scalar: the exact 1e4-scaled BIGINT revenue term per row
-    reg.createOrReplaceTempFunction("g_revrow4u",
-      (es: Seq[Expression]) =>
-        Multiply(
-          UnscaledValue(Cast(es.head, D122)),
-          Subtract(Literal(100L), UnscaledValue(Cast(es(1), D42)))),
-      "scala_udf")
-    // aggregate over an ALREADY-scaled BIGINT column
-    reg.createOrReplaceTempFunction("g_sumu4",
-      (es: Seq[Expression]) => graft.plans.SumUnscaled128(es.head, 4),
-      "scala_udf")
+    * values bit-identical, see sum128). */
+  val sqlIntSums: Map[String, Seq[Expression] => Expression] = {
+    def revRow(es: Seq[Expression]): Expression =
+      Multiply(UnscaledValue(Cast(es.head, D122)),
+        Subtract(Literal(100L), UnscaledValue(Cast(es(1), D42))))
+    Map(
+      "g_sum4u" -> ((es: Seq[Expression]) =>
+        SumUnscaled128(UnscaledValue(Cast(es.head, D184)), 4)),
+      "g_revsum4u" -> ((es: Seq[Expression]) => SumUnscaled128(revRow(es), 4)),
+      "g_revrow4u" -> revRow _,
+      "g_sumu4" -> ((es: Seq[Expression]) => SumUnscaled128(es.head, 4)))
   }
 
   // ---- Oracle-side (DuckDB SQL) twins of the helpers above ----

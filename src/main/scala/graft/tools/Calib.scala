@@ -1,7 +1,7 @@
 package graft.tools
 
 /** Standalone copy of Bench's CPU calibration probe, for adjudicating
-  * TimeOne head-to-heads: run this before/alongside a standalone timing
+  * TimeSome head-to-heads: run this before/alongside a standalone timing
   * session to record the machine's effective speed. Per BASELINE.md's
   * normalization rule, per-key comparisons across runs are only
   * adjudicable when the runs' `calib_parallel` values are within ~20%;

@@ -13,7 +13,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * companion wraps its Expression in a Column here (`CosineSim.of`,
   * `Tables.sum128`, ...), with no function-registry entry and no SQL
   * text to parse. SQL names exist only where a session opts in through
-  * [[GraftExtensions]]. */
+  * [[GraftExtensions]]; the engine's own SQL text reaches its tables and
+  * 128-bit sums by plan, through [[SqlText]]. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -14,6 +14,14 @@ class OperatorSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("pack merge fails on a key two packs declare, naming it") {
+    assert(SparkEntry.merged(Seq(Map("a" -> 1), Map("b" -> 2))) ===
+      Map("a" -> 1, "b" -> 2))
+    val e = intercept[IllegalArgumentException](SparkEntry.merged(
+      Seq(Map("a" -> 1, "x" -> 1), Map("b" -> 2, "x" -> 2), Map("a" -> 3))))
+    assert(e.getMessage.contains("a, x"), e.getMessage)
+  }
+
   test("flagship entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() === 6)
   }

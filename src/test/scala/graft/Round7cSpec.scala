@@ -72,6 +72,7 @@ class Round7cSpec extends SparkSpec {
     // would kill codegen and pushdown, which is the point of SQL UDFs
     assert(!plan.toLowerCase.contains("scalaudf"),
       s"SQL UDF compiled to a black-box UDF call:\n$plan")
+    sources.Tables.t(spark, sf, "lineitem").createOrReplaceTempView("g_lineitem")
     val twin = spark.sql(
       """SELECT l_returnflag,
         |  CASE WHEN l_quantity < 10 THEN 'low' WHEN l_quantity < 30 THEN 'mid'

@@ -144,6 +144,7 @@ class Round7dSpec extends SparkSpec {
       plan.contains("GreaterThanOrEqual(o_totalprice,50000"),
       s"bound :minp predicate did not reach the scan:\n$plan")
     // a hostile value binds as an inert string, never as SQL text
+    sources.Tables.t(spark, sf, "orders").createOrReplaceTempView("g_orders")
     val hostile = spark.sql(
       "SELECT count(*) AS n FROM g_orders WHERE o_orderpriority = :p",
       Map("p" -> "x' OR '1'='1"))
