@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round plan snapshotter: writes `.explain("formatted")` of
@@ -13,13 +12,7 @@ import java.nio.file.{Files, Paths}
   * committed plans are the ones the driver's bench actually executes. */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localBuilder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = args(0)
     val suffix = args(1)

@@ -28,6 +28,18 @@ object SparkEntry {
     QRound9ci, QRound9cj, QRound9ck, QRound9cl, QRound9cm, QRound9cn,
     QRound11, QRound12, QRound14, QRound15, QRound16, QStreaming)
 
+  /** A local session builder with the confs the engine needs: UTC session
+    * time, TIMESTAMP(NANOS) parquet read as raw longs (normalized by
+    * `Tables.t`), the RocksDB state store for the streaming keys, no UI. */
+  def localBuilder(master: String, partitions: Int): SparkSession.Builder =
+    SparkSession.builder().master(master)
+      .config("spark.sql.shuffle.partitions", partitions.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config("spark.ui.enabled", "false")
+
   /** Flagship query (TPC-H Q1 shape) on sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("agg_group_q1")(spark, "/root/testdata/sf0.001")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object TimeSome {
   val usage = "usage: TimeSome [--conf k=v | --conf=k=v]... key..."
@@ -40,13 +39,7 @@ object TimeSome {
       catch { case e: IllegalArgumentException =>
         System.err.println(e.getMessage); sys.exit(2) }
     val sfDir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localBuilder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // --conf k=v args apply session confs before any query runs (A/B tool)
     confs.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -27,9 +27,6 @@ import org.apache.spark.sql.types._
   */
 object QRound3 extends QueryPack {
 
-  private def docsToks(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents").withColumn("toks", split(col("text"), " "))
-
   // ---- SimHash near-dup pairs via banded Hamming join ----
 
   /** 60-bit SimHash (wider than text_simhash's 16-bit display sketch: on a
@@ -57,7 +54,7 @@ object QRound3 extends QueryPack {
     // repartition: the testdata parquet is one row group; one cheap shuffle
     // of the raw text buys full-width parallelism for the 60-bit hash work
     // (no-op shape on a real multi-file corpus — see QText.shingled).
-    docsToks(s, d).repartition(col("doc_id"))
+    QText.docsToks(s, d).repartition(col("doc_id"))
       .select(col("doc_id"), explode(col("toks")).as("word"))
       .withColumn("h", h)
       .groupBy("doc_id")
@@ -284,7 +281,7 @@ object QRound3 extends QueryPack {
 
   private def textStopwordFilter(s: SparkSession, d: String): DataFrame = {
     val sw = array(stopwords.map(lit): _*)
-    docsToks(s, d).select(
+    QText.docsToks(s, d).select(
       col("doc_id"),
       size(col("toks")).as("n_orig"),
       size(filter(col("toks"), t => !array_contains(sw, t))).as("n_kept"))

@@ -195,7 +195,13 @@ object QRound7c extends QueryPack {
     * beats a Scala UDF for simple logic and why the DuckDB oracle can
     * replay it by textual inlining. Decimal arithmetic inside the function
     * keeps the money sums exact (the sql_text_tpch_q3 spelling). */
-  private def sqlUdfInline(s: SparkSession, d: String): DataFrame = {
+  private def sqlUdfInline(caller: SparkSession, d: String): DataFrame = {
+    // the DDL runs on a clone: the caller's own functions keep their names,
+    // and a non-SQL one the clone inherited under a declared name (which
+    // CREATE OR REPLACE refuses to replace) is dropped from the clone only
+    val s = SqlText.cloned(caller)
+    Seq("g_disc_price", "g_qty_band")
+      .foreach(f => s.sql(s"DROP TEMPORARY FUNCTION IF EXISTS $f"))
     s.sql(
       """CREATE OR REPLACE TEMPORARY FUNCTION g_disc_price(
         |  p DECIMAL(12,2), disc DECIMAL(4,2)) RETURNS DECIMAL(18,4)

@@ -49,7 +49,7 @@ object QRound7d extends QueryPack {
   private def dcGrams(docs: DataFrame): DataFrame = {
     val base = docs
       .select(col("doc_id"), splitCol.as("split"),
-        filter(split(col("text"), " "), x => x =!= "").as("tk"))
+        tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= dcW)
     base.select(col("doc_id"), col("split"), explode(expr(
       s"transform(sequence(1, size(tk) - ${dcW - 1}), " +
@@ -205,7 +205,7 @@ object QRound7d extends QueryPack {
   private[graft] def bigramScores(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"), col("lang"),
-        filter(split(col("text"), " "), x => x =!= "").as("tk"))
+        tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= 2)
     val bg = toks.select(col("doc_id"), col("lang"), explode(expr(
       "transform(sequence(1, size(tk) - 1), " +
@@ -326,7 +326,7 @@ object QRound7d extends QueryPack {
     * pays. */
   private def ctShingles(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), filter(split(col("text"), " "), x => x =!= "").as("tk"))
+      .select(col("doc_id"), tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= ctW)
       .select(col("doc_id"), explode(array_distinct(expr(
         s"transform(sequence(1, size(tk) - ${ctW - 1}), " +
@@ -467,7 +467,7 @@ object QRound7d extends QueryPack {
   private[graft] def domainMix(docs: DataFrame): DataFrame = {
     val dom = docs
       .select(col("lang"), col("source"),
-        size(filter(split(col("text"), " "), x => x =!= "")).as("n_toks"))
+        size(tokens(col("text"))).as("n_toks"))
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
     val tot = dom.agg(sum(col("n_tokens")).as("total"),

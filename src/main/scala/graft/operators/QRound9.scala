@@ -197,37 +197,30 @@ object QRound9 extends QueryPack {
 
   // ---- stream_dedup_minhash: streaming near-dup admission control ----
 
-  // the dedup_lsh_pairs geometry (QText): b bands of r minhashes, band j's
-  // r hashes are the four 8-hex chunks of one seeded md5 per shingle
-  private val mbB = 8
-  private val mbR = 4
-
-  /** Per-row MinHash band keys: (doc_id, ts, text) → `mbB` rows
-    * (doc_id, ts, band, bkey). Unlike QText's explode+groupBy signature
-    * pipeline, every signature here is computed per ROW with HOFs
-    * (array_min over the per-shingle hash chunks) — entirely map-side,
-    * which is what makes the identical transform legal under Structured
-    * Streaming (no stateful aggregate before the dedup operator). Docs
-    * under 3 tokens have no shingles and emit no band rows (they are
-    * admitted vacuously by the rollup). */
+  /** Per-row MinHash band keys: (doc_id, ts, text) → `QText.lshB` rows
+    * (doc_id, ts, band, bkey), the dedup_lsh_pairs geometry. Unlike
+    * QText's explode+groupBy signature pipeline, every signature here is
+    * computed per ROW with HOFs (array_min over the per-shingle hash
+    * chunks) — entirely map-side, which is what makes the identical
+    * transform legal under Structured Streaming (no stateful aggregate
+    * before the dedup operator). The band keys are QText's. Docs under 3
+    * tokens have no shingles and emit no band rows (they are admitted
+    * vacuously by the rollup). */
   private[graft] def minhashBandRows(docs: DataFrame): DataFrame = {
+    import QText.{lshB, lshR}
     val withSh = docs
       .select(col("doc_id"), col("ts"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), col("ts"), TrigramShingles.of(col("toks")).as("shs"))
-    val hashed = (0 until mbB).foldLeft(withSh) { (df, j) =>
+    val hashed = (0 until lshB).foldLeft(withSh) { (df, j) =>
       df.withColumn(s"h$j",
         transform(col("shs"), sh => md5(concat(lit(s"$j|"), sh).cast(BinaryType))))
     }
-    val bandCols = (0 until mbB).map { j =>
-      struct(lit(j).as("band"),
-        md5(concat_ws(",", (0 until mbR).map(c =>
-          array_min(transform(col(s"h$j"), h => substring(h, c * 8 + 1, 8)))): _*)
-          .cast(BinaryType)).as("bkey"))
-    }
-    hashed.select(col("doc_id"), col("ts"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("ts"), col("bk.band").as("band"),
-        col("bk.bkey").as("bkey"))
+    val sig = hashed.select(col("doc_id") +: col("ts") +:
+      (for (j <- 0 until lshB; c <- 0 until lshR) yield
+        array_min(transform(col(s"h$j"), h => substring(h, c * 8 + 1, 8)))
+          .as(s"k${j * lshR + c}")): _*)
+    QText.bandKeys(sig, lshB, lshR, Seq("doc_id", "ts"))
   }
 
   /** Surviving band rows. Streaming: watermark + Spark 4's
@@ -293,22 +286,9 @@ object QRound9 extends QueryPack {
     minhashAdmittedFrom(docs, rows)
   }
 
-  private val oStreamDedupMinhash = {
-    val mins = (for (j <- 0 until mbB; c <- 0 until mbR) yield
-      s"min(substr(md5('$j|' || s), ${c * 8 + 1}, 8)) AS m${j}_$c")
-      .mkString(",\n    ")
-    val bands = (0 until mbB).map { j =>
-      val cat = (0 until mbR).map(c => s"m${j}_$c").mkString(" || ',' || ")
-      s"SELECT doc_id, $j AS band, md5($cat) AS bkey FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-       |  shl AS (SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-       |             for i in range(1, len(w)-1)]) AS shs FROM t WHERE len(w) >= 3),
-       |  ex AS (SELECT doc_id, unnest(shs) AS s FROM shl),
-       |  sig AS (SELECT doc_id,
-       |    $mins
-       |  FROM ex GROUP BY doc_id),
-       |  bands AS ($bands),
+  private val oStreamDedupMinhash =
+    s"""${QText.oMinhashSig(QText.oBandChunk)},
+       |  bands AS (${QText.oBandKeys(QText.lshB, QText.lshR, QText.oBandChunk)}),
        |  wn AS (SELECT doc_id, band, bkey, row_number() OVER (
        |      PARTITION BY band, bkey ORDER BY doc_id) AS rn FROM bands),
        |  per AS (SELECT doc_id, count(*) AS n_bands,
@@ -319,7 +299,6 @@ object QRound9 extends QueryPack {
        |  coalesce(per.n_won, 0) = coalesce(per.n_bands, 0) AS admitted
        |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin
-  }
 
   val queries: Map[String, QFn] = Map(
     "sim_ann_nsw"          -> simAnnNsw _,

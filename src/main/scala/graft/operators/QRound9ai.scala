@@ -44,8 +44,7 @@ object QRound9ai extends QueryPack {
         trunc4(col("n_click").cast(DoubleType) / col("n_ev").cast(DoubleType))
           .as("score"),
         col("outcome"),
-        (conv(substring(md5(col("user_id").cast(StringType)), 1, 4), 16, 10)
-          .cast(LongType) % 2).as("arm"))
+        abArm(col("user_id")).as("arm"))
       .withColumn("cell", floor(col("score") * lit(1e2)).cast(LongType))
     val treated = users.filter(col("arm") === 1)
       .select(col("user_id").as("t_user"), col("score").as("t_score"),
@@ -84,7 +83,7 @@ object QRound9ai extends QueryPack {
     s"""WITH u AS (SELECT user_id,
        |    ${oTrunc4("CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS DOUBLE) / count(*)")} AS score,
        |    ${oSum4("CASE WHEN event_type = 'purchase' THEN value ELSE 0e0 END")} AS outcome,
-       |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 4)) AS BIGINT) % 2 AS arm
+       |    ${oAbArm("user_id")} AS arm
        |  FROM events GROUP BY user_id),
        |uc AS (SELECT *, CAST(floor(score * 1e2) AS BIGINT) AS cell FROM u),
        |tr AS (SELECT user_id AS t_user, score AS t_score,

@@ -77,9 +77,7 @@ object QRound9aq extends QueryPack {
   private[graft] def srmCheck(events: DataFrame): DataFrame = {
     val dd = DoubleType
     val arms = events.select(col("user_id")).distinct()
-      .withColumn("arm",
-        conv(substring(md5(col("user_id").cast(StringType)), 1, 4), 16, 10)
-          .cast(LongType) % 2)
+      .withColumn("arm", abArm(col("user_id")))
       .groupBy("arm").agg(count(lit(1)).as("n"))
     val a = arms.filter(col("arm") === 0).select(col("n").as("n_a"))
     val b = arms.filter(col("arm") === 1).select(col("n").as("n_b"))
@@ -96,7 +94,7 @@ object QRound9aq extends QueryPack {
 
   private val oChpAbSrmCheck =
     s"""WITH u AS (SELECT DISTINCT user_id FROM events),
-       |arms AS (SELECT CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 4)) AS BIGINT) % 2 AS arm,
+       |arms AS (SELECT ${oAbArm("user_id")} AS arm,
        |    user_id FROM u),
        |g AS (SELECT arm, CAST(count(*) AS BIGINT) AS n FROM arms GROUP BY 1),
        |f AS (SELECT (SELECT n FROM g WHERE arm = 0) AS n_a,

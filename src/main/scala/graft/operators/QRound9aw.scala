@@ -164,21 +164,12 @@ object QRound9aw extends QueryPack {
   }
 
   private def graphRichClub(s: SparkSession, d: String): DataFrame = {
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     richClub(edges)
   }
 
   private val oGraphRichClub =
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn
-       |  UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
        |  FROM edges GROUP BY 1),
        |ks AS (SELECT CAST(unnest([${richKs.mkString(", ")}]) AS BIGINT)

@@ -402,12 +402,7 @@ object QRound9b extends QueryPack {
   }
 
   private def graphBfsDistance(s: SparkSession, d: String): DataFrame = {
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     bfsDistance(QSim.embPersisted(s, d).select("vec_id"), edges)
   }
 
@@ -419,10 +414,7 @@ object QRound9b extends QueryPack {
          |    FROM d${r - 1} b JOIN edges e ON e.src = b.node) GROUP BY node),"""
         .stripMargin
     }.mkString("\n")
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |nodes AS (SELECT vec_id FROM embeddings),
        |d0 AS MATERIALIZED (SELECT vec_id AS node, CAST(0 AS BIGINT) AS dist
        |  FROM nodes WHERE vec_id < 5),

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QueryPack
 import graft.sources.Tables._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -33,35 +33,15 @@ object QRound9bb extends QueryPack {
     * fewer rows catch lower-similarity pairs (more candidates).
     *
     * Scale shape: one signature aggregate over the memoized shingle
-    * table; per config one (band,key)-bucketed self-join — uniform md5
-    * keys, never all-pairs. */
+    * table (QText.signature); per config the bucket-local pair
+    * enumeration of dedup_lsh_pairs — uniform md5 keys, never all-pairs. */
   private[graft] def lshTuning(s: SparkSession, d: String): DataFrame = {
-    val sets = QText.shingledPersisted(s, d)
-    val ex = sets.select(col("doc_id"), explode(col("shs")).as("sh"))
-      .select(col("doc_id") +: (0 until 8).map { j =>
-        md5(concat(lit(s"$j|"), col("sh")).cast(BinaryType)).as(s"h$j")
-      }: _*)
-    val sigs = for (j <- 0 until 8; c <- 0 until 4) yield
-      min(substring(col(s"h$j"), c * 8 + 1, 8)).as(s"k${j * 4 + c}")
     val sig = graft.Memo.memo(s, "lshtunesig", d)(
-      ex.groupBy("doc_id").agg(sigs.head, sigs.tail: _*)
+      QText.signature(QText.shingledPersisted(s, d))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val perConfig = tuneConfigs.map { case (b, r) =>
-      val bandCols = (0 until b).map { i =>
-        struct(lit(i).as("band"),
-          md5(concat_ws(",", (i * r until (i + 1) * r)
-            .map(k => col(s"k$k")): _*).cast(BinaryType)).as("bkey"))
-      }
-      val bands = sig
-        .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"),
-          col("bk.bkey").as("bkey"))
-      val cands = bands.join(
-          bands.select(col("doc_id").as("b_id"), col("band"), col("bkey")),
-          Seq("band", "bkey"))
-        .filter(col("doc_id") < col("b_id"))
-        .select(col("doc_id"), col("b_id")).distinct()
-      cands.agg(count(lit(1)).as("n_candidates"))
+      QText.bucketPairs(QText.bandKeys(sig, b, r))
+        .agg(count(lit(1)).as("n_candidates"))
         .select(lit(b.toLong).as("bands"), lit(r.toLong).as("rows_per_band"),
           trunc4(pow(lit(1.0) / b, lit(1.0) / r)).as("est_threshold"),
           col("n_candidates"))
@@ -70,15 +50,9 @@ object QRound9bb extends QueryPack {
   }
 
   private val oDedupLshTuning = {
-    val mins = (for (j <- 0 until 8; c <- 0 until 4) yield
-      s"min(substr(md5('$j|' || s), ${c * 8 + 1}, 8)) AS k${j * 4 + c}")
-      .mkString(",\n    ")
+    val k = (i: Int) => s"k$i"
     val configs = tuneConfigs.map { case (b, r) =>
-      val bands = (0 until b).map { i =>
-        val cat = (i * r until (i + 1) * r).map(k => s"k$k")
-          .mkString(" || ',' || ")
-        s"SELECT doc_id, $i AS band, md5($cat) AS bkey FROM sig"
-      }.mkString("\n    UNION ALL ")
+      val bands = QText.oBandKeys(b, r, k)
       s"""SELECT CAST($b AS BIGINT) AS bands, CAST($r AS BIGINT)
          |    AS rows_per_band,
          |  ${oTrunc4(s"pow(1e0 / $b, 1e0 / $r)")} AS est_threshold,
@@ -88,13 +62,7 @@ object QRound9bb extends QueryPack {
          |      ON a.band = b.band AND a.bkey = b.bkey
          |      AND a.doc_id < b.doc_id)) AS n_candidates""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-       |shl AS (SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-       |    for i in range(1, len(w)-1)]) AS shs FROM t WHERE len(w) >= 3),
-       |ex AS (SELECT doc_id, unnest(shs) AS s FROM shl),
-       |sig AS MATERIALIZED (SELECT doc_id,
-       |    $mins
-       |  FROM ex GROUP BY doc_id)
+    s"""${QText.oMinhashSig(k, materialized = true)}
        |$configs
        |ORDER BY bands""".stripMargin
   }
@@ -171,9 +139,7 @@ object QRound9bb extends QueryPack {
       .agg(count(lit(1)).as("n_ev"),
         max(when(col("event_type") === "purchase"
           && col("value") > lit(9e1), 1L).otherwise(0L)).as("conv"))
-      .withColumn("arm",
-        conv(substring(md5(col("user_id").cast(StringType)), 1, 4), 16, 10)
-          .cast(LongType) % 2)
+      .withColumn("arm", abArm(col("user_id")))
     val mx = user.agg(max("n_ev").as("mx"))
     val bucketed = user.crossJoin(broadcast(mx))
       .withColumn("bucket", expr("(n_ev * 10) div (mx + 1)"))
@@ -212,8 +178,7 @@ object QRound9bb extends QueryPack {
        |  FROM events GROUP BY 1),
        |mxv AS (SELECT max(n_ev) AS mx FROM u),
        |a AS (SELECT u.*,
-       |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 4))
-       |      AS BIGINT) % 2 AS arm,
+       |    ${oAbArm("user_id")} AS arm,
        |    (n_ev * 10) // (m.mx + 1) AS bucket FROM u, mxv m),
        |cells AS MATERIALIZED (SELECT bucket,
        |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_t,

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.QueryPack
 import graft.sources.Tables._
+import org.apache.spark.sql.graft.SqlText
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -26,28 +27,21 @@ object QRound9bc extends QueryPack {
   /** COUNT/MIN/MAX over lineitem answered by the parquet V2 reader's
     * aggregate pushdown (spark.sql.parquet.aggregatePushdown + empty
     * useV1SourceList): row groups contribute footer stats, no pixel of
-    * row data is decoded. The result row materializes inside the config
-    * scope (both confs are session-only, restored after);
+    * row data is decoded. Both confs are set on a clone of the caller's
+    * session ([[pushdownSession]]), never on the caller's own;
     * ExtensionsSpec-style plan proof lives in Round9bcSpec, which
     * asserts `PushedAggregation` in the executed plan.
     *
     * Scale shape: metadata-only — cost scales with file count, not
     * bytes; exactly what a lake-wide count should plan. */
-  private[graft] def aggPushdown(s: SparkSession, d: String): DataFrame = {
-    val confs = Seq("spark.sql.parquet.aggregatePushdown" -> "true",
+  private[graft] def aggPushdown(s: SparkSession, d: String): DataFrame =
+    pushdownFrame(pushdownSession(s), d)
+
+  /** A clone of `s` with the V2 reader's aggregate pushdown on and every
+    * file source on the V2 path. */
+  private[graft] def pushdownSession(s: SparkSession): SparkSession =
+    SqlText.cloned(s, "spark.sql.parquet.aggregatePushdown" -> "true",
       "spark.sql.sources.useV1SourceList" -> "")
-    val prev = confs.map { case (k, _) =>
-      k -> (try Some(s.conf.get(k)) catch { case _: Exception => None })
-    }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val row = pushdownFrame(s, d).collect()(0)
-      s.createDataFrame(java.util.List.of(row), pushdownFrame(s, d).schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
 
   /** The pushdown-eligible frame (no filter, plain columns). */
   private[graft] def pushdownFrame(s: SparkSession, d: String): DataFrame =
@@ -87,13 +81,9 @@ object QRound9bc extends QueryPack {
       (0 to nPerms).map(Tuple1(_))).toDF("seed")
     val cells = user.crossJoin(broadcast(seeds))
       .withColumn("arm",
-        when(col("seed") === 0,
-          conv(substring(md5(col("user_id").cast(StringType)), 1, 4), 16, 10)
-            .cast(LongType) % 2)
-          .otherwise(
-            conv(substring(md5(concat(col("seed").cast(StringType), lit("|"),
-              col("user_id").cast(StringType))), 1, 4), 16, 10)
-              .cast(LongType) % 2))
+        when(col("seed") === 0, abArm(col("user_id")))
+          .otherwise(abArm(concat(col("seed").cast(StringType), lit("|"),
+            col("user_id").cast(StringType)))))
       .groupBy("seed")
       .agg(sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_t"),
         sum(when(col("arm") === 1, col("conv")).otherwise(0L)).as("c_t"),
@@ -133,8 +123,7 @@ object QRound9bc extends QueryPack {
        |      AS c_c
        |  FROM (SELECT u.*, s.seed,
        |    CASE WHEN s.seed = 0 THEN
-       |      CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 4))
-       |        AS BIGINT) % 2
+       |      ${oAbArm("user_id")}
        |    ELSE
        |      CAST(concat('0x', substr(md5(CAST(s.seed AS VARCHAR) || '|'
        |        || CAST(user_id AS VARCHAR)), 1, 4)) AS BIGINT) % 2

@@ -77,12 +77,7 @@ object QRound9bh extends QueryPack {
   private[graft] def attrAssortativity(s: SparkSession, d: String): DataFrame = {
     val dd = DoubleType
     val lang = t(s, d, "documents").select(col("doc_id"), col("lang"))
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     val labeled = edges
       .join(broadcast(lang.select(col("doc_id").as("src"),
         col("lang").as("la"))), "src")
@@ -111,11 +106,7 @@ object QRound9bh extends QueryPack {
   }
 
   private val oGraphAttrAssortativity =
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn
-       |  UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |lg AS (SELECT doc_id, lang FROM documents),
        |lab AS MATERIALIZED (SELECT la.lang AS la, lb.lang AS lb
        |  FROM edges e JOIN lg la ON la.doc_id = e.src

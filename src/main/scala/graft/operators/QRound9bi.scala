@@ -35,9 +35,7 @@ object QRound9bi extends QueryPack {
     val d4 = DecimalType(18, 4)
     val user = events.groupBy("user_id")
       .agg(sum(col("value").cast(d4)).cast(d4).as("x"))
-      .withColumn("arm",
-        conv(substring(md5(col("user_id").cast(StringType)), 1, 4), 16, 10)
-          .cast(LongType) % 2)
+      .withColumn("arm", abArm(col("user_id")))
     val m = user.groupBy("arm")
       .agg(count(lit(1)).as("n"), sum(col("x")).cast(dd).as("s"),
         sum(col("x") * col("x")).cast(dd).as("ss"))
@@ -72,8 +70,7 @@ object QRound9bi extends QueryPack {
     s"""WITH u AS (SELECT user_id,
        |    CAST(sum(CAST(value AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS x
        |  FROM events GROUP BY 1),
-       |a2 AS (SELECT CAST(concat('0x', substr(md5(CAST(user_id AS
-       |    VARCHAR)), 1, 4)) AS BIGINT) % 2 AS arm, x FROM u),
+       |a2 AS (SELECT ${oAbArm("user_id")} AS arm, x FROM u),
        |m AS (SELECT arm, CAST(count(*) AS BIGINT) AS n,
        |    CAST(sum(x) AS DOUBLE) AS s, CAST(sum(x * x) AS DOUBLE) AS ss
        |  FROM a2 GROUP BY 1),

@@ -41,8 +41,7 @@ object QRound9bk extends QueryPack {
     val rows = events
       .select(col("event_type"), col("event_id"),
         col("value").cast(dd).as("v"),
-        (conv(substring(md5(col("user_id").cast(StringType)), 1, 4), 16, 10)
-          .cast(LongType) % 2).as("arm"))
+        abArm(col("user_id")).as("arm"))
     val wOrd = Window.partitionBy("event_type").orderBy("v", "event_id")
     val wTie = Window.partitionBy("event_type", "v")
     val ranked = rows
@@ -72,8 +71,7 @@ object QRound9bk extends QueryPack {
   private val oAggMannWhitney =
     s"""WITH rows0 AS (SELECT event_type, event_id,
        |    CAST(value AS DOUBLE) AS v,
-       |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 4))
-       |      AS BIGINT) % 2 AS arm
+       |    ${oAbArm("user_id")} AS arm
        |  FROM events),
        |rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY event_type
        |      ORDER BY v, event_id) AS BIGINT) AS rn FROM rows0),

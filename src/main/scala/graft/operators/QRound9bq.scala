@@ -208,7 +208,7 @@ object QRound9bq extends QueryPack {
   private[graft] def burstiness(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     val tok = docs.select(col("doc_id"),
-        explode(filter(split(col("text"), " "), x => x =!= "")).as("tk"))
+        explode(tokens(col("text"))).as("tk"))
       .groupBy("tk", "doc_id").agg(count(lit(1)).as("x"))
     val m = tok.groupBy("tk").agg(count(lit(1)).as("df"),
       sum("x").as("sx"), sum(col("x") * col("x")).as("sxx"))

@@ -217,7 +217,7 @@ object QRound9br extends QueryPack {
   private[graft] def ttrSttr(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     val toks = docs.select(col("doc_id"),
-      posexplode(filter(split(col("text"), " "), x => x =!= "")))
+      posexplode(tokens(col("text"))))
       .select(col("doc_id"), col("pos"), col("col").as("tk"))
     val per = toks.groupBy("doc_id").agg(
       count(lit(1)).as("n_tokens"), countDistinct("tk").as("n_types"))

@@ -58,7 +58,7 @@ object QRound9bu extends QueryPack {
   private[graft] def cohensKappa(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     val rated = docs.select(col("doc_id"), col("n_chars"),
-        filter(split(col("text"), " "), x => x =!= "").as("toks"))
+        tokens(col("text")).as("toks"))
       .select(
         (col("n_chars") >= 275).cast(LongType).as("ra"),
         (size(array_distinct(col("toks"))) * 2 >= size(col("toks")))

@@ -37,7 +37,7 @@ object QRound9bw extends QueryPack {
   private[graft] def bm25(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     val tok = docs.select(col("doc_id"),
-        explode(filter(split(col("text"), " "), x => x =!= "")).as("tk"))
+        explode(tokens(col("text"))).as("tk"))
     val tf = tok.groupBy("doc_id", "tk").agg(count(lit(1)).as("tf"))
     val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val stats = tf.groupBy("tk").agg(sum("tf").as("ctot"),
@@ -175,7 +175,7 @@ object QRound9bw extends QueryPack {
     * joins on the deletion key. */
   private[graft] def symspellSuggest(s: SparkSession, d: String): DataFrame = {
     val vocab = t(s, d, "documents")
-      .select(explode(filter(split(col("text"), " "), x => x =!= ""))
+      .select(explode(tokens(col("text")))
         .as("term"))
       .groupBy("term").agg(count(lit(1)).as("cnt"))
     val del1 = vocab.select(col("term"), explode(expr(

@@ -209,7 +209,7 @@ object QRound9by extends QueryPack {
     graft.Memo.memo(s, "tfidfwp", d) {
       val docs = t(s, d, "documents")
       val tf = docs.select(col("doc_id"),
-          explode(filter(split(col("text"), " "), x => x =!= "")).as("tk"))
+          explode(tokens(col("text"))).as("tk"))
         .groupBy("doc_id", "tk").agg(count(lit(1)).as("tf"))
       val df = tf.groupBy("tk").agg(count(lit(1)).as("df"))
       val nd = docs.agg(count(lit(1)).as("nd"))

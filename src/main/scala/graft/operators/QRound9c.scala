@@ -263,12 +263,7 @@ object QRound9c extends QueryPack {
   }
 
   private def graphKcore(s: SparkSession, d: String): DataFrame = {
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     kcore(QSim.embPersisted(s, d).select("vec_id"), edges)
   }
 
@@ -280,10 +275,7 @@ object QRound9c extends QueryPack {
          |    JOIN a${r - 1} y ON y.node = e.dst
          |  GROUP BY e.src) WHERE deg >= $kcoreK),""".stripMargin
     }.mkString("\n")
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |nodes AS (SELECT vec_id FROM embeddings),
        |a0 AS MATERIALIZED (SELECT vec_id AS node FROM nodes),
        |$rounds

@@ -105,7 +105,7 @@ object QRound9ch extends QueryPack {
     * vocabulary. */
   private[graft] def topPNucleus(s: SparkSession, d: String): DataFrame = {
     val tok = t(s, d, "documents").select(
-        explode(filter(split(col("text"), " "), x => x =!= "")).as("tk"))
+        explode(tokens(col("text"))).as("tk"))
       .groupBy("tk").agg(count(lit(1)).as("c"))
     // bounded-vocab ranking + prefix sums via ONE aggregate (no global
     // window — the PlanSpec gate): sorted struct array, in-array

@@ -172,7 +172,7 @@ object QRound9cl extends QueryPack {
     val docs = t(s, d, "documents")
     val tok = docs
       .select(col("doc_id"),
-        filter(split(col("text"), " "), x => x =!= "").as("w"))
+        tokens(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"),
         explode(expr("transform(sequence(1, size(w) - 2), " +

@@ -120,20 +120,12 @@ object QRound9d extends QueryPack {
   }
 
   private def graphJaccardNeighbors(s: SparkSession, d: String): DataFrame = {
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     jaccardNeighbors(edges)
   }
 
   private val oGraphJaccardNeighbors =
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
        |cm AS (SELECT x.src AS a, y.src AS b, count(*) AS common
        |  FROM edges x JOIN edges y ON x.dst = y.dst AND x.src < y.src
@@ -161,9 +153,7 @@ object QRound9d extends QueryPack {
       .agg(max(when(col("event_type") === "purchase"
         && col("value") > lit(9e1), 1L).otherwise(0L))
         .as("conv"))
-      .withColumn("arm",
-        conv(substring(md5(col("user_id").cast(StringType)), 1, 4), 16, 10)
-          .cast(LongType) % 2)
+      .withColumn("arm", abArm(col("user_id")))
     val g = users.groupBy("arm")
       .agg(count(lit(1)).as("n"), sum(col("conv")).as("c"))
     val a = g.filter(col("arm") === 0)
@@ -189,7 +179,7 @@ object QRound9d extends QueryPack {
   private val oChpAbLiftTest =
     s"""WITH u AS (SELECT user_id,
        |    CAST(max(CASE WHEN event_type = 'purchase' AND value > 9e1 THEN 1 ELSE 0 END) AS BIGINT) AS conv,
-       |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 4)) AS BIGINT) % 2 AS arm
+       |    ${oAbArm("user_id")} AS arm
        |  FROM events GROUP BY user_id),
        |g AS (SELECT arm, count(*) AS n, CAST(sum(conv) AS BIGINT) AS c
        |  FROM u GROUP BY arm),

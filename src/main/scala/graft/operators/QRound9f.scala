@@ -263,20 +263,12 @@ object QRound9f extends QueryPack {
   }
 
   private def graphDegreeAssort(s: SparkSession, d: String): DataFrame = {
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     degreeAssort(edges)
   }
 
   private val oGraphDegreeAssort =
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
        |xy AS (SELECT dx.deg AS x, dy.deg AS y FROM edges e
        |  JOIN deg dx ON dx.src = e.src JOIN deg dy ON dy.src = e.dst),

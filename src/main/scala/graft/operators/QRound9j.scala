@@ -186,9 +186,9 @@ object QRound9j extends QueryPack {
     * bound; the kNN graph's degree is capped by construction at
     * k+incoming, so wedge fan-out is structurally bounded); closure is
     * one equi-join of the wedge's (u,w) rim pair against the edge table;
-    * the degree table broadcasts back. Shares the memoized `bfsedges`
-    * edge table with BFS/k-core/Jaccard — the graph-index reuse a real
-    * engine gets from materialized adjacency. */
+    * the degree table broadcasts back. Shares the memoized kNN edge
+    * table (`QSim.knnEdgesMemo`) with BFS/k-core/Jaccard — the
+    * graph-index reuse a real engine gets from materialized adjacency. */
   private[graft] def clusteringCoeff(nodes: DataFrame, edges: DataFrame)
       : DataFrame =
     clusteringFromWedges(nodes, wedgeTable(edges))
@@ -234,12 +234,7 @@ object QRound9j extends QueryPack {
   }
 
   private def graphClusteringCoeff(s: SparkSession, d: String): DataFrame = {
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     // per-corpus wedge index: node-count-sized (v, deg, n_tri), built once
     // per session like `tricounts` — each call is then two node-sized joins
     val wt = graft.Memo.memo(s, "clustwedge", d)(
@@ -248,10 +243,7 @@ object QRound9j extends QueryPack {
   }
 
   private val oGraphClusteringCoeff =
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |deg AS (SELECT src AS v, CAST(count(*) AS BIGINT) AS deg
        |  FROM edges GROUP BY 1),
        |closed AS (SELECT e1.src AS v, CAST(count(*) AS BIGINT) AS n_tri

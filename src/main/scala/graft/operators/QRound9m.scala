@@ -235,12 +235,7 @@ object QRound9m extends QueryPack {
   }
 
   private def graphHarmonicSampled(s: SparkSession, d: String): DataFrame = {
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     harmonicSampled(
       QSim.embPersisted(s, d).select("vec_id")
         .filter(col("vec_id") < harmSources), edges)
@@ -254,10 +249,7 @@ object QRound9m extends QueryPack {
          |    FROM f${r - 1} b JOIN edges e ON e.src = b.node)
          |  GROUP BY src, node),""".stripMargin
     }.mkString("\n")
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |f0 AS MATERIALIZED (SELECT vec_id AS src, vec_id AS node,
        |    CAST(0 AS BIGINT) AS dist
        |  FROM embeddings WHERE vec_id < $harmSources),

@@ -107,12 +107,7 @@ object QRound9p extends QueryPack {
       graphStressSampledBuild(s, d).localCheckpoint(true))
 
   private[graft] def graphStressSampledBuild(s: SparkSession, d: String): DataFrame = {
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     val nodes = QSim.embPersisted(s, d).select("vec_id")
     stressSampled(nodes.filter(col("vec_id") < stressSources), nodes, edges)
   }
@@ -135,10 +130,7 @@ object QRound9p extends QueryPack {
          |    ON p.src = g.src AND p.v = g.w
          |  GROUP BY 1, 2),""".stripMargin
     }.mkString("\n")
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |d0 AS MATERIALIZED (SELECT vec_id AS src, vec_id AS node,
        |    0 AS dist, CAST(1 AS BIGINT) AS sigma
        |  FROM embeddings WHERE vec_id < $stressSources),

@@ -110,9 +110,7 @@ object QRound9u extends QueryPack {
     val u = t(s, d, "events").groupBy("user_id")
       .agg(max(when(col("event_type") === "purchase" &&
         col("value") > lit(9e1), 1L).otherwise(0L)).as("conv"))
-      .withColumn("arm",
-        conv(substring(md5(col("user_id").cast(StringType)), 1, 4), 16, 10)
-          .cast(LongType) % 2)
+      .withColumn("arm", abArm(col("user_id")))
     val seg = u.join(broadcast(t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment").as("segment"))),
       col("user_id") === col("c_custkey"))
@@ -143,8 +141,7 @@ object QRound9u extends QueryPack {
     s"""WITH u AS (SELECT user_id,
        |    CAST(max(CASE WHEN event_type = 'purchase' AND value > 9e1
        |      THEN 1 ELSE 0 END) AS BIGINT) AS conv,
-       |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 4))
-       |      AS BIGINT) % 2 AS arm
+       |    ${oAbArm("user_id")} AS arm
        |  FROM events GROUP BY user_id),
        |sg AS (SELECT c.c_mktsegment AS segment, u.arm, u.conv
        |  FROM u JOIN customer c ON c.c_custkey = u.user_id),

@@ -198,12 +198,7 @@ object QRound9y extends QueryPack {
   }
 
   private def graphWalkCorpus(s: SparkSession, d: String): DataFrame = {
-    val knn = QSim.knnJoinPersisted(s, d)
-      .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.Memo.memo(s, "bfsedges", d)(
-      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val edges = QSim.knnEdgesMemo(s, d)
     walkCorpus(QSim.embPersisted(s, d).select("vec_id")
       .filter(col("vec_id") < 20), edges)
   }
@@ -220,11 +215,7 @@ object QRound9y extends QueryPack {
     val unioned = (0 to walkSteps)
       .map(r => s"SELECT walk_id, CAST($r AS BIGINT) AS step, cur AS node FROM s$r")
       .mkString("\n  UNION ALL ")
-    s"""WITH knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
-       |  FROM (${QSim.oracles("sim_knn_join")})),
-       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-       |  SELECT src, dst FROM knn
-       |  UNION ALL SELECT dst AS src, src AS dst FROM knn)),
+    s"""WITH ${QSim.oKnnEdges},
        |s0 AS (SELECT vec_id AS walk_id, vec_id AS cur FROM embeddings
        |  WHERE vec_id < 20),
        |$rounds

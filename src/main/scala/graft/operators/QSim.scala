@@ -357,6 +357,20 @@ object QSim extends QueryPack {
     }
   }
 
+  /** The undirected kNN graph (src, dst): every kNN pair in both
+    * directions, deduplicated, memoized and persisted per corpus. The one
+    * edge table of the graph keys (BFS, k-core, clustering, harmonic,
+    * stress, walks, assortativity, power law, rich club, Jaccard, language
+    * homophily); its oracle twin is [[oKnnEdges]]. */
+  private[operators] def knnEdgesMemo(s: SparkSession, d: String): DataFrame =
+    graft.Memo.memo(s, "bfsedges", d) {
+      val knn = knnJoinPersisted(s, d)
+        .select(col("vec_id").as("src"), col("nbr_id").as("dst"))
+      knn.unionByName(knn.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+
   private def simKnnJoin(s: SparkSession, d: String): DataFrame =
     knnJoinPersisted(s, d).orderBy("vec_id", "rnk")
 
@@ -375,6 +389,14 @@ object QSim extends QueryPack {
        |    PARTITION BY vec_id ORDER BY score DESC, nbr_id) AS rnk FROM pairs)
        |SELECT vec_id, CAST(rnk AS INT) AS rnk, nbr_id, score
        |FROM rk WHERE rnk <= $knnK ORDER BY vec_id, rnk""".stripMargin
+
+  /** Oracle twin of [[knnEdgesMemo]]: the `knn` and `edges` CTEs that open
+    * a graph key's WITH clause (the caller writes `WITH $oKnnEdges,`). */
+  private[operators] val oKnnEdges =
+    s"""knn AS MATERIALIZED (SELECT vec_id AS src, nbr_id AS dst
+       |  FROM ($oSimKnnJoin)),
+       |edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
+       |  SELECT src, dst FROM knn UNION ALL SELECT dst AS src, src AS dst FROM knn))""".stripMargin
 
   // ---- self-measuring ANN quality: recall@10 as a query ----
 

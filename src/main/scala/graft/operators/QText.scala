@@ -32,7 +32,8 @@ import org.apache.spark.sql.types._
   */
 object QText extends QueryPack {
 
-  private def docsToks(s: SparkSession, d: String): DataFrame =
+  /** The documents with their " "-split tokens as `toks`. */
+  private[operators] def docsToks(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents").withColumn("toks", split(col("text"), " "))
 
   // ---- tokenize + top-k word count ----
@@ -178,8 +179,8 @@ object QText extends QueryPack {
     * P(candidate | j=0.9) = 1-(1-0.9^4)^8 = 0.9998 per pair;
     * P(candidate | j≈0, the corpus bulk) ≈ 0 — probed: candidates == true
     * pairs (25 of 124,750 possible at sf0.01, 256 of 12.5M at sf0.1). */
-  private val lshR = 4
-  private val lshB = 8
+  private[operators] val lshR = 4
+  private[operators] val lshB = 8
 
   /** Distinct 3-word shingles per document (Broder's near-dup unit: word
     * n-grams separate true sequence-level near-dups from mere vocabulary
@@ -205,26 +206,46 @@ object QText extends QueryPack {
   private[graft] def lshCandidates(s: SparkSession, d: String): DataFrame =
     lshCandidatesFrom(shingled(s, d))
 
-  private def lshCandidatesFrom(sets: DataFrame): DataFrame = {
+  private def lshCandidatesFrom(sets: DataFrame): DataFrame =
+    bucketPairs(bandKeys(signature(sets), lshB, lshR))
+
+  /** MinHash signature of each doc's shingle set (doc_id, shs): per
+    * shingle `lshB` seeded md5s (seed j), each cut into `lshR` 8-hex
+    * chunks; per doc the min of every chunk, as columns k0..k31
+    * (k = j·lshR + c). The explode is map-side and the groupBy combines
+    * partially, so the shuffle carries 32 mins per doc, not the shingles.
+    * The signature of the batch LSH keys; oracle twin [[oMinhashSig]]. */
+  private[operators] def signature(sets: DataFrame): DataFrame = {
     val ex = sets.select(col("doc_id"), explode(col("shs")).as("sh"))
       .select(col("doc_id") +: (0 until lshB).map { j =>
         md5(concat(lit(s"$j|"), col("sh")).cast(BinaryType)).as(s"h$j")
       }: _*)
-    val sigs = for (j <- 0 until lshB; c <- 0 until lshR) yield
-      min(substring(col(s"h$j"), c * 8 + 1, 8)).as(s"m${j}_$c")
-    val sig = ex.groupBy("doc_id").agg(sigs.head, sigs.tail: _*)
-    val bandCols = (0 until lshB).map { j =>
-      struct(lit(j).as("band"),
-        md5(concat_ws(",", (0 until lshR).map(c => col(s"m${j}_$c")): _*)
+    val mins = for (j <- 0 until lshB; c <- 0 until lshR) yield
+      min(substring(col(s"h$j"), c * 8 + 1, 8)).as(s"k${j * lshR + c}")
+    ex.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+  }
+
+  /** `b` band keys per signature row: band i's key is the md5 of
+    * k(i·r) .. k(i·r + r − 1) joined by ",". Rows (keep..., band, bkey);
+    * oracle twin [[oBandKeys]]. */
+  private[operators] def bandKeys(sig: DataFrame, b: Int, r: Int,
+      keep: Seq[String] = Seq("doc_id")): DataFrame = {
+    val bandCols = (0 until b).map { i =>
+      struct(lit(i).as("band"),
+        md5(concat_ws(",", (i * r until (i + 1) * r).map(k => col(s"k$k")): _*)
           .cast(BinaryType)).as("bkey"))
     }
-    val bands = sig
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    // bucket-local pair enumeration (one signature pass — a bands-self-join
-    // would recompute the whole signature pipeline for each side); buckets
-    // are tiny (near-dup groups), so the nested HOF runs on 2-3 element
-    // arrays
+    sig.select(keep.map(col) :+ explode(array(bandCols: _*)).as("bk"): _*)
+      .select(keep.map(col) ++ Seq(col("bk.band").as("band"),
+        col("bk.bkey").as("bkey")): _*)
+  }
+
+  /** Distinct candidate pairs (a_id < b_id) sharing a band bucket, from
+    * band rows (doc_id, band, bkey). Bucket-local enumeration (one
+    * signature pass — a bands-self-join would recompute the whole
+    * signature pipeline for each side); buckets are tiny (near-dup
+    * groups), so the nested HOF runs on 2-3 element arrays. */
+  private[operators] def bucketPairs(bands: DataFrame): DataFrame =
     bands.groupBy("band", "bkey")
       .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) >= 2)
@@ -233,7 +254,33 @@ object QText extends QueryPack {
           |  transform(slice(ids, i + 2, size(ids)), y ->
           |    struct(x AS a_id, y AS b_id))))""".stripMargin)).as("p"))
       .select(col("p.a_id"), col("p.b_id")).distinct()
+
+  /** Oracle twin of [[signature]] over `documents`: the WITH clause's
+    * `t`, `shl`, `ex` and `sig` CTEs, the 32 mins named `name(k)`. */
+  private[operators] def oMinhashSig(name: Int => String,
+      materialized: Boolean = false): String = {
+    val mins = (for (j <- 0 until lshB; c <- 0 until lshR) yield
+      s"min(substr(md5('$j|' || s), ${c * 8 + 1}, 8)) AS ${name(j * lshR + c)}")
+      .mkString(",\n    ")
+    s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
+       |  shl AS (SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+       |             for i in range(1, len(w)-1)]) AS shs FROM t WHERE len(w) >= 3),
+       |  ex AS (SELECT doc_id, unnest(shs) AS s FROM shl),
+       |  sig AS ${if (materialized) "MATERIALIZED " else ""}(SELECT doc_id,
+       |    $mins
+       |  FROM ex GROUP BY doc_id)""".stripMargin
   }
+
+  /** Oracle twin of [[bandKeys]] over the `sig` CTE: one
+    * `SELECT doc_id, band, bkey` per band, UNION ALL'd. */
+  private[operators] def oBandKeys(b: Int, r: Int, name: Int => String): String =
+    (0 until b).map { i =>
+      val cat = (i * r until (i + 1) * r).map(name).mkString(" || ',' || ")
+      s"SELECT doc_id, $i AS band, md5($cat) AS bkey FROM sig"
+    }.mkString("\n  UNION ALL ")
+
+  /** The signature columns as the LSH oracles name them: m{band}_{chunk}. */
+  private[operators] def oBandChunk(k: Int): String = s"m${k / lshR}_${k % lshR}"
 
   /** Banded-LSH near-duplicate pairs: candidates from band buckets, then
     * exact shingle-Jaccard verification at 0.8. The 100 TB shape end to
@@ -293,22 +340,9 @@ object QText extends QueryPack {
   private def dedupLshPairs(s: SparkSession, d: String): DataFrame =
     lshPairsPersisted(s, d).orderBy("a_id", "b_id")
 
-  private[operators] val oDedupLshPairs: String = {
-    val mins = (for (j <- 0 until lshB; c <- 0 until lshR) yield
-      s"min(substr(md5('$j|' || s), ${c * 8 + 1}, 8)) AS m${j}_$c")
-      .mkString(",\n    ")
-    val bands = (0 until lshB).map { j =>
-      val cat = (0 until lshR).map(c => s"m${j}_$c").mkString(" || ',' || ")
-      s"SELECT doc_id, $j AS band, md5($cat) AS bkey FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS w FROM documents),
-       |  shl AS (SELECT doc_id, list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-       |             for i in range(1, len(w)-1)]) AS shs FROM t WHERE len(w) >= 3),
-       |  ex AS (SELECT doc_id, unnest(shs) AS s FROM shl),
-       |  sig AS (SELECT doc_id,
-       |    $mins
-       |  FROM ex GROUP BY doc_id),
-       |  bands AS ($bands),
+  private[operators] val oDedupLshPairs: String =
+    s"""${oMinhashSig(oBandChunk)},
+       |  bands AS (${oBandKeys(lshB, lshR, oBandChunk)}),
        |  cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
        |    FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
        |      AND a.doc_id < b.doc_id),
@@ -318,7 +352,6 @@ object QText extends QueryPack {
        |    FROM cand JOIN shl sa ON sa.doc_id = a_id JOIN shl sb ON sb.doc_id = b_id)
        |SELECT a_id, b_id, jaccard FROM j WHERE jaccard >= 0.8
        |ORDER BY a_id, b_id""".stripMargin
-  }
 
   // ---- corpus profile ----
 

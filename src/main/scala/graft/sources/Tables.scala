@@ -115,6 +115,17 @@ object Tables {
 
   def trunc6(c: Column): Column = floor(c * lit(1000000)) / lit(1000000.0)
 
+  /** The hashed A/B arm (0 or 1) of a key: the first 16 bits of md5 of its
+    * string form, mod 2 — portable and partition-proof, unlike hash().
+    * Oracle twin [[oAbArm]]. */
+  def abArm(c: Column): Column =
+    conv(substring(md5(c.cast(StringType)), 1, 4), 16, 10).cast(LongType) % 2
+
+  /** Whitespace tokens of a text column: split on " ", empty tokens
+    * dropped (`split` yields no null elements, so removing "" is the whole
+    * filter). */
+  def tokens(text: Column): Column = array_remove(split(text, " "), "")
+
   /** Deterministic mean: exact decimal sum -> double -> truncate. */
   def avg4(c: Column): Column =
     trunc4(sum128(unscaled4(c), 4).cast(DoubleType) / count(lit(1)))
@@ -203,6 +214,9 @@ object Tables {
   def oTrunc4(x: String): String = s"floor(($x)*10000)/10000.0"
 
   def oTrunc6(x: String): String = s"floor(($x)*1000000)/1000000.0"
+
+  def oAbArm(x: String): String =
+    s"CAST(concat('0x', substr(md5(CAST($x AS VARCHAR)), 1, 4)) AS BIGINT) % 2"
 
   /** Exact revenue term: price * (1 - discount), all decimal, scale 4. */
   def revenue: Column =

@@ -65,6 +65,16 @@ object SqlText {
     }
   }
 
+  /** A clone of the caller's session with `confs` set on it: for a key
+    * whose subject is session state (SQL DDL, a planner conf), so the
+    * caller's own functions and confs are neither replaced nor seen
+    * changed, even by a query running beside it. */
+  def cloned(s: SparkSession, confs: (String, String)*): SparkSession = {
+    val c = s.asInstanceOf[classic.SparkSession].cloneSession()
+    confs.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
   private def key(name: String): String = name.toLowerCase(Locale.ROOT)
 
   /** Every CTE name the text defines, in any scope. */

@@ -56,6 +56,9 @@ class FunctionRegistrySpec extends SparkSpec {
 
   private val userSums = Seq("g_sum4u", "g_revsum4u", "g_revrow4u", "g_sumu4")
 
+  // sql_udf_inline declares SQL functions of these names, on a clone
+  private val userUdfs = Seq("g_disc_price", "g_qty_band")
+
   private def tempViews: Set[String] =
     spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
 
@@ -65,15 +68,15 @@ class FunctionRegistrySpec extends SparkSpec {
     spark.udf.register("g_revsum4u", (_: Double, _: Double) => -7.0)
     spark.udf.register("g_revrow4u", (_: Double, _: Double) => -7.0)
     spark.udf.register("g_sumu4", (_: Long) => -7.0)
-    // the key's subject is declaring these two SQL functions
-    val declared = Set("g_disc_price", "g_qty_band")
+    spark.udf.register("g_disc_price", (_: Double, _: Double) => -7.0)
+    spark.udf.register("g_qty_band", (_: Double) => "user")
     try {
       val viewsBefore = tempViews
-      val fnsBefore = tempFunctions.filterNot(f => declared(f._1))
+      val fnsBefore = tempFunctions
       sqlTextKeys.foreach(k =>
         assert(SparkEntry.queries(k)(spark, "/root/testdata/sf0.01").collect().nonEmpty, k))
       assert(tempViews === viewsBefore, "temp views added or dropped")
-      val fnsAfter = tempFunctions.filterNot(f => declared(f._1))
+      val fnsAfter = tempFunctions
       assert(fnsAfter.diff(fnsBefore).isEmpty && fnsBefore.diff(fnsAfter).isEmpty,
         s"temp functions added ${fnsAfter.diff(fnsBefore)}, replaced or dropped ${fnsBefore.diff(fnsAfter)}")
       userViews.foreach(n =>
@@ -81,9 +84,11 @@ class FunctionRegistrySpec extends SparkSpec {
       val row = spark.sql(
         "SELECT g_sum4u(1D), g_revsum4u(1D, 1D), g_revrow4u(1D, 1D), g_sumu4(1L)").head()
       assert((0 until 4).map(row.getDouble) === Seq.fill(4)(-7.0))
+      val udfs = spark.sql("SELECT g_disc_price(1D, 0D), g_qty_band(1D)").head()
+      assert(udfs.getDouble(0) === -7.0 && udfs.getString(1) === "user")
     } finally {
       userViews.foreach(spark.catalog.dropTempView)
-      userSums.foreach(n => spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS $n"))
+      (userSums ++ userUdfs).foreach(n => spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS $n"))
     }
   }
 

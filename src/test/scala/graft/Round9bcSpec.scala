@@ -4,25 +4,43 @@ package graft
 class Round9bcSpec extends SparkSpec {
 
   test("scan_agg_pushdown: the V2 reader answers from footer stats") {
-    // build the frame inside the config scope the key itself uses
-    val prevAgg = spark.conf.get("spark.sql.parquet.aggregatePushdown")
-    val prevV1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try {
-      val df = operators.QRound9bc.pushdownFrame(spark, sf)
-      val plan = df.queryExecution.executedPlan.toString
-      // the whole aggregate must reach the scan: no row decode at all
-      assert(plan.contains("PushedAggregation: [COUNT(*)"),
-        s"aggregates not pushed:\n$plan")
-      val r = df.collect()(0)
-      assert(r.getAs[Long]("n_rows") > 0)
-      assert(r.getAs[Long]("min_key") <= r.getAs[Long]("max_key"))
-      assert(r.getAs[Double]("min_price") <= r.getAs[Double]("max_price"))
-    } finally {
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", prevAgg)
-      spark.conf.set("spark.sql.sources.useV1SourceList", prevV1)
-    }
+    // the key's own session: a clone with the pushdown confs set
+    val df = operators.QRound9bc.pushdownFrame(
+      operators.QRound9bc.pushdownSession(spark), sf)
+    val plan = df.queryExecution.executedPlan.toString
+    // the whole aggregate must reach the scan: no row decode at all
+    assert(plan.contains("PushedAggregation: [COUNT(*)"),
+      s"aggregates not pushed:\n$plan")
+    val r = df.collect()(0)
+    assert(r.getAs[Long]("n_rows") > 0)
+    assert(r.getAs[Long]("min_key") <= r.getAs[Long]("max_key"))
+    assert(r.getAs[Double]("min_price") <= r.getAs[Double]("max_price"))
+  }
+
+  test("scan_agg_pushdown: the caller's session never sees the key's confs") {
+    val keys = Seq("spark.sql.parquet.aggregatePushdown",
+      "spark.sql.sources.useV1SourceList")
+    def confs: Seq[Option[String]] = keys.map(spark.conf.getOption)
+    val before = confs
+    assert(before.head != Some("true"))
+    val changed = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Option[String]]]()
+    val polls = new java.util.concurrent.atomic.AtomicLong()
+    @volatile var running = true
+    // polls the caller's confs the way a query planned beside the key would
+    val observer = new Thread(() =>
+      while (running) {
+        val now = confs
+        if (now != before) changed.add(now)
+        polls.incrementAndGet()
+        Thread.sleep(1)
+      })
+    observer.start()
+    try (1 to 3).foreach(_ =>
+      assert(SparkEntry.queries("scan_agg_pushdown")(spark, sf).collect().length === 1))
+    finally { running = false; observer.join() }
+    assert(polls.get() > 0)
+    assert(changed.isEmpty, s"caller's confs changed to ${changed.peek()}")
+    assert(confs === before)
   }
 
   test("chp_permutation_test: p-value well-formed, null split not extreme") {

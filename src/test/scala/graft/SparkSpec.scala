@@ -12,14 +12,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   /** The JVM's active test session, built anew if none is live. */
-  def session(): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.ui.enabled", "false")
+  def session(): SparkSession = SparkEntry.localBuilder("local[4]", 4)
     .config("spark.sql.warehouse.dir",
       s"/tmp/graft_warehouse_${ProcessHandle.current().pid()}")
     .getOrCreate()
