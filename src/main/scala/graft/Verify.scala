@@ -2,7 +2,10 @@ package graft
 import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * failed_keys.json: the sorted names of the keys that threw (a JSON list,
+  * empty on a clean run), so a failure never reads as a missing result.
+  * The exit code does not depend on failures. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // driver contract: (sfDir, outDir). An optional third comma-separated
@@ -15,13 +18,16 @@ object Verify {
     val spark = SparkEntry.localBuilder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case NonFatal(e) =>
+      .toSeq.flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -40,6 +46,8 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failed_keys.json"),
+      failed.sorted.map(q).mkString("[", ",", "]"))
     spark.stop()
   }
 }

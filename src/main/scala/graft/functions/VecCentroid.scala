@@ -61,7 +61,7 @@ case class VecCentroid(
     var i = 0
     while (i < n) {
       val x = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-      b.sums(i) += math.floor(x * VecCentroid.Scale + 0.5).toLong
+      b.sums(i) += VecCentroid.quant(x)
       i += 1
     }
     b.n += 1
@@ -81,14 +81,7 @@ case class VecCentroid(
 
   override def eval(b: VecCentroid.Buf): Any = {
     if (b.sums == null || b.n == 0) return null
-    val out = new Array[Double](b.sums.length)
-    var i = 0
-    while (i < out.length) {
-      // same op sequence as the oracle: sum→double, /count, /scale
-      out(i) = b.sums(i).toDouble / b.n / VecCentroid.Scale
-      i += 1
-    }
-    new GenericArrayData(out)
+    new GenericArrayData(VecCentroid.mean(b.sums, b.n))
   }
 
   override def serialize(b: VecCentroid.Buf): Array[Byte] = {
@@ -127,6 +120,19 @@ object VecCentroid {
   final class Buf(var sums: Array[Long], var n: Long)
 
   val Scale: Double = 1e6
+
+  /** Per-element quantization: the scaled long a component adds to its sum. */
+  def quant(x: Double): Long = math.floor(x * Scale + 0.5).toLong
+
+  /** The mean vector of `n` vectors' quantized sums, in the oracle's op
+    * sequence: sum→double, /count, /scale. Shared by the aggregate and the
+    * driver-side k-means fit (AnnKMeans), so both give the same bits. */
+  def mean(sums: Array[Long], n: Long): Array[Double] = {
+    val out = new Array[Double](sums.length)
+    var i = 0
+    while (i < out.length) { out(i) = sums(i).toDouble / n / Scale; i += 1 }
+    out
+  }
 
   /** Oracle-side twin of the per-element quantization. */
   def oQuant(x: String): String =

@@ -4,6 +4,8 @@ import graft.functions.VecCentroid
 import graft.plans.CosineSim
 import graft.sources.Tables._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 /** Deterministic seeded k-means over an embedding column, shared by the
@@ -23,10 +25,18 @@ import org.apache.spark.sql.functions._
   * So every Lloyd iteration is a pure function of the data, and DuckDB
   * reproduces it exactly from the same construction.
   *
-  * Scale shape: centroids are model state (k·dim doubles — KBs), so each
-  * iteration materializes them on the driver and broadcasts; the corpus is
-  * only ever scanned, never shuffled by the assignment (broadcast join +
-  * per-vector window). This is how distributed k-means is actually run.
+  * Two paths, one result (same centroids, same bits), switched by the
+  * state gate `graft.graph.broadcastStateMaxRows` ([[StateGate]]):
+  *  - rows × dim ≤ gate: the corpus is collected once ([[collectCorpus]])
+  *    and init plus every Lloyd iteration run on the driver over that copy
+  *    ([[fitLocal]]), through the same kernels: `CosineSim.compute`, the
+  *    driver twin of `trunc4`, and `VecCentroid`'s quantized sums. A
+  *    day's embeddings (1–2k vectors of 64 doubles) take this path, so the
+  *    fit costs a constant number of jobs instead of one per iteration.
+  *  - above it: centroids are model state (k·dim doubles — KBs), so each
+  *    iteration materializes them on the driver and broadcasts; the corpus
+  *    is only ever scanned, never shuffled by the assignment (broadcast
+  *    join + per-vector top-1). This is how distributed k-means is run.
   */
 object AnnKMeans {
 
@@ -61,9 +71,49 @@ object AnnKMeans {
   def assign(e: DataFrame, cent: DataFrame): DataFrame =
     assignProbes(e, cent, 1)
 
-  /** k-means centroids after `iters` Lloyd iterations, materialized each
-    * round (k rows of dim doubles) and re-broadcast. */
-  def centroids(e: DataFrame, k: Int, iters: Int): DataFrame = {
+  /** A corpus (vec_id, v) on the driver: each id as stored, each vector as
+    * the ArrayData [[CosineSim.compute]] reads. */
+  final class Corpus(val ids: Array[Any], val vs: Array[ArrayData]) {
+    def id(i: Int): Long = ids(i).asInstanceOf[Number].longValue
+  }
+
+  /** `e`'s (vec_id, v) rows on the driver when rows × dim ≤ the state gate,
+    * dim read off one row: a one-row job, then one collect of at most
+    * gate / dim + 1 rows. None above the gate, and when a vector is null
+    * (the distributed path defines that case). */
+  def collectCorpus(e: DataFrame): Option[Corpus] = {
+    val gate = StateGate.maxRows(e.sparkSession)
+    val ev = e.select("vec_id", "v")
+    if (gate < 1) None
+    else ev.head(1).headOption match {
+      case None => Some(new Corpus(Array.empty, Array.empty))
+      case Some(first) if first.isNullAt(1) => None
+      case Some(first) =>
+        StateGate.collectAtMost(ev, gate / math.max(first.getSeq[Double](1).size, 1))
+          .filterNot(_.exists(_.isNullAt(1)))
+          .map(rows => new Corpus(rows.map(_.get(0)),
+            rows.map(r => UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray))))
+    }
+  }
+
+  /** k-means centroids (cell, cv) after `iters` Lloyd iterations, on the
+    * driver when `e` fits the state gate, else distributed. */
+  def centroids(e: DataFrame, k: Int, iters: Int): DataFrame =
+    centroidsOf(e, k, iters, collectCorpus(e))
+
+  private def centroidsOf(e: DataFrame, k: Int, iters: Int,
+      corpus: Option[Corpus]): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    spark.createDataFrame(corpus match {
+      case Some(c) => fitLocal(c, k, iters)
+      case None => fitDistributed(e, k, iters)
+    }).toDF("cell", "cv")
+  }
+
+  /** The distributed fit: each iteration is a broadcast assignment plus a
+    * VecCentroid aggregate whose k rows are collected and re-broadcast. */
+  private def fitDistributed(e: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Double])] = {
     val spark = e.sparkSession
     import spark.implicits._
     // seed init: the k lowest-vec_id vectors, cell = rank among the seeds.
@@ -72,25 +122,60 @@ object AnnKMeans {
     // below does), NOT via a global row_number window: an unpartitioned
     // window funnels its whole input through one task, and PlanSpec now
     // rejects that shape anywhere in the inventory.
-    var cent = spark.createDataFrame(
+    var cent: Seq[(Int, Seq[Double])] =
       e.orderBy("vec_id").limit(k).select("vec_id", "v")
         .collect()
         .map(r => (r.getAs[Number]("vec_id").longValue, r.getSeq[Double](1)))
         .sortBy(_._1).zipWithIndex
-        .map { case ((_, v), i) => (i, v) }.toIndexedSeq)
-      .toDF("cell", "cv")
+        .map { case ((_, v), i) => (i, v) }.toIndexedSeq
     for (_ <- 1 to iters) {
-      val next = assign(e, cent)
-        .groupBy("cell").agg(VecCentroid.of(col("v")).as("cv"))
       // materialize the (tiny) model state; empty cells drop out, exactly
       // as the oracle's GROUP BY does
-      import spark.implicits._
-      cent = spark.createDataFrame(
-        next.select(col("cell"), col("cv")).as[(Int, Seq[Double])]
-          .collect().toIndexedSeq)
-        .toDF("cell", "cv")
+      cent = assign(e, spark.createDataFrame(cent).toDF("cell", "cv"))
+        .groupBy("cell").agg(VecCentroid.of(col("v")).as("cv"))
+        .select(col("cell"), col("cv")).as[(Int, Seq[Double])]
+        .collect().toIndexedSeq
     }
     cent
+  }
+
+  /** The same fit on a collected corpus: init = the k lowest vec_ids; each
+    * iteration assigns every vector to its best trunc4(cosine) cell, lowest
+    * cell on a tie (the order of [[assignProbes]]), and re-centers every
+    * non-empty cell from VecCentroid's quantized sums. Cell ids are kept. */
+  private def fitLocal(c: Corpus, k: Int, iters: Int): Seq[(Int, Seq[Double])] = {
+    var cent: Array[(Int, ArrayData)] =
+      c.vs.indices.sortBy(c.id).take(k).zipWithIndex.map { case (i, cell) => (cell, c.vs(i)) }.toArray
+    for (_ <- 1 to iters) {
+      val sums = new Array[Array[Long]](cent.length)
+      val n = new Array[Long](cent.length)
+      c.vs.foreach { v =>
+        val j = nearest(v, cent)._1
+        if (sums(j) == null) sums(j) = new Array[Long](v.numElements())
+        var i = 0
+        while (i < sums(j).length) { sums(j)(i) += VecCentroid.quant(v.getDouble(i)); i += 1 }
+        n(j) += 1
+      }
+      cent = cent.indices.filter(n(_) > 0).map { j =>
+        (cent(j)._1, UnsafeArrayData.fromPrimitiveArray(VecCentroid.mean(sums(j), n(j))): ArrayData)
+      }.toArray
+    }
+    cent.map { case (cell, cv) => (cell, cv.toDoubleArray().toSeq) }.toIndexedSeq
+  }
+
+  /** (index into `cent`, score) of `v`'s best centroid, `cent` sorted by
+    * cell: the highest trunc4(cosine), the lowest cell on a tie — the
+    * top-1 of [[assignProbes]] on the driver. */
+  private[operators] def nearest(v: ArrayData, cent: Array[(Int, ArrayData)]): (Int, Double) = {
+    var best = -1
+    var bestScore = Double.NegativeInfinity
+    var j = 0
+    while (j < cent.length) {
+      val sc = trunc4(CosineSim.compute(v, cent(j)._2, false, false))
+      if (sc > bestScore) { best = j; bestScore = sc }
+      j += 1
+    }
+    (best, bestScore)
   }
 
   /** Memoized centroids, keyed (tag, k, iters) per (session, sfDir): the
@@ -100,10 +185,19 @@ object AnnKMeans {
     * (k·dim doubles, materialized driver-side by construction), so
     * sharing it is the model-registry pattern, not a cache trick. The
     * builder runs the SAME deterministic fit either way; memoization
-    * changes which call pays, never the bits. */
+    * changes which call pays, never the bits. The fit reads the corpus
+    * copy of [[corpusMemo]] under the same tag. */
   def centroidsMemo(s: org.apache.spark.sql.SparkSession, d: String,
       tag: String, k: Int, iters: Int)(e: => DataFrame): DataFrame =
-    graft.Memo.memo(s, s"cent_${tag}_${k}_$iters", d)(centroids(e, k, iters))
+    graft.Memo.memo(s, s"cent_${tag}_${k}_$iters", d)(
+      centroidsOf(e, k, iters, corpusMemo(s, d, tag)(e)))
+
+  /** The driver copy of the corpus `tag` ([[collectCorpus]]), memoized per
+    * (session, sfDir) so every fit over it and the SemDeDup verdict share
+    * one collect. */
+  def corpusMemo(s: org.apache.spark.sql.SparkSession, d: String,
+      tag: String)(e: => DataFrame): Option[Corpus] =
+    graft.Memo.memo(s, s"corpus_$tag", d)(collectCorpus(e))
 
   /** Oracle-side twin: CTE chain c0, a1, c1, …, a_iters, c_iters where
     * `c$iters` holds the final centroids. Caller supplies the `e` CTE

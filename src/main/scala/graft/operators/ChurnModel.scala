@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Tables.md5Prefix
 import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
@@ -73,8 +74,8 @@ object ChurnModel {
     * same no-RNG hash-split idiom as sample_stratified_hash — stable
     * across partitioning, retries, and engines. */
   def withSplit(features: DataFrame): DataFrame = {
-    val h = conv(substring(md5(col("user_id").cast(StringType)
-      .cast(BinaryType)), 1, 8), 16, 10).cast(LongType) % 5
+    val h = md5Prefix(col("user_id").cast(StringType).cast(BinaryType), 8)
+      .cast(LongType) % 5
     features.withColumn("is_test", h === 0)
   }
 

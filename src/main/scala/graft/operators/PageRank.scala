@@ -41,9 +41,7 @@ object PageRank {
     * plain equi-join — values bit-identical (Round17OptSpec gates both
     * paths), only the join strategy changes. */
   def stateHint(df: DataFrame, rowBound: Long): DataFrame = {
-    val maxRows = df.sparkSession.conf
-      .get("graft.graph.broadcastStateMaxRows", "10000000").toLong
-    if (rowBound <= maxRows) broadcast(df) else df
+    if (rowBound <= StateGate.maxRows(df.sparkSession)) broadcast(df) else df
   }
 
   val damping = 0.85

@@ -227,8 +227,8 @@ object QExtra extends QueryPack {
     * debuggable at 100 TB. */
   private def scanSampleHash(s: SparkSession, d: String): DataFrame =
     t(s, d, "lineitem")
-      .filter(conv(substring(md5(col("l_orderkey").cast(StringType)
-        .cast(BinaryType)), 1, 4), 16, 10).cast(IntegerType) % 10 === 0)
+      .filter(md5Prefix(col("l_orderkey").cast(StringType).cast(BinaryType), 4)
+        .cast(IntegerType) % 10 === 0)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), sum4(col("l_extendedprice")).as("sum_price"))
       .orderBy("l_returnflag")

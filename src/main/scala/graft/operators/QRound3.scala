@@ -42,8 +42,7 @@ object QRound3 extends QueryPack {
   private val shMaxHamming = 3
 
   private def simhash60(s: SparkSession, d: String): DataFrame = {
-    val h = conv(substring(md5(col("word").cast(BinaryType)), 1, 15), 16, 10)
-      .cast(LongType)
+    val h = md5Prefix(col("word").cast(BinaryType), 15).cast(LongType)
     val bitSums: Seq[Column] = (0 until shBits).map { b =>
       sum(when(shiftright(col("h"), b).bitwiseAND(lit(1L)) === 1L, 1)
         .otherwise(-1)).as(s"s$b")
@@ -135,7 +134,7 @@ object QRound3 extends QueryPack {
       .map(b => s"(CASE WHEN s$b >= 0 THEN ${1L << b} ELSE 0 END)")
       .mkString(" + ")
     s"""WITH w AS (SELECT doc_id,
-       |    CAST(concat('0x', substr(md5(word), 1, 15)) AS BIGINT) AS h
+       |    ${oMd5Prefix("word", 15)} AS h
        |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents)),
        |  b AS (SELECT doc_id,
        |    $bitSums

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   *
   *  - `dedup_cc_cluster`: connected components over the LSH near-dup pair
   *    graph — the final stage of the dedup pipeline (pairs → clusters →
-  *    canonical-doc election). Iterative min-label propagation, the
-  *    standard distributed CC recipe (cf. "hash-to-min", Rastogi et al.).
+  *    canonical-doc election). Union-find on the driver under the state
+  *    gate; above it iterative min-label propagation, the standard
+  *    distributed CC recipe (cf. "hash-to-min", Rastogi et al.).
   *  - `chp_funnel_steps`: ordered funnel conversion (view → click →
   *    signup → purchase) per user — MorphL-style behavioral analytics.
   *  - `chp_retention_cohort`: monthly cohort retention matrix over orders.
@@ -32,23 +33,19 @@ object QRound4 extends QueryPack {
     * ≥ 0.8) into connected components and elect the minimum doc_id as each
     * cluster's canonical document; singleton docs are their own cluster.
     *
-    * Scale shape: min-label propagation — labels(v) := min(labels(v),
-    * min over neighbors' labels) — converges in diameter(G) rounds; near-dup
-    * components are near-cliques, so 2-3 rounds in practice. Each round is
-    * one equi-join (edges ⋈ labels on src) + one combine groupBy: both
-    * shuffle on uniform ids, no driver-side graph state. The fixpoint test
-    * rides on the label sum, which is strictly decreasing until converged
-    * (labels only ever decrease), so convergence detection costs one tiny
-    * aggregate per round, exactly like k-means' per-iteration centroid
-    * materialization (AnnKMeans.centroids). */
-  /** Converged CC labels over the LSH pair graph, memoized per
-    * (session, sfDir) via graft.Memo: the propagation loop leaves its
-    * result persisted (it is model state, like k-means centroids) — one
-    * shared entry per session instead of one leaked cache entry per call. */
+    * Labels are model state, memoized per (session, sfDir) via graft.Memo:
+    * one shared entry per session instead of one per call. Under the state
+    * gate (`graft.graph.broadcastStateMaxRows` edges, [[StateGate]]) the
+    * pair graph is collected in one job and labeled by driver-side
+    * union-find; the entry is then a local relation, with no cached blocks
+    * to lose. Over it, ConnectedComponents runs distributed min-label
+    * propagation (one equi-join + one combining groupBy per round, a
+    * label-sum fixpoint test) and the entry is its localCheckpointed
+    * result. Same labels either way. */
   private[operators] def ccLabels(s: SparkSession, d: String): DataFrame =
     graft.Memo.memo(s, "cc", d)(
       ConnectedComponents.labels(
-        QText.queries("dedup_lsh_pairs")(s, d)
+        QText.lshPairsPersisted(s, d)
           .select(col("a_id").as("src"), col("b_id").as("dst"))))
 
   private def dedupCcCluster(s: SparkSession, d: String): DataFrame = {
@@ -267,8 +264,8 @@ object QRound4 extends QueryPack {
     * retries, and engines (the oracle recomputes it exactly). Per stratum:
     * true count, sample count, sampled sum, true sum, realized rate. */
   private def sampleStratifiedHash(s: SparkSession, d: String): DataFrame = {
-    val h = conv(substring(md5(col("o_orderkey").cast(StringType)
-      .cast(BinaryType)), 1, 8), 16, 10).cast(LongType) % 10
+    val h = md5Prefix(col("o_orderkey").cast(StringType).cast(BinaryType), 8)
+      .cast(LongType) % 10
     t(s, d, "orders")
       .withColumn("keep", h === 0)
       .groupBy("o_orderpriority")
@@ -283,8 +280,7 @@ object QRound4 extends QueryPack {
 
   private val oSampleStratifiedHash =
     s"""WITH o AS (SELECT *,
-       |    CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))
-       |      AS BIGINT) % 10 = 0 AS keep
+       |    ${oMd5Prefix("CAST(o_orderkey AS VARCHAR)", 8)} % 10 = 0 AS keep
        |  FROM orders)
        |SELECT o_orderpriority, count(*) AS n_total,
        |  CAST(SUM(CAST(keep AS BIGINT)) AS BIGINT) AS n_sample,

@@ -4,7 +4,10 @@ import graft.QueryPack
 import graft.functions.VecCentroid
 import graft.plans.{CosineSim, DotLong}
 import graft.sources.Tables._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -45,7 +48,9 @@ import org.apache.spark.storage.StorageLevel
   * Scale shapes: semdedup's pair space is bounded per cell (cells scale
   * with N in a real deployment — N/cells ≈ thousands — so within-cell
   * pairing is the SemDeDup paper's own cost model; the k-means fit is the
-  * memoized broadcast-model loop shared with the dedup/ANN family). EWMA
+  * memoized one shared with the dedup/ANN family, and both the fit and
+  * the verdict run on one driver copy of the corpus under the state gate,
+  * distributed above it). EWMA
   * is one window pass partitioned on uniform user_id with a fixed 8-term
   * frame. LPA is `rounds` bounded shuffles on the (sparse) edge list, all
   * keyed by vertex id; labels never leave the executors. The phash scan
@@ -68,18 +73,36 @@ object QRound7b extends QueryPack {
     * against on every downstream filter (the SemDeDup paper's output is a
     * keep-list, not a query). Re-deriving it per call re-ran the
     * same-cell pair join + centroid-similarity ranking every warm run
-    * (VERDICT r13 #1: the last dedup-family key holding per-call derived
-    * state, measured 1.8–2.0× the oracle). Same discipline as
-    * [[QRound7.ivfpqIndex]]: tag embeds the cell geometry, build is
-    * localCheckpointed so warm calls read an O(N) cached table. */
+    * (VERDICT r13 #1). Same discipline as [[QRound7.ivfpqIndex]]: the tag
+    * embeds the cell geometry. */
   private[graft] def semdedupVerdict(s: SparkSession, d: String): DataFrame =
-    graft.Memo.memo(s, s"semverdict_${sdCells}_$sdIters", d)(
-      semdedupVerdictBuild(s, d).localCheckpoint(true))
+    graft.Memo.memo(s, s"semverdict_${sdCells}_$sdIters", d) {
+      val v = semdedupVerdictBuild(s, d)
+      // a driver-built verdict has no lineage to cut and no blocks to lose;
+      // the distributed one is localCheckpointed so warm calls read an
+      // O(N) table
+      if (v.queryExecution.analyzed.isInstanceOf[LocalRelation]) v
+      else v.localCheckpoint(true)
+    }
 
-  /** The raw (un-memoized) verdict dataflow behind [[semdedupVerdict]]. */
+  /** The raw (un-memoized) verdict behind [[semdedupVerdict]]. When the
+    * k-means corpus copy exists (AnnKMeans.corpusMemo: rows × dim under the
+    * state gate) and the same-cell pair space Σ n_cell² fits the gate too,
+    * the assignment and the pair scan run on the driver over that copy
+    * ([[verdictLocal]]) and the result is a local relation. Otherwise it is
+    * the distributed verdict dataflow over the driver's centroids. Same
+    * rows and schema either way. */
   private[graft] def semdedupVerdictBuild(s: SparkSession, d: String): DataFrame = {
     val e = QSim.embPersisted(s, d)
     val cent = AnnKMeans.centroidsMemo(s, d, "emb", sdCells, sdIters)(e)
+    val dist = verdictDistributed(e, cent)
+    AnnKMeans.corpusMemo(s, d, "emb")(e)
+      .flatMap(verdictLocal(_, cent, StateGate.maxRows(s)))
+      .map(rows => s.createDataFrame(java.util.Arrays.asList(rows: _*), dist.schema))
+      .getOrElse(dist)
+  }
+
+  private def verdictDistributed(e: DataFrame, cent: DataFrame): DataFrame = {
     // nearest cell per vector + similarity to the OWN cell centroid (the
     // SemDeDup keep/remove ranking signal)
     val asg = AnnKMeans.assign(e, cent)
@@ -102,6 +125,31 @@ object QRound7b extends QueryPack {
       .select(col("vec_id"), col("cell"), col("csim"),
         when(col("rm").isNotNull, lit(0)).otherwise(lit(1))
           .cast(IntegerType).as("keep"))
+  }
+
+  /** [[verdictDistributed]]'s rows (vec_id, cell, csim, keep) computed on
+    * the driver, or None when the same-cell pairs Σ n_cell² exceed `gate`.
+    * The centroids are a local relation, so reading them runs no job. */
+  private def verdictLocal(c: AnnKMeans.Corpus, cent: DataFrame,
+      gate: Long): Option[Array[Row]] = {
+    val cells = cent.collect().map(r => (r.getInt(0),
+      UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray): ArrayData))
+      .sortBy(_._1)
+    val asg = c.vs.map(AnnKMeans.nearest(_, cells)) // (cell index, csim)
+    val members = c.vs.indices.groupBy(i => asg(i)._1).values.toSeq
+    if (members.map(m => m.size.toLong * m.size).sum > gate) None
+    else {
+      val removed = new Array[Boolean](c.vs.length)
+      for (m <- members; a <- m; b <- m if c.id(a) != c.id(b) && !removed(b)) {
+        val (ca, cb) = (asg(a)._2, asg(b)._2)
+        if ((ca < cb || (ca == cb && c.id(a) < c.id(b))) &&
+            trunc4(CosineSim.compute(c.vs(a), c.vs(b), false, false)) >= 0.4)
+          removed(b) = true
+      }
+      Some(c.vs.indices.map { i =>
+        Row(c.ids(i), cells(asg(i)._1)._1, asg(i)._2, if (removed(i)) 0 else 1)
+      }.toArray)
+    }
   }
 
   private def dedupSemdedup(s: SparkSession, d: String): DataFrame =
@@ -541,9 +589,8 @@ object QRound7b extends QueryPack {
   private def sampleImportanceWeight(s: SparkSession, d: String): DataFrame = {
     val p = least(lit(1.0), greatest(lit(0.05),
       col("n_chars").cast(DoubleType) / lit(2000.0)))
-    val h01 = conv(substring(md5(col("doc_id").cast(StringType)
-      .cast(BinaryType)), 1, 8), 16, 10).cast(LongType)
-      .cast(DoubleType) / lit(4294967296.0)
+    val h01 = md5Prefix(col("doc_id").cast(StringType).cast(BinaryType), 8)
+      .cast(LongType).cast(DoubleType) / lit(4294967296.0)
     val wq = floor(lit(1e4) / col("p") + lit(0.5)).cast(LongType)
     t(s, d, "documents")
       .select(col("doc_id"), col("lang"), p.as("p"), h01.as("h"))
@@ -560,8 +607,7 @@ object QRound7b extends QueryPack {
   private val oSampleImportanceWeight =
     s"""WITH d AS (SELECT doc_id, lang,
        |    least(1.0, greatest(5e-2, CAST(n_chars AS DOUBLE) / 2e3)) AS p,
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-       |      AS BIGINT) / 4294967296.0 AS h
+       |    ${oMd5Prefix("CAST(doc_id AS VARCHAR)", 8)} / 4294967296.0 AS h
        |  FROM documents),
        |  k AS (SELECT lang, p, h < p AS keep,
        |          CAST(floor(1e4 / p + 5e-1) AS BIGINT) AS wq FROM d)

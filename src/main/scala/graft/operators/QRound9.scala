@@ -198,29 +198,19 @@ object QRound9 extends QueryPack {
   // ---- stream_dedup_minhash: streaming near-dup admission control ----
 
   /** Per-row MinHash band keys: (doc_id, ts, text) → `QText.lshB` rows
-    * (doc_id, ts, band, bkey), the dedup_lsh_pairs geometry. Unlike
-    * QText's explode+groupBy signature pipeline, every signature here is
-    * computed per ROW with HOFs (array_min over the per-shingle hash
-    * chunks) — entirely map-side, which is what makes the identical
+    * (doc_id, ts, band, bkey), the dedup_lsh_pairs geometry. The
+    * signature and band keys are QText's: the signature is a per-row
+    * kernel, entirely map-side, which is what makes the identical
     * transform legal under Structured Streaming (no stateful aggregate
-    * before the dedup operator). The band keys are QText's. Docs under 3
-    * tokens have no shingles and emit no band rows (they are admitted
-    * vacuously by the rollup). */
+    * before the dedup operator). Docs under 3 tokens have no shingles and
+    * emit no band rows (they are admitted vacuously by the rollup). */
   private[graft] def minhashBandRows(docs: DataFrame): DataFrame = {
-    import QText.{lshB, lshR}
     val withSh = docs
       .select(col("doc_id"), col("ts"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), col("ts"), TrigramShingles.of(col("toks")).as("shs"))
-    val hashed = (0 until lshB).foldLeft(withSh) { (df, j) =>
-      df.withColumn(s"h$j",
-        transform(col("shs"), sh => md5(concat(lit(s"$j|"), sh).cast(BinaryType))))
-    }
-    val sig = hashed.select(col("doc_id") +: col("ts") +:
-      (for (j <- 0 until lshB; c <- 0 until lshR) yield
-        array_min(transform(col(s"h$j"), h => substring(h, c * 8 + 1, 8)))
-          .as(s"k${j * lshR + c}")): _*)
-    QText.bandKeys(sig, lshB, lshR, Seq("doc_id", "ts"))
+    QText.bandKeys(QText.signature(withSh, Seq("doc_id", "ts")),
+      QText.lshB, QText.lshR, Seq("doc_id", "ts"))
   }
 
   /** Surviving band rows. Streaming: watermark + Spark 4's

@@ -147,8 +147,8 @@ object QRound9ak extends QueryPack {
       .groupBy("hod", "dow")
       .agg(count(lit(1)).as("n"), sum("is_p").as("n_purchase"))
       .select(col("hod"), col("dow"),
-        (conv(substring(md5(concat_ws("x", col("hod"), col("dow"))), 1, 13),
-          16, 10).cast(LongType) % 64).as("bucket"),
+        (md5Prefix(concat_ws("x", col("hod"), col("dow")), 13)
+          .cast(LongType) % 64).as("bucket"),
         col("n"), col("n_purchase"),
         trunc4(col("n_purchase").cast(DoubleType) / col("n").cast(DoubleType))
           .as("cvr"))
@@ -166,8 +166,7 @@ object QRound9ak extends QueryPack {
        |    CAST(sum(is_p) AS BIGINT) AS n_purchase
        |  FROM e GROUP BY 1, 2)
        |SELECT hod, dow,
-       |  CAST(concat('0x', substr(md5(CAST(hod AS VARCHAR) || 'x' ||
-       |    CAST(dow AS VARCHAR)), 1, 13)) AS BIGINT) % 64 AS bucket,
+       |  ${oMd5Prefix("CAST(hod AS VARCHAR) || 'x' || CAST(dow AS VARCHAR)", 13)} % 64 AS bucket,
        |  n, n_purchase,
        |  ${oTrunc4("CAST(n_purchase AS DOUBLE) / n")} AS cvr
        |FROM g ORDER BY hod, dow""".stripMargin

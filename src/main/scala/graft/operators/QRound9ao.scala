@@ -158,8 +158,8 @@ object QRound9ao extends QueryPack {
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("chars_total"))
       .select(col("source"),
-        when(conv(substring(md5(col("source")), 1, 4), 16, 10)
-          .cast(LongType) % 6 === 0, "eval").otherwise("train").as("split"),
+        when(md5Prefix(col("source"), 4).cast(LongType) % 6 === 0, "eval")
+          .otherwise("train").as("split"),
         col("n_docs"), col("chars_total"))
       .orderBy("source")
 
@@ -167,8 +167,8 @@ object QRound9ao extends QueryPack {
     groupSplit(t(s, d, "documents"))
 
   private val oSampleGroupSplit =
-    """SELECT source,
-      |  CASE WHEN CAST(concat('0x', substr(md5(source), 1, 4)) AS BIGINT)
+    s"""SELECT source,
+      |  CASE WHEN ${oMd5Prefix("source", 4)}
       |    % 6 = 0 THEN 'eval' ELSE 'train' END AS split,
       |  CAST(count(*) AS BIGINT) AS n_docs,
       |  CAST(sum(n_chars) AS BIGINT) AS chars_total

@@ -44,9 +44,8 @@ object QRound9at extends QueryPack {
     val e = t(s, d, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(dd)).as("v"),
-        (conv(substring(md5(col("vec_id").cast(StringType)
-          .cast(BinaryType)), 1, 15), 16, 10).cast(LongType)
-          % unifBuckets).as("bkt"))
+        (md5Prefix(col("vec_id").cast(StringType).cast(BinaryType), 15)
+          .cast(LongType) % unifBuckets).as("bkt"))
     val pairs = e.select(col("bkt"), col("vec_id").as("ia"), col("v").as("va"))
       .join(e.select(col("bkt"), col("vec_id").as("ib"), col("v").as("vb")),
         "bkt")
@@ -67,8 +66,7 @@ object QRound9at extends QueryPack {
 
   private val oEmbUniformityMetric =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-       |    CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-       |      AS BIGINT) % $unifBuckets AS bkt
+       |    ${oMd5Prefix("CAST(vec_id AS VARCHAR)", 15)} % $unifBuckets AS bkt
        |  FROM embeddings),
        |pairs AS (SELECT
        |    ${oTrunc4("list_cosine_similarity(a.v, b.v)")} AS c

@@ -302,8 +302,7 @@ object QRound9b extends QueryPack {
   private[graft] def reservoirWeighted(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), greatest(col("n_chars"), lit(1L)).as("w"))
       .withColumn("v",
-        conv(substring(md5(col("doc_id").cast(StringType)), 1, 13), 16, 10)
-          .cast(LongType))
+        md5Prefix(col("doc_id").cast(StringType), 13).cast(LongType))
       .withColumn("skey", trunc6(
         log((col("v") + lit(1L)).cast(DoubleType) / lit(4.503599627370496e15))
           / col("w").cast(DoubleType)))
@@ -316,7 +315,7 @@ object QRound9b extends QueryPack {
 
   private val oSampleReservoirWeighted =
     s"""SELECT doc_id, greatest(n_chars, 1) AS w,
-       |  ${oTrunc6("ln((CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) + 1) / 4.503599627370496e15) / greatest(n_chars, 1)")} AS skey
+       |  ${oTrunc6(s"ln((${oMd5Prefix("CAST(doc_id AS VARCHAR)", 13)} + 1) / 4.503599627370496e15) / greatest(n_chars, 1)")} AS skey
        |FROM documents ORDER BY skey DESC, doc_id LIMIT $resK""".stripMargin
 
   // ---- text_c4_filters ----

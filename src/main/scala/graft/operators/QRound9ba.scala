@@ -97,8 +97,8 @@ object QRound9ba extends QueryPack {
   private[graft] def gofCheck(docs: DataFrame): DataFrame = {
     val dd = DoubleType
     val sampled = docs.filter(
-      conv(substring(md5(col("doc_id").cast(StringType)
-        .cast(BinaryType)), 1, 15), 16, 10).cast(LongType) % 10 === 0)
+      md5Prefix(col("doc_id").cast(StringType).cast(BinaryType), 15)
+        .cast(LongType) % 10 === 0)
     val pop = docs.groupBy("lang").agg(count(lit(1)).as("n_pop"))
     val smp = sampled.groupBy("lang").agg(count(lit(1)).as("n_obs"))
     val tots = pop.agg(sum("n_pop").as("pop_total"))
@@ -135,8 +135,7 @@ object QRound9ba extends QueryPack {
 
   private val oSampleGofCheck =
     s"""WITH smp0 AS (SELECT * FROM documents
-       |  WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-       |    AS BIGINT) % 10 = 0),
+       |  WHERE ${oMd5Prefix("CAST(doc_id AS VARCHAR)", 15)} % 10 = 0),
        |pop AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_pop
        |  FROM documents GROUP BY 1),
        |smp AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_obs

@@ -32,8 +32,8 @@ object QRound9bb extends QueryPack {
     * S-curve threshold estimate (1/b)^(1/r) per config — more bands of
     * fewer rows catch lower-similarity pairs (more candidates).
     *
-    * Scale shape: one signature aggregate over the memoized shingle
-    * table (QText.signature); per config the bucket-local pair
+    * Scale shape: one per-row signature projection over the memoized
+    * shingle table (QText.signature); per config the bucket-local pair
     * enumeration of dedup_lsh_pairs — uniform md5 keys, never all-pairs. */
   private[graft] def lshTuning(s: SparkSession, d: String): DataFrame = {
     val sig = graft.Memo.memo(s, "lshtunesig", d)(
@@ -81,8 +81,8 @@ object QRound9bb extends QueryPack {
   private[graft] def runManifest(docs: DataFrame): DataFrame = {
     def fp(df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),
-        sum(conv(substring(md5(col("doc_id").cast(StringType)
-          .cast(BinaryType)), 1, 15), 16, 10).cast(LongType) % lit(1000000000000L))
+        sum(md5Prefix(col("doc_id").cast(StringType).cast(BinaryType), 15)
+          .cast(LongType) % lit(1000000000000L))
           .as("content_fp"))
     val raw = docs
     val clean = raw.filter(col("n_chars") >= 200)
@@ -106,16 +106,13 @@ object QRound9bb extends QueryPack {
        |ded AS (SELECT min(doc_id) AS doc_id FROM clean GROUP BY md5(text))
        |SELECT CAST(1 AS BIGINT) AS stage_no, '1_raw' AS stage,
        |  CAST(count(*) AS BIGINT) AS n_rows,
-       |  CAST(sum(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),
-       |    1, 15)) AS BIGINT) % 1000000000000) AS BIGINT) AS content_fp
+       |  CAST(sum(${oMd5Prefix("CAST(doc_id AS VARCHAR)", 15)} % 1000000000000) AS BIGINT) AS content_fp
        |FROM raw
        |UNION ALL SELECT 2, '2_clean', CAST(count(*) AS BIGINT),
-       |  CAST(sum(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),
-       |    1, 15)) AS BIGINT) % 1000000000000) AS BIGINT)
+       |  CAST(sum(${oMd5Prefix("CAST(doc_id AS VARCHAR)", 15)} % 1000000000000) AS BIGINT)
        |FROM clean
        |UNION ALL SELECT 3, '3_dedup', CAST(count(*) AS BIGINT),
-       |  CAST(sum(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),
-       |    1, 15)) AS BIGINT) % 1000000000000) AS BIGINT)
+       |  CAST(sum(${oMd5Prefix("CAST(doc_id AS VARCHAR)", 15)} % 1000000000000) AS BIGINT)
        |FROM ded
        |ORDER BY stage_no""".stripMargin
 

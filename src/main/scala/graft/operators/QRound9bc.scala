@@ -125,8 +125,7 @@ object QRound9bc extends QueryPack {
        |    CASE WHEN s.seed = 0 THEN
        |      ${oAbArm("user_id")}
        |    ELSE
-       |      CAST(concat('0x', substr(md5(CAST(s.seed AS VARCHAR) || '|'
-       |        || CAST(user_id AS VARCHAR)), 1, 4)) AS BIGINT) % 2
+       |      ${oMd5Prefix("CAST(s.seed AS VARCHAR) || '|' || CAST(user_id AS VARCHAR)", 4)} % 2
        |    END AS arm
        |    FROM u, seeds s) GROUP BY seed),
        |d AS (SELECT seed, CAST(c_t AS DOUBLE) / n_t

@@ -165,8 +165,7 @@ object QRound9be extends QueryPack {
     val vocab = docs
       .select(explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "").distinct()
-      .withColumn("h", conv(substring(md5(col("term")
-        .cast(BinaryType)), 1, 15), 16, 10).cast(LongType))
+      .withColumn("h", md5Prefix(col("term").cast(BinaryType), 15).cast(LongType))
       .localCheckpoint(true)
     val branches = hashBits.map { k =>
       val space = 1L << k
@@ -197,7 +196,7 @@ object QRound9be extends QueryPack {
          |FROM vocab""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH vocab AS MATERIALIZED (SELECT DISTINCT term,
-       |    CAST(concat('0x', substr(md5(term), 1, 15)) AS BIGINT) AS h
+       |    ${oMd5Prefix("term", 15)} AS h
        |  FROM (SELECT unnest(string_split(text, ' ')) AS term
        |    FROM documents) WHERE term <> '')
        |$branches

@@ -160,9 +160,9 @@ object QRound9bt extends QueryPack {
         .as("q"))
     val signs = s.range(16).select(col("id").cast(IntegerType).as("tdim"))
       .crossJoin(s.range(64).select(col("id").cast(IntegerType).as("sdim")))
-      .select(col("tdim"), col("sdim"), expr(
-        "1L - 2L * (CAST(conv(substring(md5(concat(CAST(tdim AS STRING), '_', CAST(sdim AS STRING))), 1, 15), 16, 10) AS BIGINT) % 2L)")
-        .as("sg"))
+      .select(col("tdim"), col("sdim"), (lit(1L) - lit(2L) *
+        (md5Prefix(concat(col("tdim").cast(StringType), lit("_"),
+          col("sdim").cast(StringType)), 15).cast(LongType) % lit(2L))).as("sg"))
     val comps = qe.select(col("vec_id"), posexplode(col("q")))
       .select(col("vec_id"), col("pos").as("sdim"), col("col").as("qv"))
     val proj = comps.join(broadcast(signs), "sdim")
@@ -206,7 +206,7 @@ object QRound9bt extends QueryPack {
        |      x -> CAST(floor(CAST(x AS DOUBLE)*1e6 + 5e-1) AS BIGINT)) AS q
        |  FROM embeddings),
        |signs AS (SELECT t.tdim, s.sdim,
-       |    CAST(1 - 2 * (CAST(concat('0x', substr(md5(concat(CAST(t.tdim AS VARCHAR), '_', CAST(s.sdim AS VARCHAR))), 1, 15)) AS BIGINT) % 2) AS BIGINT) AS sg
+       |    CAST(1 - 2 * (${oMd5Prefix("concat(CAST(t.tdim AS VARCHAR), '_', CAST(s.sdim AS VARCHAR))", 15)} % 2) AS BIGINT) AS sg
        |  FROM (SELECT unnest(range(16)) AS tdim) t,
        |       (SELECT unnest(range(64)) AS sdim) s),
        |comps AS (SELECT vec_id, CAST(i - 1 AS INT) AS sdim, q[i] AS qv

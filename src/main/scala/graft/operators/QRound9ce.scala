@@ -43,13 +43,11 @@ object QRound9ce extends QueryPack {
       s.range(nSrv).select(col("id").cast(IntegerType).as("srv"))
         .crossJoin(s.range(chVnodes).select(col("id").cast(IntegerType)
           .as("vn")))
-        .select(col("srv"), expr(
-          "CAST(conv(substring(md5(concat('s', CAST(srv AS STRING), '_v', CAST(vn AS STRING))), 1, 15), 16, 10) AS BIGINT)")
-          .as("pos"))
+        .select(col("srv"), md5Prefix(concat(lit("s"), col("srv").cast(StringType),
+          lit("_v"), col("vn").cast(StringType)), 15).cast(LongType).as("pos"))
     val keys = t(s, d, "events").select(col("user_id")).distinct()
-      .select(col("user_id"), expr(
-        "CAST(conv(substring(md5(concat('u', CAST(user_id AS STRING))), 1, 15), 16, 10) AS BIGINT)")
-        .as("kpos"))
+      .select(col("user_id"), md5Prefix(concat(lit("u"),
+        col("user_id").cast(StringType)), 15).cast(LongType).as("kpos"))
     def assign(r: DataFrame, tag: String): DataFrame = {
       val cand = keys.crossJoin(broadcast(r))
       // clockwise successor: min pos >= kpos, else global min (wrap)
@@ -77,9 +75,7 @@ object QRound9ce extends QueryPack {
 
   private val oServeConsistentHash = {
     def ringSql(n: Int) =
-      s"""SELECT srv, CAST(concat('0x', substr(md5(concat('s',
-         |    CAST(srv AS VARCHAR), '_v', CAST(vn AS VARCHAR))), 1, 15))
-         |    AS BIGINT) AS pos
+      s"""SELECT srv, ${oMd5Prefix("concat('s', CAST(srv AS VARCHAR), '_v', CAST(vn AS VARCHAR))", 15)} AS pos
          |  FROM (SELECT unnest(range($n)) AS srv),
          |       (SELECT unnest(range($chVnodes)) AS vn)""".stripMargin
     def assignSql(ringCte: String, out: String) =
@@ -89,8 +85,7 @@ object QRound9ce extends QueryPack {
          |      CASE WHEN r.pos >= k.kpos THEN 0 ELSE 1 END, r.pos) AS rk
          |  FROM keys k, $ringCte r) WHERE rk = 1)""".stripMargin
     s"""WITH keys AS MATERIALIZED (SELECT DISTINCT user_id,
-       |    CAST(concat('0x', substr(md5(concat('u',
-       |      CAST(user_id AS VARCHAR))), 1, 15)) AS BIGINT) AS kpos
+       |    ${oMd5Prefix("concat('u', CAST(user_id AS VARCHAR))", 15)} AS kpos
        |  FROM events),
        |ring4 AS MATERIALIZED (${ringSql(chServers)}),
        |ring5 AS MATERIALIZED (${ringSql(chServers + 1)}),

@@ -216,7 +216,7 @@ object QRound9cf extends QueryPack {
        |      x -> CAST(floor(CAST(x AS DOUBLE)*1e6 + 5e-1) AS BIGINT)) AS q
        |  FROM embeddings),
        |signs AS (SELECT t.tdim, s.sdim,
-       |    CAST(1 - 2 * (CAST(concat('0x', substr(md5(concat(CAST(t.tdim AS VARCHAR), '_', CAST(s.sdim AS VARCHAR))), 1, 15)) AS BIGINT) % 2) AS BIGINT) AS sg
+       |    CAST(1 - 2 * (${oMd5Prefix("concat(CAST(t.tdim AS VARCHAR), '_', CAST(s.sdim AS VARCHAR))", 15)} % 2) AS BIGINT) AS sg
        |  FROM (SELECT unnest(range(16)) AS tdim) t,
        |       (SELECT unnest(range(64)) AS sdim) s),
        |comps AS (SELECT vec_id, CAST(i - 1 AS INT) AS sdim, q[i] AS qv

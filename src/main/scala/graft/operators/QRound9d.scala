@@ -210,7 +210,7 @@ object QRound9d extends QueryPack {
     * bounded-key aggregate; the total is a broadcast 1-row join. */
   private[graft] def shardAssign(docs: DataFrame): DataFrame = {
     val assigned = docs.select(
-      (conv(substring(md5(col("doc_id").cast(StringType)), 1, 4), 16, 10)
+      (md5Prefix(col("doc_id").cast(StringType), 4)
         .cast(LongType) % nShards).as("shard"),
       size(split(col("text"), " ")).cast(LongType).as("n_toks"))
     val g = assigned.groupBy("shard")
@@ -228,7 +228,7 @@ object QRound9d extends QueryPack {
 
   private val oPipelineShardAssign =
     s"""WITH a AS (SELECT
-       |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % $nShards AS shard,
+       |    ${oMd5Prefix("CAST(doc_id AS VARCHAR)", 4)} % $nShards AS shard,
        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
        |  FROM documents),
        |g AS (SELECT shard, count(*) AS n_docs,

@@ -163,8 +163,7 @@ object QRound9e extends QueryPack {
     * records before training. Map-side assignment + one bounded-key
     * aggregate; per-language totals broadcast back. */
   private[graft] def splitTrainEval(docs: DataFrame): DataFrame = {
-    val b = conv(substring(md5(col("doc_id").cast(StringType)), 1, 4), 16, 10)
-      .cast(LongType) % 100
+    val b = md5Prefix(col("doc_id").cast(StringType), 4).cast(LongType) % 100
     val assigned = docs.select(col("lang"),
       when(b < 80, "train").when(b < 90, "val").otherwise("test").as("split"),
       size(split(col("text"), " ")).cast(LongType).as("n_toks"))
@@ -183,8 +182,8 @@ object QRound9e extends QueryPack {
 
   private val oSampleSplitTrainEval =
     s"""WITH a AS (SELECT lang,
-       |    CASE WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 80 THEN 'train'
-       |         WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 90 THEN 'val'
+       |    CASE WHEN ${oMd5Prefix("CAST(doc_id AS VARCHAR)", 4)} % 100 < 80 THEN 'train'
+       |         WHEN ${oMd5Prefix("CAST(doc_id AS VARCHAR)", 4)} % 100 < 90 THEN 'val'
        |         ELSE 'test' END AS split,
        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
        |  FROM documents),

@@ -105,16 +105,16 @@ object QRound9g extends QueryPack {
     import events.sparkSession.implicits._
     val rows = (0 until cmsD).map { i =>
       events.select(lit(i).as("row"),
-        (conv(substring(md5(concat(lit(s"$i|"), col("event_type"))), 1, 8),
-          16, 10).cast(LongType) % cmsW).as("bucket"))
+        (md5Prefix(concat(lit(s"$i|"), col("event_type")), 8)
+          .cast(LongType) % cmsW).as("bucket"))
     }.reduce(_ unionByName _)
     val counters = rows.groupBy("row", "bucket").agg(count(lit(1)).as("c"))
     val exact = events.groupBy("event_type").agg(count(lit(1)).as("exact"))
     val addressed = exact.select(col("event_type"))
       .crossJoin(broadcast((0 until cmsD).toDF("row")))
       .withColumn("bucket",
-        conv(substring(md5(concat(col("row").cast(StringType), lit("|"),
-          col("event_type"))), 1, 8), 16, 10).cast(LongType) % cmsW)
+        md5Prefix(concat(col("row").cast(StringType), lit("|"),
+          col("event_type")), 8).cast(LongType) % cmsW)
     addressed.join(broadcast(counters), Seq("row", "bucket"))
       .groupBy("event_type").agg(min(col("c")).as("cms_est"))
       .join(exact, "event_type")
@@ -128,7 +128,7 @@ object QRound9g extends QueryPack {
 
   private val oAggCmsEstimate = {
     val rowSelects = (0 until cmsD).map { i =>
-      s"""SELECT $i AS row, CAST(concat('0x', substr(md5('$i|' || event_type), 1, 8)) AS BIGINT) % $cmsW AS bucket FROM events"""
+      s"""SELECT $i AS row, ${oMd5Prefix(s"'$i|' || event_type", 8)} % $cmsW AS bucket FROM events"""
     }.mkString("\n  UNION ALL ")
     s"""WITH rows_ AS ($rowSelects),
        |counters AS (SELECT row, bucket, count(*) AS c
@@ -136,7 +136,7 @@ object QRound9g extends QueryPack {
        |exact AS (SELECT event_type, count(*) AS exact
        |  FROM events GROUP BY 1),
        |addr AS (SELECT e.event_type, r.row,
-       |    CAST(concat('0x', substr(md5(r.row || '|' || e.event_type), 1, 8)) AS BIGINT) % $cmsW AS bucket
+       |    ${oMd5Prefix("r.row || '|' || e.event_type", 8)} % $cmsW AS bucket
        |  FROM exact e, (SELECT unnest(generate_series(0, ${cmsD - 1})) AS row) r),
        |est AS (SELECT a.event_type, CAST(min(c.c) AS BIGINT) AS cms_est
        |  FROM addr a JOIN counters c ON c.row = a.row AND c.bucket = a.bucket

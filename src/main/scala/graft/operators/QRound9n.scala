@@ -41,7 +41,7 @@ object QRound9n extends QueryPack {
         explode(split(lower(col("text")), "[^a-z]+")).as("term"))
       .filter(col("term") =!= "" && length(col("term")) >= 3)
       .withColumn("bucket",
-        (conv(substring(md5(col("term").cast(BinaryType)), 1, 15), 16, 10)
+        (md5Prefix(col("term").cast(BinaryType), 15)
           .cast(LongType) % tfBuckets).cast(IntegerType))
       .groupBy("doc_id", "bucket")
       .agg(count(lit(1)).as("tf"))
@@ -56,7 +56,7 @@ object QRound9n extends QueryPack {
        |      '[^a-z]+')) AS tok FROM documents)
        |  WHERE tok <> '' AND length(tok) >= 3)
        |SELECT doc_id,
-       |  CAST(CAST(concat('0x', substr(md5(term), 1, 15)) AS BIGINT)
+       |  CAST(${oMd5Prefix("term", 15)}
        |    % $tfBuckets AS INT) AS bucket,
        |  CAST(count(*) AS BIGINT) AS tf
        |FROM toks GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin
@@ -81,8 +81,8 @@ object QRound9n extends QueryPack {
   private[graft] def bootstrapHash(docs: DataFrame): DataFrame = {
     val reps = docs.sparkSession.range(0, bootReps)
       .select(col("id").cast(IntegerType).as("rep"))
-    val u = conv(substring(md5(concat(col("rep").cast(StringType), lit("|"),
-        col("doc_id").cast(StringType)).cast(BinaryType)), 1, 15), 16, 10)
+    val u = md5Prefix(concat(col("rep").cast(StringType), lit("|"),
+        col("doc_id").cast(StringType)).cast(BinaryType), 15)
       .cast(LongType).cast(DoubleType) / lit(1152921504606846976.0) // 2^60
     val k = when(u < exp(lit(-1.0)), 0L)
       .when(u < lit(2.0) * exp(lit(-1.0)), 1L)
@@ -118,8 +118,7 @@ object QRound9n extends QueryPack {
        |      WHEN u < (8e0 / 3e0) * exp(-1) THEN 3
        |      ELSE 4 END AS k
        |  FROM (SELECT rep, n_chars,
-       |      CAST(CAST(concat('0x', substr(md5(rep || '|' || doc_id), 1, 15))
-       |        AS BIGINT) AS DOUBLE) / 1152921504606846976.0 AS u
+       |      CAST(${oMd5Prefix("rep || '|' || doc_id", 15)} AS DOUBLE) / 1152921504606846976.0 AS u
        |    FROM documents, reps) AS r(rep, n_chars, u)),
        |tot AS (SELECT CAST(sum(n_chars) AS BIGINT) AS corpus_mass
        |  FROM documents)

@@ -48,7 +48,7 @@ object QSim extends QueryPack {
     * but persisting anew on every call leaked one cache entry per call
     * for the session lifetime (ADVICE r3). One shared entry per session
     * is the intended semantics: later calls reuse the same hot cache. */
-  private[operators] def embPersisted(s: SparkSession, d: String): DataFrame =
+  private[graft] def embPersisted(s: SparkSession, d: String): DataFrame =
     graft.Memo.memo(s, "emb", d)(
       embD(s, d).select("vec_id", "v")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
-import graft.functions.{BigramExplode, TrigramShingles}
+import graft.functions.{BigramExplode, MinHashSig, TrigramShingles}
 import graft.sources.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -105,8 +105,7 @@ object QText extends QueryPack {
   // ---- SimHash (16-bit, md5-derived — portable) ----
 
   private def textSimhash(s: SparkSession, d: String): DataFrame = {
-    val h = conv(substring(md5(col("word").cast(BinaryType)), 1, 15), 16, 10)
-      .cast(LongType)
+    val h = md5Prefix(col("word").cast(BinaryType), 15).cast(LongType)
     val bitSums: Seq[Column] = (0 until 16).map { b =>
       sum(when((shiftright(col("h"), b).bitwiseAND(lit(1L))) === 1L, 1)
         .otherwise(-1)).as(s"s$b")
@@ -131,7 +130,7 @@ object QText extends QueryPack {
       .map(b => s"(CASE WHEN s$b >= 0 THEN ${1 << b} ELSE 0 END)")
       .mkString(" + ")
     s"""WITH w AS (SELECT doc_id,
-       |    CAST(concat('0x', substr(md5(word), 1, 15)) AS BIGINT) AS h
+       |    ${oMd5Prefix("word", 15)} AS h
        |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS word FROM documents)),
        |  b AS (SELECT doc_id,
        |    $bitSums
@@ -200,30 +199,30 @@ object QText extends QueryPack {
       .select(col("doc_id"), TrigramShingles.of(col("toks")).as("shs"))
   }
 
-  /** Candidate pairs from band-bucket collisions — exposed for the spec
-    * that asserts |candidates| ≪ N²/2. One shuffle keyed by (band, bkey)
-    * (uniform md5 keys), in-bucket pairs only: never an all-pairs join. */
+  /** Candidate pairs from band-bucket collisions over the memoized shingle
+    * table — exposed for the specs that assert |candidates| ≪ N²/2 and
+    * that no shuffle sits between the shingles and the band keys. One
+    * shuffle keyed by (band, bkey) (uniform md5 keys), in-bucket pairs
+    * only: never an all-pairs join. */
   private[graft] def lshCandidates(s: SparkSession, d: String): DataFrame =
-    lshCandidatesFrom(shingled(s, d))
+    lshCandidatesFrom(shingledPersisted(s, d))
 
   private def lshCandidatesFrom(sets: DataFrame): DataFrame =
     bucketPairs(bandKeys(signature(sets), lshB, lshR))
 
-  /** MinHash signature of each doc's shingle set (doc_id, shs): per
-    * shingle `lshB` seeded md5s (seed j), each cut into `lshR` 8-hex
-    * chunks; per doc the min of every chunk, as columns k0..k31
-    * (k = j·lshR + c). The explode is map-side and the groupBy combines
-    * partially, so the shuffle carries 32 mins per doc, not the shingles.
-    * The signature of the batch LSH keys; oracle twin [[oMinhashSig]]. */
-  private[operators] def signature(sets: DataFrame): DataFrame = {
-    val ex = sets.select(col("doc_id"), explode(col("shs")).as("sh"))
-      .select(col("doc_id") +: (0 until lshB).map { j =>
-        md5(concat(lit(s"$j|"), col("sh")).cast(BinaryType)).as(s"h$j")
+  /** MinHash signature of each row's shingle set `shs`: rows (keep...,
+    * k0..k31), k = j·lshR + c the min over shingles of the c-th 8-hex
+    * chunk of md5("j|" + shingle). One per-row projection through the
+    * [[MinHashSig]] kernel (rows without shingles drop out): no explode
+    * and no shuffle, so the batch keys and the streaming admission key
+    * share it. Oracle twin [[oMinhashSig]]. */
+  private[graft] def signature(sets: DataFrame,
+      keep: Seq[String] = Seq("doc_id")): DataFrame =
+    sets.filter(size(col("shs")) > 0)
+      .select(keep.map(col) :+ MinHashSig.of(col("shs"), lshB, lshR).as("sig"): _*)
+      .select(keep.map(col) ++ (0 until lshB * lshR).map { k =>
+        col("sig").getItem(k).as(s"k$k")
       }: _*)
-    val mins = for (j <- 0 until lshB; c <- 0 until lshR) yield
-      min(substring(col(s"h$j"), c * 8 + 1, 8)).as(s"k${j * lshR + c}")
-    ex.groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
 
   /** `b` band keys per signature row: band i's key is the md5 of
     * k(i·r) .. k(i·r + r − 1) joined by ",". Rows (keep..., band, bkey);
@@ -284,8 +283,8 @@ object QText extends QueryPack {
 
   /** Banded-LSH near-duplicate pairs: candidates from band buckets, then
     * exact shingle-Jaccard verification at 0.8. The 100 TB shape end to
-    * end: shingle explode is map-side; the signature groupBy partially
-    * aggregates k mins; bands shuffle b keys per doc; the candidate join
+    * end: the signature is a per-row kernel over each doc's shingles;
+    * bands shuffle b keys per doc; the candidate join
     * is equi on (band, bkey); the verifier only ever sees in-bucket pairs.
     *
     * The shingle table feeds three consumers (the signature pipeline and

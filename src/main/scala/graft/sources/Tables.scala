@@ -113,13 +113,22 @@ object Tables {
     */
   def trunc4(c: Column): Column = floor(c * lit(10000)) / lit(10000.0)
 
+  /** [[trunc4]] of one double on the driver, bit for bit: Spark's floor
+    * to a long (NaN → 0), then /1e4. */
+  def trunc4(x: Double): Double = math.floor(x * 10000).toLong / 10000.0
+
   def trunc6(c: Column): Column = floor(c * lit(1000000)) / lit(1000000.0)
 
+  /** The first `k` hex digits of md5(c) as a decimal string — the
+    * portable, partition-proof hash prefix (unlike hash()) behind hashed
+    * splits, buckets, samples and A/B arms; callers cast it to a number.
+    * `c` goes to md5 as given (a string binds through an implicit cast to
+    * binary). Oracle twin [[oMd5Prefix]]. */
+  def md5Prefix(c: Column, k: Int): Column = conv(substring(md5(c), 1, k), 16, 10)
+
   /** The hashed A/B arm (0 or 1) of a key: the first 16 bits of md5 of its
-    * string form, mod 2 — portable and partition-proof, unlike hash().
-    * Oracle twin [[oAbArm]]. */
-  def abArm(c: Column): Column =
-    conv(substring(md5(c.cast(StringType)), 1, 4), 16, 10).cast(LongType) % 2
+    * string form, mod 2. Oracle twin [[oAbArm]]. */
+  def abArm(c: Column): Column = md5Prefix(c.cast(StringType), 4).cast(LongType) % 2
 
   /** Whitespace tokens of a text column: split on " ", empty tokens
     * dropped (`split` yields no null elements, so removing "" is the whole
@@ -215,8 +224,11 @@ object Tables {
 
   def oTrunc6(x: String): String = s"floor(($x)*1000000)/1000000.0"
 
-  def oAbArm(x: String): String =
-    s"CAST(concat('0x', substr(md5(CAST($x AS VARCHAR)), 1, 4)) AS BIGINT) % 2"
+  /** Oracle twin of [[md5Prefix]], already a BIGINT. */
+  def oMd5Prefix(x: String, k: Int): String =
+    s"CAST(concat('0x', substr(md5($x), 1, $k)) AS BIGINT)"
+
+  def oAbArm(x: String): String = s"${oMd5Prefix(s"CAST($x AS VARCHAR)", 4)} % 2"
 
   /** Exact revenue term: price * (1 - discount), all decimal, scale 4. */
   def revenue: Column =

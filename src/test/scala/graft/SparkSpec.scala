@@ -8,6 +8,15 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session()
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** A fresh copy of an input directory: memo entries are keyed by the
+    * directory, so every memoized build runs again on the copy. */
+  def freshCopy(dir: String): String = {
+    val dst = java.nio.file.Paths.get(Staging.trackedTempDir("graft_copy_"))
+    java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      .forEach(f => java.nio.file.Files.copy(f, dst.resolve(f.getFileName)))
+    dst.toString
+  }
 }
 
 object SparkSpec {
