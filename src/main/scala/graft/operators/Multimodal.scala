@@ -29,61 +29,15 @@ object Multimodal {
 
   // ---- real decoder: PPM (P6) ----
 
-  /** Parse a binary PPM (P6): magic, #-comments, width/height/maxval
-    * tokens, single whitespace, then w·h·3 raw bytes. Returns
-    * (width, height, mean brightness in [0,1]) or None if the payload is
-    * not a well-formed 8-bit P6 — including maxval > 255 (16-bit samples
-    * are 2 bytes each; reading them 1-byte would silently halve the pixel
-    * plane), a truncated pixel plane, or dims whose plane size overflows. */
-  def decodePpm(p: Array[Byte]): Option[(Int, Int, Double)] = {
-    var i = 0
-    def skipWsAndComments(): Unit = {
-      var more = true
-      while (more && i < p.length) {
-        val c = p(i).toChar
-        if (c == '#') { while (i < p.length && p(i) != '\n') i += 1 }
-        else if (c.isWhitespace) i += 1
-        else more = false
-      }
-    }
-    def readInt(): Option[Int] = {
-      skipWsAndComments()
-      val s = i
-      while (i < p.length && p(i) >= '0' && p(i) <= '9') i += 1
-      if (i == s || i - s > 9) None
-      else Some(new String(p, s, i - s, "US-ASCII").toInt)
-    }
-    if (p.length < 2 || p(0) != 'P' || p(1) != '6') return None
-    i = 2
-    val header = for {
-      w <- readInt()
-      h <- readInt()
-      maxval <- readInt()
-      if w > 0 && h > 0 && maxval > 0 && maxval <= 255
-      if i < p.length && p(i).toChar.isWhitespace
-    } yield (w, h, maxval)
-    header.flatMap { case (w, h, maxval) =>
-      i += 1 // the single whitespace after maxval
-      val n = 3L * w * h // Long: 9-digit dims would overflow Int
-      if (n > Int.MaxValue || p.length - i < n) None // truncated → stub path
-      else {
-        var acc = 0L
-        var j = i
-        val end = i + n.toInt
-        while (j < end) { acc += (p(j) & 0xff); j += 1 }
-        Some((w, h, acc.toDouble / n / maxval))
-      }
-    }
-  }
-
-  // ---- multi-frame ("video") payloads: concatenated P6 frames ----
-
-  /** Parse one P6 frame starting at `start`; returns (w, h, pixel-byte sum,
-    * offset past the frame) or None. Shares the grammar with decodePpm but
-    * keeps the EXACT integer pixel sum so downstream statistics can defer
-    * the single lossy division to the very end (cross-engine hash safety).
-    */
-  private def decodeP6At(p: Array[Byte], start: Int): Option[(Int, Int, Long, Int)] = {
+  /** The one P6 header parser: magic at `start`, #-comments, width /
+    * height / maxval tokens (at most 9 digits each, so no token overflows
+    * an Int), one whitespace byte, then the w·h·3-byte pixel plane.
+    * Returns (width, height, maxval, offset of the plane) when the payload
+    * is a well-formed 8-bit P6 whose plane fits; None otherwise —
+    * including maxval > 255 (16-bit samples are 2 bytes each; reading
+    * them 1-byte would silently halve the pixel plane), a truncated pixel
+    * plane, or dims whose plane size overflows. */
+  private def p6Header(p: Array[Byte], start: Int): Option[(Int, Int, Int, Int)] = {
     var i = start
     def skipWsAndComments(): Unit = {
       var more = true
@@ -103,26 +57,44 @@ object Multimodal {
     }
     if (p.length - start < 2 || p(start) != 'P' || p(start + 1) != '6') return None
     i = start + 2
-    val header = for {
+    for {
       w <- readInt()
       h <- readInt()
       maxval <- readInt()
       if w > 0 && h > 0 && maxval > 0 && maxval <= 255
       if i < p.length && p(i).toChar.isWhitespace
-    } yield (w, h)
-    header.flatMap { case (w, h) =>
-      i += 1
-      val n = 3L * w * h
-      if (n > Int.MaxValue || p.length - i < n) None
-      else {
-        var acc = 0L
-        var j = i
-        val end = i + n.toInt
-        while (j < end) { acc += (p(j) & 0xff); j += 1 }
-        Some((w, h, acc, end))
-      }
-    }
+      if 3L * w * h <= p.length - i - 1 // Long: 9-digit dims overflow Int
+    } yield (w, h, maxval, i + 1)
   }
+
+  /** Sum of the unsigned bytes in [from, until). */
+  private def byteSum(p: Array[Byte], from: Int, until: Int): Long = {
+    var acc = 0L
+    var j = from
+    while (j < until) { acc += (p(j) & 0xff); j += 1 }
+    acc
+  }
+
+  /** Parse a binary PPM (P6) ([[p6Header]]) and return (width, height,
+    * mean brightness in [0,1]), or None if the payload is not a
+    * well-formed 8-bit P6. */
+  def decodePpm(p: Array[Byte]): Option[(Int, Int, Double)] =
+    p6Header(p, 0).map { case (w, h, maxval, at) =>
+      val n = 3 * w * h // fits an Int: p6Header checked it against p.length
+      (w, h, byteSum(p, at, at + n).toDouble / n / maxval)
+    }
+
+  // ---- multi-frame ("video") payloads: concatenated P6 frames ----
+
+  /** Parse one P6 frame starting at `start`; returns (w, h, pixel-byte sum,
+    * offset past the frame) or None. Keeps the EXACT integer pixel sum so
+    * downstream statistics can defer the single lossy division to the very
+    * end (cross-engine hash safety). */
+  private def decodeP6At(p: Array[Byte], start: Int): Option[(Int, Int, Long, Int)] =
+    p6Header(p, start).map { case (w, h, _, at) =>
+      val end = at + 3 * w * h
+      (w, h, byteSum(p, at, end), end)
+    }
 
   /** Nearest-neighbor 2× downsample statistics: keep pixels at even
     * (row, col), report resized dims + exact sampled-pixel sum. The
@@ -333,36 +305,45 @@ object Multimodal {
   case class AudioFeatures(media_id: Long, sample_rate: Int, n_samples: Int,
       mean_abs: Double)
 
-  /** Parse a minimal RIFF/WAVE mono 16-bit PCM payload: RIFF/WAVE magics,
-    * "fmt " chunk (PCM, channels, rate, bits), "data" chunk, then exact
-    * integer |amplitude| sum over the little-endian samples. Returns None
-    * unless the payload is exactly the canonical 44-byte-header mono
-    * 16-bit layout synthWav emits (real decoders handle more chunk
-    * orders; the parse here is nevertheless a true byte-level parse — any
-    * offset/endianness bug changes mean_abs and breaks the oracle hash). */
-  def decodeWav(p: Array[Byte]): Option[AudioFeatures] = {
+  private def le16(p: Array[Byte], off: Int): Int =
+    (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
+  private def le32(p: Array[Byte], off: Int): Int =
+    le16(p, off) | (le16(p, off + 2) << 16)
+
+  /** The one WAV header check: RIFF/WAVE magics, a 16-byte "fmt " chunk
+    * of mono 16-bit PCM, then a "data" chunk whose little-endian samples
+    * start at byte 44 and fit in the payload — exactly the canonical
+    * 44-byte-header layout synthWav emits (real decoders handle more
+    * chunk orders). Returns (sample rate, sample count) or None. */
+  private def wavHeader(p: Array[Byte]): Option[(Int, Int)] = {
     def ascii(off: Int, s: String): Boolean =
       p.length >= off + s.length && s.indices.forall(i => p(off + i) == s(i).toByte)
-    def le16(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
-    def le32(off: Int): Int = le16(off) | (le16(off + 2) << 16)
     if (p.length < 44 || !ascii(0, "RIFF") || !ascii(8, "WAVE") ||
-      !ascii(12, "fmt ") || le32(16) != 16 || le16(20) != 1 /* PCM */ ||
-      le16(22) != 1 /* mono */ || le16(34) != 16 /* bits */ ||
-      !ascii(36, "data")) return None
-    val rate = le32(24)
-    val dataLen = le32(40)
-    if (dataLen < 0 || dataLen % 2 != 0 || p.length - 44 < dataLen) return None
-    val n = dataLen / 2
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val v = le16(44 + 2 * i).toShort.toInt // sign-extend
-      acc += math.abs(v)
-      i += 1
+      !ascii(12, "fmt ") || le32(p, 16) != 16 || le16(p, 20) != 1 /* PCM */ ||
+      le16(p, 22) != 1 /* mono */ || le16(p, 34) != 16 /* bits */ ||
+      !ascii(36, "data")) None
+    else {
+      val dataLen = le32(p, 40)
+      if (dataLen < 0 || dataLen % 2 != 0 || p.length - 44 < dataLen) None
+      else Some((le32(p, 24), dataLen / 2))
     }
-    Some(AudioFeatures(-1L, rate, n,
-      if (n == 0) 0.0 else acc.toDouble / (n.toLong * 1024L)))
   }
+
+  /** Decode a canonical WAV payload ([[wavHeader]]): the exact integer
+    * |amplitude| sum over its samples, as mean_abs. The parse is a true
+    * byte-level parse — any offset/endianness bug changes mean_abs and
+    * breaks the oracle hash. */
+  def decodeWav(p: Array[Byte]): Option[AudioFeatures] =
+    wavHeader(p).map { case (rate, n) =>
+      var acc = 0L
+      var i = 0
+      while (i < n) {
+        acc += math.abs(le16(p, 44 + 2 * i).toShort.toInt) // sign-extend
+        i += 1
+      }
+      AudioFeatures(-1L, rate, n,
+        if (n == 0) 0.0 else acc.toDouble / (n.toLong * 1024L))
+    }
 
   /** Deterministic synthetic WAV: mono 16-bit PCM, 8 kHz, 64 + id%64
     * samples, sample[i] = (id·37 + i·11) mod 2048 − 1024. */
@@ -429,18 +410,10 @@ object Multimodal {
   }
 
   /** Raw sample view of the canonical WAV layout `decodeWav` accepts. */
-  def decodeWavSamples(p: Array[Byte]): Option[Array[Short]] = {
-    def ascii(off: Int, s: String): Boolean =
-      p.length >= off + s.length && s.indices.forall(i => p(off + i) == s(i).toByte)
-    def le16(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
-    def le32(off: Int): Int = le16(off) | (le16(off + 2) << 16)
-    if (p.length < 44 || !ascii(0, "RIFF") || !ascii(8, "WAVE") ||
-      !ascii(12, "fmt ") || le32(16) != 16 || le16(20) != 1 ||
-      le16(22) != 1 || le16(34) != 16 || !ascii(36, "data")) return None
-    val dataLen = le32(40)
-    if (dataLen < 0 || dataLen % 2 != 0 || p.length - 44 < dataLen) return None
-    Some(Array.tabulate(dataLen / 2)(i => le16(44 + 2 * i).toShort))
-  }
+  def decodeWavSamples(p: Array[Byte]): Option[Array[Short]] =
+    wavHeader(p).map { case (_, n) =>
+      Array.tabulate(n)(i => le16(p, 44 + 2 * i).toShort)
+    }
 
   /** Audio lake of synthesized WAV payloads keyed by doc_id. */
   def audioFromDocuments(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
@@ -503,35 +476,13 @@ object Multimodal {
       .as[MediaRow]
   }
 
-  /** Parse a P6 payload down to its raw pixel plane: (width, height,
-    * plane bytes). Same header discipline as `decodePpm` (comments,
-    * maxval ≤ 255, exact plane length) but exposes the bytes for
-    * kernel-based features (Laplacian sharpness, channel stats). */
-  def pixelPlane(p: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    var i = 0
-    def skipWsAndComments(): Unit = {
-      var more = true
-      while (more && i < p.length) {
-        val c = p(i).toChar
-        if (c == '#') { while (i < p.length && p(i) != '\n') i += 1 }
-        else if (c.isWhitespace) i += 1
-        else more = false
-      }
+  /** Parse a P6 payload ([[p6Header]]) down to its raw pixel plane:
+    * (width, height, plane bytes), for kernel-based features (Laplacian
+    * sharpness, channel stats). */
+  def pixelPlane(p: Array[Byte]): Option[(Int, Int, Array[Byte])] =
+    p6Header(p, 0).map { case (w, h, _, at) =>
+      (w, h, java.util.Arrays.copyOfRange(p, at, at + 3 * w * h))
     }
-    def readInt(): Option[Int] = {
-      skipWsAndComments()
-      val s = i
-      while (i < p.length && p(i).toChar.isDigit) i += 1
-      if (i == s) None else Some(new String(p, s, i - s, "US-ASCII").toInt)
-    }
-    if (p.length < 2 || p(0) != 'P' || p(1) != '6') return None
-    i = 2
-    for {
-      w <- readInt(); h <- readInt(); maxv <- readInt()
-      if maxv > 0 && maxv <= 255 && w > 0 && h > 0
-      if i + 1 + 3L * w * h <= p.length
-    } yield (w, h, java.util.Arrays.copyOfRange(p, i + 1, i + 1 + 3 * w * h))
-  }
 
   /** A media lake of synthesized PPM images keyed by doc_id — payloads are
     * generated executor-side inside the scan's mapPartitions, so nothing is

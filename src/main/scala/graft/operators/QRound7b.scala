@@ -128,7 +128,7 @@ object QRound7b extends QueryPack {
   }
 
   /** [[verdictDistributed]]'s rows (vec_id, cell, csim, keep) computed on
-    * the driver, or None when the same-cell pairs Σ n_cell² exceed `gate`.
+    * the driver in vec_id order, or None when the same-cell pairs Σ n_cell² exceed `gate`.
     * The centroids are a local relation, so reading them runs no job. */
   private def verdictLocal(c: AnnKMeans.Corpus, cent: DataFrame,
       gate: Long): Option[Array[Row]] = {
@@ -146,14 +146,20 @@ object QRound7b extends QueryPack {
             trunc4(CosineSim.compute(c.vs(a), c.vs(b), false, false)) >= 0.4)
           removed(b) = true
       }
-      Some(c.vs.indices.map { i =>
+      Some(c.vs.indices.sortBy(c.id).map { i =>
         Row(c.ids(i), cells(asg(i)._1)._1, asg(i)._2, if (removed(i)) 0 else 1)
       }.toArray)
     }
   }
 
-  private def dedupSemdedup(s: SparkSession, d: String): DataFrame =
-    semdedupVerdict(s, d).orderBy("vec_id")
+  /** The verdict in vec_id order. The driver-built verdict already is:
+    * sorting its local relation would cost a sample, a shuffle and a
+    * result job. */
+  private def dedupSemdedup(s: SparkSession, d: String): DataFrame = {
+    val v = semdedupVerdict(s, d)
+    if (v.queryExecution.analyzed.isInstanceOf[LocalRelation]) v
+    else v.orderBy("vec_id")
+  }
 
   private val oDedupSemdedup =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

@@ -61,10 +61,13 @@ class DedupJobsSpec extends SparkSpec {
     val measured = run(freshCopy(sf01))
     info(s"(jobs, compiles) per key, first run: $first; on a second fresh copy: $measured")
     val jobs = measured.map { case (k, (j, _)) => k -> j }
-    // measured 8 and 6 (27 and 28 with jobs per propagation round and per
-    // Lloyd iteration); the bounds leave 2 jobs of slack
+    // measured 8 and 4 (27 and 28 with jobs per propagation round and per
+    // Lloyd iteration); cc's bound leaves 2 jobs of slack. semdedup's 4
+    // are the parquet schema, the corpus collect, its one-row dimension
+    // probe and the write: the driver-built verdict is emitted in vec_id
+    // order, so no sort job may come back
     assert(jobs("dedup_cc_cluster") <= 10, jobs)
-    assert(jobs("dedup_semdedup") <= 8, jobs)
+    assert(jobs("dedup_semdedup") <= 4, jobs)
   }
 
   test("the MinHash signature is per row: no shuffle or aggregate between " +

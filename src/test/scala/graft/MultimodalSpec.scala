@@ -52,6 +52,20 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.decodePpm(huge) === None)
   }
 
+  test("P6 parsers: a dimension of 10 or more digits is malformed, not an " +
+    "exception") {
+    for (dim <- Seq("2147483648", "99999999999", "0000000002")) {
+      val p = s"P6\n$dim 1\n255\n".getBytes("US-ASCII") ++ Array.fill[Byte](6)(0)
+      assert(Multimodal.pixelPlane(p).isEmpty, dim)
+      assert(Multimodal.decodePpm(p).isEmpty, dim)
+      assert(Multimodal.histBins16(p).isEmpty, dim)
+    }
+    // the 9-digit cap leaves ordinary dims alone
+    val ok = "P6\n2 1\n255\n".getBytes("US-ASCII") ++ Array[Byte](1, 2, 3, 4, 5, 6)
+    assert(Multimodal.pixelPlane(ok).map(t => (t._1, t._2, t._3.toSeq)) ===
+      Some((2, 1, Seq[Byte](1, 2, 3, 4, 5, 6))))
+  }
+
   test("frame decoder: counts, truncation stops cleanly, brightness exact") {
     import graft.operators.Multimodal
     val id = 7L

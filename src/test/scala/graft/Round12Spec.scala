@@ -206,6 +206,34 @@ class Round12Spec extends SparkSpec {
     }
   }
 
+  test("readIncremental reads the added files as toV sees them: the " +
+    "partition column is restored and merge-on-read deletes are applied") {
+    def vals(d: org.apache.spark.sql.DataFrame) =
+      d.select("value").collect().map(_.getLong(0)).sorted.toSeq
+    val expected = (10L to 11L) ++ (15L to 29L)
+    // a merge-on-read delete inside the range hides its rows...
+    val mor = freshTable()
+    TxnLog.appendWithStats(spark, mor, df(0, 10), "value")  // v1
+    TxnLog.appendWithStats(spark, mor, df(10, 30), "value") // v2
+    TxnLog.deleteWhereMoR(spark, mor, "value", 12, 14)      // v3
+    assert(vals(TxnLog.readIncremental(spark, mor, 1, 3)) === expected)
+    // ...exactly as a copy-on-write delete over the same range does
+    val cow = freshTable()
+    TxnLog.appendWithStats(spark, cow, df(0, 10), "value")
+    TxnLog.appendWithStats(spark, cow, df(10, 30), "value")
+    TxnLog.deleteWhere(spark, cow, "value", 12, 14)
+    assert(vals(TxnLog.readIncremental(spark, cow, 1, 3)) === expected)
+    // a partitioned table's delta keeps its partition column
+    val part = freshTable()
+    def pdf(lo: Long, hi: Long) = df(lo, hi).withColumn("p", col("value") % 2)
+    TxnLog.appendPartitioned(spark, part, pdf(0, 10), "p")
+    TxnLog.appendPartitioned(spark, part, pdf(10, 20), "p")
+    val inc = TxnLog.readIncremental(spark, part, 1, 2)
+    assert(inc.columns.toSeq === TxnLog.read(spark, part).columns.toSeq)
+    assert(inc.filter(col("p") === 1).count() === 5L)
+    assert(vals(inc) === (10L until 20L))
+  }
+
   test("replay skips BEFORE writing data; vacuum reclaims a dead " +
     "attempt's orphan directory") {
     val dir = freshTable()

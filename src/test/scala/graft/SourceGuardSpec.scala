@@ -42,4 +42,21 @@ class SourceGuardSpec extends AnyFunSuite {
     } yield s"${root.relativize(p)}:${i + 1}: ${line.trim}"
     assert(writes.isEmpty, writes.mkString("\n"))
   }
+
+  test("TxnLog publishes from one call site and reads row positions in one scan") {
+    val txnLog = root.resolve("graft/sources/TxnLog.scala")
+    val code = Files.readAllLines(txnLog).asScala.toSeq.zipWithIndex
+      .filterNot { case (l, _) =>
+        val t = l.trim; t.startsWith("*") || t.startsWith("/*") || t.startsWith("//") }
+    def sites(spelling: scala.util.matching.Regex): Seq[String] =
+      code.collect { case (l, i) if spelling.findFirstIn(l).isDefined =>
+        s"TxnLog.scala:${i + 1}: ${l.trim}" }
+    // a second publish site is a second commit protocol: its retry, ts
+    // clamp and high-water carry can drift from the commit loop's
+    val publish = sites("""(?<!def )\btryPublish\(""".r)
+    assert(publish.size === 1, publish.mkString("\n"))
+    // a second positional scan is a second deletion-vector reader
+    val positions = sites("""_metadata\.row_index""".r)
+    assert(positions.size === 1, positions.mkString("\n"))
+  }
 }
