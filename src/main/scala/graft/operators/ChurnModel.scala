@@ -5,12 +5,13 @@ import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
 /** The reference's headline capability: a TRAINED churn classifier over the
   * behavioral feature set (MorphL trains churn models with Spark MLlib on
@@ -37,11 +38,22 @@ import org.apache.spark.storage.StorageLevel
   * partitions, Round5Spec gates the fit against MLlib as the reference.
   * The AUC and weights are still truncated (t4/t6) for the output schema.
   *
-  * Job shape: one pass builds and persists the fold table and sums the
-  * train moments; each Newton iteration is ONE pass over that table
-  * (loss, gradient and Hessian together, for every candidate model at
-  * once); the evaluation is one more pass. Driver state is model-sized
-  * (21 sums per candidate) plus the distinct test scores.
+  * Job shape: one pass builds the fold table and sums the train moments;
+  * each Newton iteration is ONE pass over that table (loss, gradient and
+  * Hessian together, for every candidate model at once); the evaluation
+  * is one more pass. Each pass is one function over a partition's rows
+  * ([[foldMoments]], [[newtonPass]]'s and [[evaluate]]'s bodies), and the
+  * fold table decides where it runs ([[perPartition]]):
+  *  - under the state gate (`StateGate`) the table is a driver-built
+  *    local relation — a projection of the driver-built feature memo, or
+  *    one collected copy — and every pass is one call on the driver over
+  *    its rows: no Spark job from the fold build to the evaluation;
+  *  - over the gate the table is persisted and every pass is one Spark
+  *    job, a call per partition.
+  * The fixed-point totals do not depend on how rows are split, so both
+  * give the same bits. Driver state is model-sized (21 sums per
+  * candidate) plus the distinct test scores, and under the gate the fold
+  * table (one row per user).
   */
 object ChurnModel {
 
@@ -106,10 +118,11 @@ object ChurnModel {
     * floor (~1e-20 at λ = 1e-3), far below anything the t6 output shows. */
   private val tol = 1e-16
 
-  /** The fold table and its train-fold summary. `table` is persisted, one
-    * row per user: (user_id, n_events, n_clicks, n_purchases, total_value,
-    * label, is_test), features as DOUBLE. `sigma` is the train fold's
-    * sample std per feature (0 for a constant one). */
+  /** The fold table and its train-fold summary. `table` has one row per
+    * user: (user_id, n_events, n_clicks, n_purchases, total_value, label,
+    * is_test), features as DOUBLE; it is a driver-built local relation
+    * under the state gate and persisted over it. `sigma` is the train
+    * fold's sample std per feature (0 for a constant one). */
   final case class Folds(table: DataFrame, nTrain: Long, nPos: Long, nTest: Long,
       sigma: Array[Double])
 
@@ -117,7 +130,16 @@ object ChurnModel {
   private val labelIdx = nFeat + 1
   private val testIdx = nFeat + 2
 
-  private def rows(table: DataFrame): RDD[InternalRow] = table.queryExecution.toRdd
+  /** `body` over the fold table's rows, one result per partition: on the
+    * driver in one call when the table is a driver-built local relation
+    * (no job), else one Spark job with a call per partition. */
+  private def perPartition[T: ClassTag](table: DataFrame)(
+      body: Iterator[InternalRow] => T): Seq[T] =
+    LocalRows.of(table) match {
+      case Some(rows) => Seq(body(rows.iterator))
+      case None => table.queryExecution.toRdd.mapPartitions(it => Iterator(body(it)))
+        .collect().toSeq
+    }
 
   /** The fold table, memoized per (session, shuffle-partitions, sfDir) and
     * built from the session's `chpfeat` feature memo — the same table the
@@ -127,36 +149,46 @@ object ChurnModel {
     graft.Memo.memo(s, "chpfolds", d)(
       buildFolds(QPipeline.chpFeaturesPersisted(s, d)))
 
-  /** Persists the fold table and sums the train fold's moments in the one
-    * job that materializes it. σ_j² = (n·Σq² − (Σq)²) / (n(n−1)) over the
-    * features quantized at 2^-16, exact until the final division. */
-  private[graft] def buildFolds(features: DataFrame): Folds = {
-    val table = withSplit(label1d(features))
-      .select(col("user_id") +: featureCols.map(c => col(c).cast(DoubleType).as(c)) :+
-        col("label") :+ col("is_test"): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val slots = 3 + 2 * nFeat // n_train, n_pos, n_test, then Σq, Σq² per feature
+  private val momentSlots = 3 + 2 * nFeat // n_train, n_pos, n_test, then Σq, Σq² per feature
+
+  /** One partition's fold counts and train moments: the test and train
+    * row counts, the train positives, and Σq, Σq² per feature quantized at
+    * 2^-16. */
+  private def foldMoments(it: Iterator[InternalRow]): Sum128 = {
+    val acc = new Sum128(momentSlots)
     val qMax = 1L << (31 + xBits)
-    val m = rows(table).mapPartitions { it =>
-      val acc = new Sum128(slots)
-      it.foreach { r =>
-        if (r.getBoolean(testIdx)) acc.add(2, 1L)
-        else {
-          acc.add(0, 1L)
-          if (r.getDouble(labelIdx) == 1.0) acc.add(1, 1L)
-          var j = 0
-          while (j < nFeat) {
-            val q = Sum128.fixed(r.getDouble(j + 1), xBits)
-            if (math.abs(q) >= qMax) throw new ArithmeticException(
-              s"feature ${featureCols(j)} = ${r.getDouble(j + 1)} exceeds 2^31")
-            acc.add(3 + 2 * j, q)
-            acc.addProd(4 + 2 * j, q, q)
-            j += 1
-          }
+    it.foreach { r =>
+      if (r.getBoolean(testIdx)) acc.add(2, 1L)
+      else {
+        acc.add(0, 1L)
+        if (r.getDouble(labelIdx) == 1.0) acc.add(1, 1L)
+        var j = 0
+        while (j < nFeat) {
+          val q = Sum128.fixed(r.getDouble(j + 1), xBits)
+          if (math.abs(q) >= qMax) throw new ArithmeticException(
+            s"feature ${featureCols(j)} = ${r.getDouble(j + 1)} exceeds 2^31")
+          acc.add(3 + 2 * j, q)
+          acc.addProd(4 + 2 * j, q, q)
+          j += 1
         }
       }
-      Iterator(acc)
-    }.collect().foldLeft(new Sum128(slots))(_ merge _)
+    }
+    acc
+  }
+
+  /** Builds the fold table and sums the train fold's moments in one pass.
+    * Under the state gate the table stays on the driver (a local relation:
+    * the features' own when they are one, else one collected copy); over
+    * it, the table is persisted by the pass that sums it. σ_j² =
+    * (n·Σq² − (Σq)²) / (n(n−1)) over the features quantized at 2^-16,
+    * exact until the final division. */
+  private[graft] def buildFolds(features: DataFrame): Folds = {
+    val built = withSplit(label1d(features))
+      .select(col("user_id") +: featureCols.map(c => col(c).cast(DoubleType).as(c)) :+
+        col("label") :+ col("is_test"): _*)
+    val table = StateGate.onDriver(built, StateGate.maxRows(features.sparkSession))
+      .getOrElse(built.persist(StorageLevel.MEMORY_AND_DISK))
+    val m = perPartition(table)(foldMoments).foldLeft(new Sum128(momentSlots))(_ merge _)
     val n = m.big(0)
     val sigma = Array.tabulate(nFeat) { j =>
       val num = n * m.big(4 + 2 * j) - m.big(3 + 2 * j).pow(2)
@@ -197,7 +229,7 @@ object ChurnModel {
     val per = 1 + dim + dim * (dim + 1) / 2
     val ts = thetas.toArray
     val inv = active.map(j => 1.0 / f.sigma(j))
-    val sums = rows(f.table).mapPartitions { it =>
+    val sums = perPartition(f.table) { it =>
       val acc = new Sum128(per * ts.length)
       val z = new Array[Double](dim)
       z(dim - 1) = 1.0
@@ -231,8 +263,8 @@ object ChurnModel {
           }
         }
       }
-      Iterator(acc)
-    }.collect().foldLeft(new Sum128(per * ts.length))(_ merge _)
+      acc
+    }.foldLeft(new Sum128(per * ts.length))(_ merge _)
     val n = f.nTrain.toDouble
     ts.indices.map { t =>
       val th = ts(t)
@@ -356,7 +388,7 @@ object ChurnModel {
     * that evaluator does. */
   private[graft] def evaluate(f: Folds, models: Seq[Model]): Seq[Eval] = {
     val ms = models.toArray
-    val counts = rows(f.table).mapPartitions { it =>
+    val counts = perPartition(f.table) { it =>
       val c = new java.util.HashMap[(Int, Double), Array[Long]]()
       val x = new Array[Double](nFeat)
       it.foreach { r =>
@@ -373,8 +405,8 @@ object ChurnModel {
         }
       }
       import scala.jdk.CollectionConverters._
-      c.asScala.iterator.map { case ((i, s), pn) => (i, s, pn(0), pn(1)) }
-    }.collect()
+      c.asScala.toArray.map { case ((i, s), pn) => (i, s, pn(0), pn(1)) }
+    }.flatten
     ms.indices.map { i =>
       var negBelow, pos, tp, fp = 0L
       var u2 = BigInt(0)
@@ -468,7 +500,12 @@ object ChurnModel {
     // with Round8Spec's determinism + AUC gates unchanged. On a real
     // cluster this is the same right-sizing: partitions proportional to
     // data, iteration cap at observed convergence.
-    val fl = withSplit(label1d(features)).coalesce(4)
+    // A driver-built feature table (under the state gate) scans in
+    // defaultParallelism slices; it is small, so train it on one partition
+    // in user_id order: the layout the distributed memo has once AQE
+    // coalesces its sort, and L-BFGS's partial sums follow the layout.
+    val fl = withSplit(label1d(features))
+      .coalesce(if (LocalRows.of(features).isDefined) 1 else 4)
     val rawTrain = fl.filter(!col("is_test"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // z-score scaler fitted on the TRAIN fold only (no test leakage);

@@ -3,6 +3,8 @@ package graft.operators
 import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,30 +17,59 @@ import org.apache.spark.sql.types._
   */
 object QPipeline extends QueryPack {
 
+  /** The per-user activity table of one input, memoized: user_id,
+    * n_events, n_clicks, n_purchases, total_value (exact `sum4`) and
+    * last_us, the micros of the user's last event, from ONE read of
+    * events. The corpus clock every churn label is relative to is the max
+    * of last_us: exact, since the max over all events is the max of the
+    * per-user maxima, so no key reads events a second time for it. Under
+    * the state gate the table is collected once and kept as a driver-built
+    * local relation (no blocks to lose); over it, it is localCheckpointed.
+    * `chp_features_label`, `chp_churn_windows` and everything that reads
+    * the feature memo start here. */
+  private[graft] def activity(s: SparkSession, d: String): DataFrame =
+    graft.Memo.memo(s, "chpactivity", d) {
+      val agg = t(s, d, "events").groupBy("user_id")
+        .agg(
+          count(lit(1)).as("n_events"),
+          count(when(col("event_type") === "click", 1)).as("n_clicks"),
+          count(when(col("event_type") === "purchase", 1)).as("n_purchases"),
+          sum4(col("value")).as("total_value"),
+          max(expr("unix_micros(cast(ts as timestamp))")).as("last_us"))
+      StateGate.onDriver(agg, StateGate.maxRows(s)).getOrElse(agg.localCheckpoint(true))
+    }
+
+  /** The non-null last_us values of the activity table's driver-side
+    * rows (last_us is its sixth column); their max is the corpus clock. */
+  private[operators] def lastUs(rows: Seq[InternalRow]): Seq[Long] =
+    rows.filterNot(_.isNullAt(5)).map(_.getLong(5))
+
   /** MorphL-style churn features + label per user: activity counts, spend,
     * recency, and `churned = inactive > 7 days` relative to the corpus
-    * clock (max event ts — joined as one broadcast row, never collected).
-    * One shuffle on user_id; the label threshold mirrors MorphL's
-    * days-since-last-session rule. Day arithmetic is integer micros
-    * division, so both engines agree exactly. */
+    * clock, all a projection of the [[activity]] table. Distributed, the
+    * clock is its one-row max joined by broadcast, and the result is
+    * range-sorted. Under the state gate the activity table is on the
+    * driver: the clock is read from it, the projection folds into a local
+    * relation and the rows are sorted there ([[LocalRows.sortedAs]]), with
+    * the distributed plan's schema; no Spark job runs. The label threshold
+    * mirrors MorphL's days-since-last-session rule. Day arithmetic is
+    * integer micros division, so both engines agree exactly. */
   private[graft] def chpFeaturesLabel(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events")
-    val now = e.agg(max(expr("unix_micros(cast(ts as timestamp))")).as("now_us"))
-    e.groupBy("user_id")
-      .agg(
-        count(lit(1)).as("n_events"),
-        count(when(col("event_type") === "click", 1)).as("n_clicks"),
-        count(when(col("event_type") === "purchase", 1)).as("n_purchases"),
-        sum4(col("value")).as("total_value"),
-        max(expr("unix_micros(cast(ts as timestamp))")).as("last_us"))
-      .crossJoin(broadcast(now))
-      // integer micros division (`div`, not `/` — Column `/` is double)
-      .select(col("user_id"), col("n_events"), col("n_clicks"),
+    val act = activity(s, d)
+    // integer micros division (`div`, not `/` — Column `/` is double)
+    def features(withNow: DataFrame) =
+      withNow.select(col("user_id"), col("n_events"), col("n_clicks"),
         col("n_purchases"), col("total_value"),
         expr("(now_us - last_us) div 86400000000").as("days_inactive"),
         expr("cast((now_us - last_us) div 86400000000 > 7 as int)")
           .as("churn_label"))
+    val dist = features(act.crossJoin(broadcast(act.agg(max("last_us").as("now_us")))))
       .orderBy("user_id")
+    LocalRows.of(act).flatMap { rows =>
+      val last = lastUs(rows)
+      val now = lit(if (last.isEmpty) null else last.max).cast(LongType)
+      LocalRows.of(features(act.withColumn("now_us", now))).map(LocalRows.sortedAs(dist, _))
+    }.getOrElse(dist)
   }
 
   private[operators] val oChpFeaturesLabel =
@@ -148,16 +179,19 @@ object QPipeline extends QueryPack {
        |  CAST(list_aggregate(list_transform(v, x -> CAST(floor(x / scale * 127 + 0.5) AS BIGINT)), 'max') AS BIGINT) AS q_max
        |FROM s ORDER BY vec_id""".stripMargin
 
-  /** The churn feature table, memoized + lineage-truncated per corpus:
-    * user-bounded model state. It is what the `chp_features_label` key
-    * emits, and every other feature consumer reads it too (the scored
-    * table, segments, frozen-model confusion, calibration, the RFM and
-    * reason-code keys, and the churn model's fold table), so the events
-    * aggregation runs once per input. */
+  /** The churn feature table, memoized per corpus: user-bounded model
+    * state. It is what the `chp_features_label` key emits, and every other
+    * feature consumer reads it too (the scored table, segments,
+    * frozen-model confusion, calibration, the RFM and reason-code keys,
+    * and the churn model's fold table). Under the state gate it is the
+    * driver-built local relation of [[chpFeaturesLabel]]; over it, the
+    * distributed table, localCheckpointed. */
   private[operators] def chpFeaturesPersisted(s: SparkSession, d: String)
       : DataFrame =
-    graft.Memo.memo(s, "chpfeat", d)(
-      chpFeaturesLabel(s, d).localCheckpoint(true))
+    graft.Memo.memo(s, "chpfeat", d) {
+      val f = chpFeaturesLabel(s, d)
+      if (LocalRows.of(f).isDefined) f else f.localCheckpoint(true)
+    }
 
   /** Scored feature rows (user_id, n_purchases, total_value, score):
     * a fixed linear engagement model over the declared feature set,

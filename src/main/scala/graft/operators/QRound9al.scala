@@ -124,7 +124,9 @@ object QRound9al extends QueryPack {
     * without a window.
     *
     * Scale shape: probe filter pushes to the scan; ONE partial-aggregable
-    * groupBy per user; no window, no self-join. */
+    * groupBy per user; no window, no self-join. The 3-row result is
+    * sorted on the driver under the state gate
+    * ([[StateGate.sortedOnDriver]]). */
   private[graft] def featureSnapshot(events: DataFrame): DataFrame =
     events
       .filter(col("user_id").isin(snapUsers: _*))
@@ -150,7 +152,7 @@ object QRound9al extends QueryPack {
       .orderBy("user_id")
 
   private def serveFeatureSnapshot(s: SparkSession, d: String): DataFrame =
-    featureSnapshot(t(s, d, "events"))
+    StateGate.sortedOnDriver(featureSnapshot(t(s, d, "events")), StateGate.maxRows(s))
 
   private val oServeFeatureSnapshot =
     s"""WITH e AS (SELECT user_id, event_type, value, ts, event_id,

@@ -3,6 +3,8 @@ package graft.operators
 import graft.QueryPack
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -112,16 +114,20 @@ object QRound9az extends QueryPack {
     * wildly, the "churn" KPI is a cutoff artifact, not a behavior. All
     * comparisons are exact integer micros.
     *
-    * Scale shape: one per-user last-activity aggregate; the horizon
-    * grid is a 3-row broadcast; corpus end is a broadcast scalar. */
-  private[graft] def churnWindows(events: DataFrame): DataFrame = {
+    * Scale shape: it reads the per-user activity table
+    * ([[QPipeline.activity]]), whose max last_us is the corpus end.
+    * Distributed, the horizon grid and the end are broadcast and the
+    * 3-row report is range-sorted. Under the state gate the activity table
+    * is on the driver, and so is the report: the same counts and the same
+    * `trunc4` (its driver twin), sorted by [[LocalRows.sortedAs]] with the
+    * distributed plan's schema; no Spark job runs. */
+  private[graft] def churnWindows(s: SparkSession, d: String): DataFrame = {
     val dd = DoubleType
-    val us = expr("unix_micros(cast(ts as timestamp))")
-    val lastAct = events.groupBy("user_id").agg(max(us).as("last_us"))
-    val end = events.agg(max(us).as("end_us"))
-    val hs = events.sparkSession.createDataFrame(
-      churnHorizons.map(Tuple1(_))).toDF("horizon_days")
-    lastAct.crossJoin(broadcast(end)).crossJoin(broadcast(hs))
+    val act = QPipeline.activity(s, d)
+    val hs = s.createDataFrame(churnHorizons.map(Tuple1(_))).toDF("horizon_days")
+    val dist = act.select("user_id", "last_us")
+      .crossJoin(broadcast(act.agg(max("last_us").as("end_us"))))
+      .crossJoin(broadcast(hs))
       .withColumn("churned",
         (col("last_us") < col("end_us") -
           col("horizon_days") * lit(86400000000L)).cast(LongType))
@@ -131,10 +137,21 @@ object QRound9az extends QueryPack {
         trunc4(col("n_churned").cast(dd) / col("n_users").cast(dd))
           .as("churn_rate"))
       .orderBy("horizon_days")
+    LocalRows.of(act).fold(dist) { rows =>
+      // a null last_us compares to null, which sum skips; with no non-null
+      // one the end is null too, and so is every n_churned and rate
+      val last = QPipeline.lastUs(rows)
+      val n = rows.size.toLong
+      val end = if (last.isEmpty) None else Some(last.max)
+      val report = if (rows.isEmpty) Nil else churnHorizons.map { h =>
+        end.fold(InternalRow(h, n, null, null)) { e =>
+          val churned = last.count(_ < e - h * 86400000000L).toLong
+          InternalRow(h, n, churned, trunc4(churned.toDouble / n.toDouble))
+        }
+      }
+      LocalRows.sortedAs(dist, report)
+    }
   }
-
-  private def chpChurnWindows(s: SparkSession, d: String): DataFrame =
-    churnWindows(t(s, d, "events"))
 
   private val oChpChurnWindows =
     s"""WITH la AS (SELECT user_id, max(epoch_us(ts)) AS last_us
@@ -216,7 +233,7 @@ object QRound9az extends QueryPack {
 
   val queries: Map[String, QFn] = Map(
     "ts_sax_symbolize"       -> tsSaxSymbolize _,
-    "chp_churn_windows"      -> chpChurnWindows _,
+    "chp_churn_windows"      -> churnWindows _,
     "profile_contract_check" -> profileContractCheck _)
 
   val oracles: Map[String, String] = Map(

@@ -39,9 +39,9 @@ object Tables {
     * assuming one encoding. NTZ matches the naive timestamps DuckDB and the
     * other tables use.
     */
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val raw = parquet(spark, s"$sfDir/$name.parquet")
     if (name == "events") {
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
       raw.schema("ts").dataType match {
         case LongType => // legacy TIMESTAMP(NANOS) read as raw nanos
           raw.withColumn("ts",
@@ -53,7 +53,16 @@ object Tables {
           throw new IllegalStateException(
             s"events.ts has unsupported physical type $other")
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else raw
+  }
+
+  /** A parquet read whose schema is bound without a Spark job: for a
+    * single file, the footer's schema as Spark's inference converts it
+    * ([[org.apache.spark.sql.graft.FooterSchema]]), given to the reader;
+    * any other path is read with Spark's own inference. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.graft.FooterSchema.of(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   val D184: DecimalType = DecimalType(18, 4)
   val D122: DecimalType = DecimalType(12, 2)

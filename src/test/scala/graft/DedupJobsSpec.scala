@@ -1,15 +1,12 @@
 package graft
 
 import graft.operators.QText
-import org.apache.spark.graft.ListenerDrain
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The dedup chain's cost shape on a fresh input (every memo entry built
   * anew, as on each day of a nightly batch):
@@ -26,48 +23,26 @@ class DedupJobsSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
-  /** Spark jobs started while `f` runs, counted by job group so no other
-    * thread's jobs leak in. */
-  private def jobsOf(f: => Unit): Int = {
-    val group = s"dedupjobs-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try f
-    finally {
-      sc.clearJobGroup()
-      ListenerDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get()
-  }
-
   test("dedup_cc_cluster and dedup_semdedup run in a bounded number of jobs") {
     val keys = Seq("dedup_lsh_pairs", "dedup_cc_cluster", "dedup_semdedup")
     /** (Spark jobs, codegen compiles) per key, in the nightly order. */
     def run(d: String): Map[String, (Int, Long)] = keys.map { k =>
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val jobs = jobsOf(SparkEntry.queries(k)(spark, d)
-        .write.format("noop").mode("overwrite").save())
+        .write.format("noop").mode("overwrite").save()).size
       k -> (jobs, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
     }.toMap
     val first = run(freshCopy(sf01)) // class loading and first compiles
     val measured = run(freshCopy(sf01))
     info(s"(jobs, compiles) per key, first run: $first; on a second fresh copy: $measured")
     val jobs = measured.map { case (k, (j, _)) => k -> j }
-    // measured 8 and 4 (27 and 28 with jobs per propagation round and per
-    // Lloyd iteration); cc's bound leaves 2 jobs of slack. semdedup's 4
-    // are the parquet schema, the corpus collect, its one-row dimension
-    // probe and the write: the driver-built verdict is emitted in vec_id
-    // order, so no sort job may come back
+    // measured 7 and 3 (27 and 28 with jobs per propagation round and per
+    // Lloyd iteration); cc's bound leaves 3 jobs of slack. semdedup's 3
+    // are the corpus collect, its one-row dimension probe and the write:
+    // the table schema is bound without a job, and the driver-built
+    // verdict is emitted in vec_id order, so no sort job may come back
     assert(jobs("dedup_cc_cluster") <= 10, jobs)
-    assert(jobs("dedup_semdedup") <= 4, jobs)
+    assert(jobs("dedup_semdedup") <= 3, jobs)
   }
 
   test("the MinHash signature is per row: no shuffle or aggregate between " +
